@@ -34,22 +34,22 @@ import org.apache.spark.sql.SparkSession
   * min-of-ITERS). The raw per-pass values land in BENCH_FULL.json
   * (`passes`) for auditability. `SPARK_GRAFT_BENCH_PASSES` overrides
   * (1 = the old single-sweep behavior).
+  *
+  * Usage: `runMain graft.Bench [q1,q2,...]` — the optional filter
+  * times the named queries only. Env: `SPARK_GRAFT_SF_DIR`,
+  * `SPARK_GRAFT_CPUS`, `SPARK_GRAFT_BENCH_ITERS`/`_PASSES` (repeats),
+  * `GRAFT_PLANS_DIR` (dump formatted plans to `plans/<dir>/`).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.envCores
     val isolate = sys.env.get("SPARK_GRAFT_BENCH_ISOLATE").contains("1")
-    val root = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
-    root.sparkContext.setLogLevel("WARN")
+    // optional 1st arg: comma-separated query names, to time a few
+    // queries without the whole suite (repeats: ITERS/PASSES below)
+    val filter = args.headOption
+    val keep = SparkEntry.nameFilter(filter)
+    val root = GraftSession.local(cpus)
     // JVM/codegen warmup outside the timed loop (driver measures
     // steady-state query cost, not classloading)
     try SparkEntry.queries.get("a3_groupby_q1")
@@ -61,36 +61,29 @@ object Bench {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
         .asScala.map(b => math.max(b.getCollectionTime, 0L)).sum
     }
-    /** Host-speed calibration: a fixed integer loop, timed in ms.
-      * Round 10 measured effective per-core speed fluctuating ~2×
-      * under hypervisor steal across same-day runs on identical code;
-      * recording the probe before pass 1 and after the last pass makes
-      * a polluted window VISIBLE in the artifact instead of reading as
-      * a code regression. Compare `calib_ms` across artifacts before
-      * believing any cross-run mover. */
-    def calibLoop(): Long = {
+    /** Host-speed calibration: a fixed integer loop of `iters` steps,
+      * timed in ms. Round 10 measured effective per-core speed
+      * fluctuating ~2× under hypervisor steal across same-day runs on
+      * identical code; recording the probe before pass 1 and after the
+      * last pass (400M steps) makes a polluted window VISIBLE in the
+      * artifact instead of reading as a code regression. Compare
+      * `calib_ms` across artifacts before believing any cross-run
+      * mover. A ~200 ms micro-probe (300M steps) runs INTERLEAVED
+      * between query families (every 25 queries): the bracketing
+      * probes bound a run but cannot attribute a MID-RUN steal window
+      * (round 11's 16:35 anomaly inflated 15 queries the brackets
+      * missed). The series lands in BENCH_FULL.json so a mover is
+      * judged against the probe segment it ran inside. */
+    def spinMs(iters: Long): Long = {
       val t0 = System.nanoTime()
       var s = 0L
       var i = 0L
-      while (i < 400000000L) { s += i * i; i += 1 }
+      while (i < iters) { s += i * i; i += 1 }
       if (s == 42L) println("") // keep the loop un-eliminable
       (System.nanoTime() - t0) / 1000000L
     }
-    def calibMs(): Long = calibLoop()
-    /** ~200 ms micro-probe INTERLEAVED between query families (every
-      * 25 queries): the bracketing before/after probes bound a run but
-      * cannot attribute a MID-RUN steal window (round 11's 16:35
-      * anomaly inflated 15 queries the brackets missed). The series
-      * lands in BENCH_FULL.json so a mover is judged against the
-      * probe segment it ran inside, not inferred from the endpoints. */
-    def microCalibMs(): Long = {
-      val t0 = System.nanoTime()
-      var s = 0L
-      var i = 0L
-      while (i < 300000000L) { s += i * i; i += 1 }
-      if (s == 42L) println("")
-      (System.nanoTime() - t0) / 1000000L
-    }
+    def calibMs(): Long = spinMs(400000000L)
+    def microCalibMs(): Long = spinMs(300000000L)
     microCalibMs() // JIT-compile the probe before the first timed use
     val calibSeries =
       new scala.collection.mutable.ArrayBuffer[(String, Long)]()
@@ -104,10 +97,10 @@ object Bench {
       * actually run `cpus` threads at single-thread speed during this
       * window, and every local[32] query time is inflated with it. */
     def calibParMs(): Long = {
-      val n = math.max(1, cpus.toInt)
+      val n = math.max(1, cpus)
       val t0 = System.nanoTime()
       val ts = (1 to n).map { _ =>
-        val t = new Thread(() => { calibLoop(); () })
+        val t = new Thread(() => { calibMs(); () })
         t.start(); t
       }
       ts.foreach(_.join())
@@ -134,22 +127,13 @@ object Bench {
     // full: the iters default flips back to 3 with it, so passes=1
     // alone reproduces the old min-of-3 sweep (set ITERS explicitly
     // to override either way).
+    val jstr = SparkEntry.jsonString _
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "2").toInt
     val iters = sys.env.get("SPARK_GRAFT_BENCH_ITERS").map(_.toInt)
       .getOrElse(if (passes == 1) 3 else 2)
     // streaming family last — alphabetical within each group
-    val ordered = SparkEntry.queries.toSeq.sortBy { case (name, _) =>
-      (if (name.startsWith("st")) 1 else 0, name)
-    }
-    def jstr(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    val ordered = SparkEntry.queries.filter(q => keep(q._1)).toSeq
+      .sortBy { case (name, _) => (if (name.startsWith("st")) 1 else 0, name) }
     // one full interleaved sweep of the ordered suite
     def sweep(passNo: Int): IndexedSeq[(String, Option[Double], Long, Option[String], Int)] =
       ordered.zipWithIndex.map { case ((name, fn), qi) =>
@@ -181,6 +165,20 @@ object Bench {
           case (Some(e), _) => e }
         (name, sec, gcMs, err, times.count(_._1.isDefined))
       }.toIndexedSeq
+    // GRAFT_PLANS_DIR set: each selected query's formatted physical
+    // plan goes to plans/<dir>/<query>.txt, before the timed passes
+    sys.env.get("GRAFT_PLANS_DIR").foreach { dir =>
+      val out = java.nio.file.Paths.get("plans", dir)
+      java.nio.file.Files.createDirectories(out)
+      ordered.foreach { case (name, fn) =>
+        try java.nio.file.Files.writeString(out.resolve(s"$name.txt"),
+          fn(root, sfDir).queryExecution.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] no plan for $name: ${e.getMessage}") }
+        quiesce(root)
+      }
+    }
     val calibBefore = calibMs()
     val calibParBefore = calibParMs()
     val perPass = (1 to passes).map(p => sweep(p))
@@ -243,27 +241,30 @@ object Bench {
     // stdout captures have truncated the single line mid-record in past
     // rounds; persist the complete per-query artifact alongside it
     // (with the GC attribution and methodology flags the driver's JSON
-    // schema does not carry)
-    // interleaved micro-probe series (segment-attributable steal) and
-    // the artifact-store ledger: which derived artifacts this run
-    // BUILT (pass-1 pricing) vs found warm on disk from a prior process
-    val calibSer = calibSeries.map { case (at, ms) => jstr(at) + ":" + ms }
-      .mkString("{", ",", "}")
-    val staged = graft.core.Artifacts.drainBuildRecords().map { b =>
-      s"""{"kind":${jstr(b.kind)},"dataset":${jstr(b.dataset)},""" +
-        s""""built":${b.built},"ms":${b.ms}}"""
-    }.mkString("[", ",", "]")
-    val full =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-        s""""err":$errs,"failed_iters":$flaky,"n_failed":${failed.size},""" +
-        s""""gc_ms":$gcs,"passes":$passRaw,"n_passes":$passes,""" +
-        s""""calib_ms":[$calibBefore,$calibAfter],""" +
-        s""""calib_par_ms":[$calibParBefore,$calibParAfter],""" +
-        s""""calib_series":$calibSer,"staged_builds":$staged,""" +
-        s""""isolate":$isolate,"order":"streaming-last",""" +
-        s""""sf":${jstr(sfDir)}}"""
-    java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
-      (full + "\n").getBytes("UTF-8"))
+    // schema does not carry). A filtered run times a subset, so it
+    // prints its lines but leaves the committed full-suite file alone.
+    if (filter.isEmpty) {
+      // interleaved micro-probe series (segment-attributable steal) and
+      // the artifact-store ledger: which derived artifacts this run
+      // BUILT (pass-1 pricing) vs found warm on disk from a prior process
+      val calibSer = calibSeries.map { case (at, ms) => jstr(at) + ":" + ms }
+        .mkString("{", ",", "}")
+      val staged = graft.core.Artifacts.drainBuildRecords().map { b =>
+        s"""{"kind":${jstr(b.kind)},"dataset":${jstr(b.dataset)},""" +
+          s""""built":${b.built},"ms":${b.ms}}"""
+      }.mkString("[", ",", "]")
+      val full =
+        s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+          s""""err":$errs,"failed_iters":$flaky,"n_failed":${failed.size},""" +
+          s""""gc_ms":$gcs,"passes":$passRaw,"n_passes":$passes,""" +
+          s""""calib_ms":[$calibBefore,$calibAfter],""" +
+          s""""calib_par_ms":[$calibParBefore,$calibParAfter],""" +
+          s""""calib_series":$calibSer,"staged_builds":$staged,""" +
+          s""""isolate":$isolate,"order":"streaming-last",""" +
+          s""""sf":${jstr(sfDir)}}"""
+      java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
+        (full + "\n").getBytes("UTF-8"))
+    }
     root.stop()
     // The perf driver captures a 2000-char TAIL of stdout and parses the
     // JSON it finds there (the committed BENCH_rNN.json artifacts carry

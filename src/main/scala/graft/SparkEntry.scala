@@ -39,4 +39,28 @@ object SparkEntry {
       operators.Multimodal.oracles ++
       operators.ArrayOps.oracles ++
       operators.StreamOps.oracles
+
+  /** Bench's and Verify's optional query filter: a comma-separated list
+    * of names; absent keeps every query. Unknown names fail fast. */
+  def nameFilter(arg: Option[String]): String => Boolean = arg match {
+    case None => _ => true
+    case Some(list) =>
+      val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names -- queries.keySet
+      require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+      names.contains
+  }
+
+  /** JSON string literal: escapes quote, backslash and every control
+    * character, so a tab in oracle SQL or in an error message can never
+    * break `oracle_sql.json` or the bench's JSON lines. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
 }

@@ -16,9 +16,9 @@ import java.nio.charset.StandardCharsets
 object FragmentStore {
   /** JVM-wide parsed-manifest cache keyed by absolute manifest path.
     * Safe because manifests are write-once (tmp+rename commit, unique
-    * ts+id names); removeFragment invalidates. Sized by the metadata
-    * working set the driver holds anyway. */
-  private[core] val manifestCache =
+    * ts+id names); removeFragment and dropTable invalidate. Sized by
+    * the metadata working set the driver holds anyway. */
+  private[graft] val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, FragmentMeta]()
 }
 
@@ -169,5 +169,11 @@ class FragmentStore(uri: String, conf: Configuration) {
   def fragmentDataDir(fragId: String): Path = new Path(root, s"frag_$fragId")
   def fileSystem: FileSystem = fs
 
-  def dropTable(): Unit = fs.delete(root, true)
+  /** Delete the array and evict its manifests from the JVM-wide cache
+    * (keys are the qualified paths listings return). */
+  def dropTable(): Unit = {
+    fs.delete(root, true)
+    val prefix = fs.makeQualified(root).toString + "/"
+    FragmentStore.manifestCache.keySet.removeIf(_.startsWith(prefix))
+  }
 }

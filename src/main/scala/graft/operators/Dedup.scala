@@ -648,8 +648,9 @@ object Dedup {
     * 100 TB-correct trade (a second embarrassingly-parallel scan
     * beats writing the full wide-payload corpus to executor disks),
     * and callers checkpoint the RESULT once, exactly as they did the
-    * window's output (measured at m = 10⁶, Scratch: an internal
-    * checkpoint here made the pipeline 77 s vs 26 s without). */
+    * window's output (measured at m = 10⁶, SCALE.md "Dedup /
+    * similarity": an internal checkpoint here made the pipeline 77 s
+    * vs 26 s without). */
   private[graft] def collapseIdenticalKeys(df: DataFrame, key: Column,
       idCol: String): DataFrame = {
     val tagged = df
@@ -671,13 +672,14 @@ object Dedup {
     // both the gid table and the checkpointed blocks. Above the gate
     // — the mega-cluster/corpus regime where the gid table can
     // approach corpus size and materializing the payload would write
-    // the corpus to executor disks (measured at m = 10⁶, Scratch:
-    // 77 s with an internal checkpoint vs 26 s without) — the shape
+    // the corpus to executor disks (measured at m = 10⁶, SCALE.md
+    // "Dedup / similarity": 77 s with an internal checkpoint vs 26 s
+    // without) — the shape
     // is unchanged: recompute-over-materialize, shuffled join, AQE
     // skew-splittable, nothing collected, nothing broadcast. Conf
     // `graft.dedup.collapseBroadcastMaxBytes` overrides (0 forces the
-    // scale path; Scratch's m=10⁶ harness pins the scale shape
-    // with it).
+    // scale path; the m=10⁶ measurement in SCALE.md pinned the scale
+    // shape with it).
     val gate = df.sparkSession.conf
       .getOption("graft.dedup.collapseBroadcastMaxBytes").map(_.toLong)
       .getOrElse(256L << 20)

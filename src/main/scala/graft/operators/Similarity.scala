@@ -261,7 +261,8 @@ object Similarity {
   }
 
   /** Regime thresholds over [[corpusTightnessMicro]] (all four cells
-    * MEASURED — Scratch round-11 + the SCALE.md dial table): the
+    * MEASURED — SCALE.md "Auto-derived dials from measured corpus
+    * tightness" and its dial table): the
     * synthetic isotropic embeddings measure 0.27–0.33 (anchor proxy
     * 0.23–0.25), σ=0.10 blobs 0.78 (anchor 0.62), σ=0.05 blobs 0.93
     * (anchor 0.87). ≥ 0.8 = tight, ≥ 0.5 = moderate, below =
@@ -655,7 +656,8 @@ object Similarity {
     * the driver hash-checks an honest claim ("recall ≥ bound") rather
     * than a faked exactness. */
   /** v21's sketch-route-then-rerank, parameterized by oversample
-    * width (the v21 entry fixes the shipped value; Scratch sweeps it). */
+    * width (the v21 entry fixes the shipped value; SCALE.md "ANN dial
+    * recalls" records the sweep). */
   private[graft] def cascadeTopK(e: DataFrame, cands: Int): DataFrame = {
     val sk = e.select(col("vec_id"),
       array(rpSigns.map(sj =>

@@ -574,21 +574,9 @@ object GraftArray {
       writeFragment(spark, uri, merged, origin = Some(origin),
         commitTs = Some(maxTs), replaces = replaced.map(_.id))
     }
-    carryStreamLedger(spark, uri, replaced)
     Some(maxTs)
   }
 
-  /** `CALL cat.rollback('t', ts)` — point-in-time restore as a NEW
-    * immutable commit (never a history rewrite): the latest-wins view
-    * AS OF `ts` (tombstones applied, dense fills kept virtual) is
-    * rewritten as one fragment that `replaces` EVERYTHING currently
-    * visible, committing at now(). Post-rollback reads see exactly the
-    * `ts` content; the bad period stays time-travelable until vacuum
-    * reclaims it — the undo-a-bad-ingest admin verb with the same
-    * history-for-space trade as consolidation. Rolling back to before
-    * the first fragment empties the table (documented; the view is
-    * legitimately empty there). Returns the restore fragment's
-    * timestamp, or None when nothing newer than `ts` exists. */
   /** Physically delete the fragments committed in `[lo, hi]` — the
     * storage model's history-surgery verb (TileDB's
     * `Array::delete_fragments`, the TTL-expiry / bad-ingest-removal
@@ -632,15 +620,7 @@ object GraftArray {
           s"fragments ${missing.mkString(",")} — deleting it would destroy " +
           "data committed outside [" + lo + ", " + hi + "]")
     }
-    val byId = victims.map(f => f.id -> f).toMap
-    val done = scala.collection.mutable.Set.empty[String]
-    def rm(f: FragmentMeta): Unit = if (!done.contains(f.id)) {
-      done += f.id
-      f.replaces.flatMap(byId.get).foreach(rm)
-      st.removeFragment(f)
-    }
-    victims.foreach(rm)
-    victims.size
+    removeFragments(spark, uri, victims)
   }
 
   /** Size-tiered SMALL-fragment compaction — the policy form of
@@ -689,6 +669,17 @@ object GraftArray {
     (done, absorbed)
   }
 
+  /** `CALL cat.rollback('t', ts)` — point-in-time restore as a NEW
+    * immutable commit (never a history rewrite): the latest-wins view
+    * AS OF `ts` (tombstones applied, dense fills kept virtual) is
+    * rewritten as one fragment that `replaces` EVERYTHING currently
+    * visible, committing at now(). Post-rollback reads see exactly the
+    * `ts` content; the bad period stays time-travelable until vacuum
+    * reclaims it — the undo-a-bad-ingest admin verb with the same
+    * history-for-space trade as consolidation. Rolling back to before
+    * the first fragment empties the table (documented; the view is
+    * legitimately empty there). Returns the restore fragment's
+    * timestamp, or None when nothing newer than `ts` exists. */
   def rollback(spark: SparkSession, uri: String, asOfTs: Long)
       : Option[Long] = {
     val st = store(spark, uri)
@@ -718,7 +709,6 @@ object GraftArray {
       } else
         writeFragment(spark, uri, view, origin = Some(origin),
           commitTs = None, replaces = frags.map(_.id))
-    carryStreamLedger(spark, uri, frags)
     Some(ts)
   }
 
@@ -749,14 +739,15 @@ object GraftArray {
     consolidate(spark, uri, force = true)
   }
 
-  /** Consolidation absorbs fragments whose origin tags are the
-    * streaming sink's replay ledger; before vacuum can delete those
-    * manifests, promote each sink's max committed batchId into array
-    * metadata so a post-vacuum replay still recognizes it
-    * (EventPipeline.commitStreamBatch checks both layers). */
+  /** Fragment origin tags are the streaming sink's replay ledger
+    * (EventPipeline.commitStreamBatch). Before [[removeFragments]]
+    * deletes tagged manifests, promote each sink's highest destroyed
+    * batchId to a high-water mark in array metadata, so a replay of any
+    * removed batch is still recognized. One metadata commit per removal
+    * that destroys tags; batch commits write none. */
   private def carryStreamLedger(spark: SparkSession, uri: String,
-      replaced: Seq[FragmentMeta]): Unit = {
-    val tags = replaced.flatMap(_.origin).flatMap { o =>
+      victims: Seq[FragmentMeta]): Unit = {
+    val tags = victims.flatMap(_.origin).flatMap { o =>
       if (!o.startsWith("stream:")) None
       else {
         val rest = o.stripPrefix("stream:")
@@ -785,16 +776,23 @@ object GraftArray {
     * content only (the same history-for-space trade the storage
     * model's vacuum makes). Returns the number removed. */
   def vacuum(spark: SparkSession, uri: String): Int = {
-    val st = store(spark, uri)
-    val all = st.listFragmentsRaw()
+    val all = store(spark, uri).listFragmentsRaw()
     val replaced = all.flatMap(_.replaces).toSet
-    val victims = all.filter(f => replaced.contains(f.id))
-    // deletion order matters under nested consolidation: a victim that
-    // itself replaces other victims (an intermediate consolidated
-    // fragment) must outlive them — if it were deleted first and
-    // vacuum crashed, its orphans would resurface next to the final
-    // consolidated fragment as duplicates. Post-order keeps every
-    // intermediate state readable.
+    removeFragments(spark, uri, all.filter(f => replaced.contains(f.id)))
+  }
+
+  /** Delete `victims` (vacuum, delete_fragments) after carrying their
+    * stream ledger forward. Deletion order matters under nested
+    * consolidation: a victim that itself replaces other victims (an
+    * intermediate consolidated fragment) must outlive them — if it
+    * were deleted first and the removal crashed, its orphans would
+    * resurface next to the final consolidated fragment as duplicates.
+    * Post-order keeps every intermediate state readable. Returns the
+    * number removed. */
+  private def removeFragments(spark: SparkSession, uri: String,
+      victims: Seq[FragmentMeta]): Int = {
+    val st = store(spark, uri)
+    carryStreamLedger(spark, uri, victims)
     val byId = victims.map(f => f.id -> f).toMap
     val done = scala.collection.mutable.Set.empty[String]
     def rm(f: FragmentMeta): Unit = if (!done.contains(f.id)) {

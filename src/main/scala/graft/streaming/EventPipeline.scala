@@ -91,12 +91,13 @@ object EventPipeline {
   /** One micro-batch commit (factored out so replay semantics are
     * directly testable). Returns true iff a fragment was written.
     *
-    * The replay ledger is two-layered so it survives maintenance:
-    * the fragment's own origin tag (atomic with the data commit,
-    * checked against RAW manifests — consolidation hides superseded
-    * fragments from normal listings), plus a per-sink high-water
-    * batchId in array metadata written after the commit and carried
-    * forward by consolidation before vacuum can erase the tags.
+    * The replay ledger is the fragment's own origin tag, committed
+    * atomically with the data and checked against RAW manifests
+    * (consolidation hides superseded fragments from normal listings).
+    * A batch commit writes nothing else: only vacuum and
+    * delete_fragments destroy tags, and they first promote each sink's
+    * highest destroyed batchId to a high-water mark in array metadata
+    * (`GraftArray.carryStreamLedger`), which this check also reads.
     * BatchIds are per-checkpoint monotonic: a query restarted with a
     * FRESH checkpoint must use a fresh sinkId. */
   def commitStreamBatch(batch: DataFrame, uri: String,
@@ -112,15 +113,8 @@ object EventPipeline {
     // emptiness check is folded into the write itself (footer row
     // counts the write pass already reads) — the separate isEmpty
     // Spark job this used to run per micro-batch is gone
-    if (replayed) false
-    else graft.sources.GraftArray.writeNonEmpty(
-        spark, uri, batch, origin = Some(tag)) match {
-      case Some(_) =>
-        graft.sources.GraftArray.putMetadata(spark, uri,
-          Map(metaKey -> batchId.toString))
-        true
-      case None => false
-    }
+    !replayed && graft.sources.GraftArray.writeNonEmpty(
+      spark, uri, batch, origin = Some(tag)).isDefined
   }
 
   /** End-to-end stream→array-sink pipeline for the st9 oracle: the

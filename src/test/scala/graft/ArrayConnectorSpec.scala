@@ -179,6 +179,53 @@ class ArrayConnectorSpec extends SparkSpec {
     assert(e.getMessage != null)
   }
 
+  test("catalog errors: missing table, INSERT arity, bad @ suffix") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_whe").toString
+    spark.conf.set("spark.sql.catalog.ge", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.ge.warehouse", wh)
+    spark.sql(
+      """CREATE TABLE ge.arr (rows BIGINT, cols BIGINT, a BIGINT, s STRING)
+        |TBLPROPERTIES('graft.dimensions'='rows,cols')""".stripMargin)
+    spark.sql("INSERT INTO ge.arr VALUES (1, 1, 10, 'x')")
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val missing = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT * FROM ge.nope").collect()
+    }
+    assert(missing.getCondition == "TABLE_OR_VIEW_NOT_FOUND", missing.getMessage)
+    val arity = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("INSERT INTO ge.arr VALUES (1, 2, 3)").collect()
+    }
+    assert(arity.getCondition.startsWith("INSERT_COLUMN_ARITY_MISMATCH"),
+      arity.getMessage)
+    val suffix = intercept[Exception] {
+      spark.sql("SELECT * FROM ge.`arr@notatimestamp`").collect()
+    }
+    assert(msgs(suffix).exists(_.contains("bad identifier suffix '@notatimestamp'")),
+      msgs(suffix).mkString(" | "))
+    // no failed statement committed anything
+    assert(GraftArray.fragments(spark, s"$wh/arr").size == 1)
+  }
+
+  test("DROP TABLE evicts the array's manifest-cache entries") {
+    import scala.jdk.CollectionConverters._
+    val wh = java.nio.file.Files.createTempDirectory("graft_whd").toString
+    spark.conf.set("spark.sql.catalog.gd", "graft.sources.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gd.warehouse", wh)
+    spark.sql("CREATE TABLE gd.t (k BIGINT, v BIGINT) TBLPROPERTIES('graft.dimensions'='k')")
+    spark.sql("INSERT INTO gd.t VALUES (1, 1)")
+    spark.sql("INSERT INTO gd.t VALUES (2, 2)")
+    assert(spark.table("gd.t").count() == 2)
+    val root = new org.apache.hadoop.fs.Path(s"$wh/t")
+    val prefix = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(root).toString + "/"
+    def cached: Int = FragmentStore.manifestCache.keySet.asScala
+      .count(_.startsWith(prefix))
+    assert(cached == 2) // the read cached both manifests
+    spark.sql("DROP TABLE gd.t")
+    assert(cached == 0)
+  }
+
   test("metadata put/load and @metadata semantics") {
     val uri = tmp()
     GraftArray.create(spark, uri, schema2d)

@@ -11,12 +11,7 @@ import org.apache.spark.sql.functions._
   * failure so the parent test sees it. */
 object ConcurrencyChild {
   def main(args: Array[String]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-conc-child")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.shuffle.partitions", "2")
-      .getOrCreate()
+    val s = GraftSession.local(2)
     try args match {
       // race the derived-artifact BUILDER cross-process: two JVMs
       // resolving the same (kind, dataset, sig) must converge on one

@@ -150,6 +150,63 @@ class StreamingSpec extends SparkSpec {
       Seq((3L, 3.0)).toDF("k", "v"), uri, "s", 2L))
   }
 
+  /** A fresh allowsDups (k, v) array, so a double-committed batch
+    * would show as extra rows. */
+  private def ledgerArray(prefix: String): String = {
+    import graft.core._
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val uri = java.nio.file.Files.createTempDirectory(prefix)
+      .toString + "/arr"
+    graft.sources.GraftArray.create(spark, uri, ArraySchema(ArrayKind.Sparse,
+      Seq(DimensionSpec("k", LongType)),
+      Seq(AttributeSpec("v", DoubleType)), allowsDups = true))
+    uri
+  }
+
+  private def commit(uri: String, batchId: Long): Boolean =
+    EventPipeline.commitStreamBatch(
+      Seq((batchId, batchId.toDouble)).toDF("k", "v"), uri, "s", batchId)
+
+  test("streaming batches write no metadata files: the tag is the ledger") {
+    val uri = ledgerArray("graft_nometa")
+    val input = MemoryStream[(Long, Double)](spark)
+    val q = EventPipeline.writeStreamToArray(
+      input.toDF().toDF("k", "v"), uri)
+    try (0 until 30).foreach { i =>
+      input.addData((i.toLong, i.toDouble))
+      q.processAllAvailable()
+    } finally q.stop()
+    assert(graft.sources.GraftArray.fragments(spark, uri).size == 30)
+    val meta = Option(new java.io.File(uri, "_meta").list()).toSeq.flatten
+    assert(!meta.exists(_.endsWith(".json")), meta.mkString(","))
+  }
+
+  test("sink replay stays a no-op after rollback then vacuum") {
+    import graft.sources.GraftArray
+    val uri = ledgerArray("graft_ledger_rb")
+    assert(commit(uri, 0L) && commit(uri, 1L))
+    val t0 = GraftArray.fragments(spark, uri).head.timestamp
+    assert(GraftArray.rollback(spark, uri, t0).isDefined)
+    assert(GraftArray.vacuum(spark, uri) == 2) // both tags erased
+    // batch 1 was rolled back, not lost: its replay must not re-apply it
+    assert(!commit(uri, 0L) && !commit(uri, 1L))
+    assert(spark.read.format("graftarray").option("path", uri).load()
+      .as[(Long, Double)].collect().toSeq == Seq((0L, 0.0)))
+    assert(commit(uri, 2L))
+  }
+
+  test("sink replay stays a no-op after delete_fragments") {
+    import graft.sources.GraftArray
+    val uri = ledgerArray("graft_ledger_df")
+    assert(commit(uri, 0L) && commit(uri, 1L) && commit(uri, 2L))
+    val t1 = GraftArray.fragments(spark, uri)(1).timestamp
+    assert(GraftArray.deleteFragments(spark, uri, t1, t1) == 1)
+    assert(!commit(uri, 0L) && !commit(uri, 1L) && !commit(uri, 2L))
+    assert(spark.read.format("graftarray").option("path", uri).load()
+      .as[(Long, Double)].collect().map(_._1).sorted.toSeq == Seq(0L, 2L))
+    assert(commit(uri, 3L))
+  }
+
   test("mid-backlog consolidation fails the stream instead of duplicating") {
     import graft.core._
     import graft.sources.GraftArray
