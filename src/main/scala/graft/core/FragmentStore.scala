@@ -20,6 +20,12 @@ object FragmentStore {
     * the metadata working set the driver holds anyway. */
   private[graft] val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, FragmentMeta]()
+
+  /** Fresh listings `listFragmentsRaw` takes after a listed manifest
+    * vanished before its read. Each retry needs a removal to land
+    * inside one list-and-read window, so a bounded count only stops a
+    * store whose listings keep naming missing files. */
+  private val ListRetries = 16
 }
 
 class FragmentStore(uri: String, conf: Configuration) {
@@ -123,30 +129,46 @@ class FragmentStore(uri: String, conf: Configuration) {
     * (fresh JVM over a deep manifest) loads the uncached tail in
     * parallel — sequential per-manifest GETs against an object store
     * would turn table open into minutes (Hadoop FileSystem and the
-    * Jackson mapper are thread-safe here). */
+    * Jackson mapper are thread-safe here).
+    *
+    * A listed manifest can vanish before it is read: `removeFragment`
+    * (vacuum, rollback, delete_fragments) deletes between our list and
+    * our read. Such a listing is stale, so the whole listing is taken
+    * again — never the vanished manifest skipped: a vacuum that removes
+    * it has already committed the consolidated replacement, and only a
+    * fresh listing sees that. */
   def listFragmentsRaw(): Seq[FragmentMeta] = {
-    val paths = list(fragDir)
-    val cold = paths.filterNot(p =>
-      FragmentStore.manifestCache.containsKey(p.toString))
-    if (cold.size > 8) {
-      import scala.jdk.CollectionConverters._
-      cold.asJava.parallelStream().forEach { p =>
-        FragmentStore.manifestCache.computeIfAbsent(p.toString,
-          _ => ArraySchemaJson.fragmentFromJson(read(p)))
-      }
-    }
-    paths.map { p =>
+    def load(p: Path): FragmentMeta =
       FragmentStore.manifestCache.computeIfAbsent(p.toString,
         _ => ArraySchemaJson.fragmentFromJson(read(p)))
+    def attempt(): Seq[FragmentMeta] = {
+      val paths = list(fragDir)
+      val cold = paths.filterNot(p =>
+        FragmentStore.manifestCache.containsKey(p.toString))
+      if (cold.size > 8) {
+        import scala.jdk.CollectionConverters._
+        cold.asJava.parallelStream().forEach(p => { load(p); () })
+      }
+      paths.map(load)
     }
+    def vanished(t: Throwable): Boolean = t match {
+      case null => false
+      case _: java.io.FileNotFoundException => true
+      case _ => vanished(t.getCause)
+    }
+    def go(retries: Int): Seq[FragmentMeta] =
+      try attempt()
+      catch { case t: Throwable if retries > 0 && vanished(t) => go(retries - 1) }
+    go(FragmentStore.ListRetries)
   }
 
   /** Delete a fragment: manifest first (the atomic visibility switch),
-    * then its data directory. */
+    * then its data directory. The cache is keyed by the qualified path
+    * listings return, so the eviction qualifies too. */
   def removeFragment(f: FragmentMeta): Unit = {
     val p = new Path(fragDir, f"${f.timestamp}%020d_${f.id}.json")
     fs.delete(p, false)
-    FragmentStore.manifestCache.remove(p.toString)
+    FragmentStore.manifestCache.remove(fs.makeQualified(p).toString)
     fs.delete(fragmentDataDir(f.id), true)
   }
 

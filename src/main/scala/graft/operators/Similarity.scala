@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
@@ -349,13 +349,17 @@ object Similarity {
 
   /** Exact brute-force top-k for the 5 fixed query vectors — the v2
     * surface and the recall baseline for v3/v4. */
-  private def bruteTopK(e: DataFrame): DataFrame = {
+  private def bruteTopK(e: DataFrame): DataFrame =
+    topkSelect(bruteScored(e), 10)
+
+  /** Every (query, corpus vector) pair with its cosine — brute force's
+    * input to the per-query top-k. */
+  private def bruteScored(e: DataFrame): DataFrame = {
     val q = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val scored = e.select(col("vec_id"), col("embedding"))
+    e.select(col("vec_id"), col("embedding"))
       .join(broadcast(q), col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("qv"), col("embedding")))
-    topkSelect(scored, 10)
   }
 
   /** Multi-table LSH top-k: corpus explodes to one row per (table
@@ -684,26 +688,49 @@ object Similarity {
 
   /** v24 core: hits@10 (out of 5 queries × 10 = 50) against the exact
     * brute-force baseline, per probe depth, under ONE shared k-means
-    * fit (assigned table localCheckpoint'd — it is probed once PER
-    * depth; the x13 lesson). Hits are provably non-decreasing in
-    * nprobe: candidate sets are supersets, and an item evicted from an
+    * fit and in ONE pass. The probe list is computed once at the
+    * deepest depth: `ArgTopDot.top` sorts centroids by (dot desc,
+    * index asc), a total order, so its first `np` entries are exactly
+    * the depth-`np` probe list, and each (query, cluster) probe row
+    * carries its rank `prank`. The depth-`np` candidates are then the
+    * rows with `prank < np`, and one groupBy scores all five depths
+    * with one masked top-10 heap each (TopKByScore skips the null
+    * scores of deeper rows). Brute force stays its own plan over the
+    * plain corpus, so v24's two theorems remain checks on the probe
+    * construction rather than tautologies: hits are non-decreasing in
+    * nprobe (candidate sets are supersets, and an item evicted from an
     * approximate top-10 by a new candidate is evicted by something
     * strictly closer — which is then itself a brute-force-top-10
-    * member. And nprobe = k probes EVERY list — the candidate set
-    * equals brute force's, so hits MUST be exactly 50. Driver-side
-    * state: 5 numbers. */
+    * member; a wrong `prank` breaks it), and nprobe = k probes EVERY
+    * list, so the candidate set equals brute force's and hits MUST be
+    * exactly 50. Driver-side state: 5 × 5 × 10 candidate ids and the
+    * 50 exact ids. */
   private[graft] def probeSweepHits(s: SparkSession, e: DataFrame)
       : Seq[(Int, Long)] = {
-    val (assigned0, centroids) = Ivf.fit(e, k = 16, iters = 3)
-    val assigned = assigned0.localCheckpoint()
-    val q = assigned.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val bt = bruteTopK(e).select("query_id", "vec_id").localCheckpoint()
-    Seq(1, 2, 4, 8, 16).map { np =>
-      val res = topkSelect(Ivf.probes(q, assigned, centroids, nprobe = np)
-        .filter(col("vec_id") =!= col("query_id"))
-        .withColumn("cos", cosine(col("qv"), col("embedding"))), 10)
-      np -> res.join(bt, Seq("query_id", "vec_id")).count()
+    import graft.functions.expressions.TopK
+    val depths = Seq(1, 2, 4, 8, 16)
+    val (assigned, centroids) = Ivf.fit(e, k = 16, iters = 3)
+    val probeSet = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
+        posexplode(TopK.argTopDot(col("embedding"), centroids, depths.max))
+          .as(Seq("prank", "probe_cluster")))
+    val scored = assigned
+      .join(broadcast(probeSet), col("probe_cluster") === col("cluster"))
+      .filter(col("vec_id") =!= col("query_id"))
+      .withColumn("cos", cosine(col("qv"), col("embedding")))
+    def ids(r: Row, i: Int): Set[Long] =
+      r.getSeq[Row](i).map(_.getLong(0)).toSet
+    val tops = depths.map(np => TopK.topKByScore(
+      when(col("prank") < np, col("cos")), col("vec_id"), 10))
+    val approx = scored.groupBy("query_id").agg(tops.head, tops.tail: _*)
+      .collect()
+    val exact = bruteScored(e).groupBy("query_id")
+      .agg(TopK.topKByScore(col("cos"), col("vec_id"), 10))
+      .collect().map(r => r.get(0) -> ids(r, 1)).toMap
+    depths.zipWithIndex.map { case (np, i) =>
+      np -> approx.map(r =>
+        (ids(r, i + 1) intersect exact.getOrElse(r.get(0), Set.empty)).size
+          .toLong).sum
     }
   }
 

@@ -39,9 +39,126 @@ class AnnClusteredSpec extends SparkSpec {
       .localCheckpoint()
   }
 
+  // isotropic corpus (seeded random gaussians — the synthetic-table
+  // regime, measured fit 0.27–0.33 / anchor 0.23–0.25)
+  private lazy val iso: DataFrame = {
+    val rnd = new scala.util.Random(7)
+    (0 until 500).map { i =>
+      (i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat), i % 10)
+    }.toDF("vec_id", "embedding", "label")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+      .localCheckpoint()
+  }
+
+  // adversarial ties: ids 0,1 (and every id ≡ 0 mod 20) are the unit
+  // vector e0, ids 2,3 (≡ 10 mod 20) e1, ids 4–6 one noisy vector n4
+  // and ids ≡ 5 mod 20 are 2·n4; every other id ≥ 16 divisible by 3
+  // repeats its predecessor. Duplicates tie on cosine (broken by
+  // vec_id); the duplicate low ids seed tied centroids, and since the
+  // e0/e1 clusters hold exact copies only (the noisy vectors live in
+  // dims 8–63, at dot 0 from them), centroids 0/1 and 2/3 stay tied
+  // through every Lloyd step — queries 0–3 then probe 14 more
+  // zero-dot centroids, so every probe prefix is decided by ties.
+  private lazy val ties: DataFrame = {
+    val rnd = new scala.util.Random(11)
+    val u = Array.fill(56)(rnd.nextGaussian())
+    val un = math.sqrt(u.map(x => x * x).sum)
+    def noisy(): Array[Float] = Array.fill(8)(0f) ++
+      u.map(x => (x / un + 0.15 * rnd.nextGaussian()).toFloat)
+    def unit(j: Int): Array[Float] =
+      Array.tabulate(64)(dd => if (dd == j) 1f else 0f)
+    val n4 = noisy()
+    var prev = n4
+    val rows = (0 until 400).map { i =>
+      val v =
+        if (i < 2 || (i >= 16 && i % 20 == 0)) unit(0)
+        else if (i < 4 || (i >= 16 && i % 20 == 10)) unit(1)
+        else if (i < 7) n4
+        else if (i >= 16 && i % 20 == 5) n4.map(_ * 2f)
+        else if (i >= 16 && i % 3 == 0) prev
+        else noisy()
+      prev = v
+      (i.toLong, v.toSeq, i % 10)
+    }
+    rows.toDF("vec_id", "embedding", "label")
+      .withColumn("embedding", col("embedding").cast("array<float>"))
+      .localCheckpoint()
+  }
+
+  /** The per-depth sweep that `probeSweepHits` replaced, kept as its
+    * reference: one probe, top-10, join and count chain per depth. */
+  private def perDepthHits(e: DataFrame): Seq[(Int, Long)] = {
+    import operators.Similarity.topkSelect
+    def cos(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+      graft.functions.VectorFunctions.cosine(a, b)
+    val (assigned0, centroids) = operators.Ivf.fit(e, k = 16, iters = 3)
+    val assigned = assigned0.localCheckpoint()
+    val q = assigned.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
+    val bt = topkSelect(e.select(col("vec_id"), col("embedding"))
+      .join(broadcast(q), col("vec_id") =!= col("query_id"))
+      .withColumn("cos", cos(col("qv"), col("embedding"))), 10)
+      .select("query_id", "vec_id").localCheckpoint()
+    Seq(1, 2, 4, 8, 16).map { np =>
+      val res = topkSelect(
+        operators.Ivf.probes(q, assigned, centroids, nprobe = np)
+          .filter(col("vec_id") =!= col("query_id"))
+          .withColumn("cos", cos(col("qv"), col("embedding"))), 10)
+      np -> res.join(bt, Seq("query_id", "vec_id")).count()
+    }
+  }
+
   test("clustered corpus: nprobe=1 routing is already exact") {
     val hits = operators.Similarity.probeSweepHits(spark, blobs)
     assert(hits.head == (1 -> 50L), s"nprobe=1 hits: ${hits.head}")
+  }
+
+  test("one-pass probe sweep equals the per-depth sweep on three corpora") {
+    // the ties fixture must really hold tied centroids after the fit
+    val (_, c) = operators.Ivf.fit(ties, k = 16, iters = 3)
+    assert(c(0).sameElements(c(1)) && c(2).sameElements(c(3)))
+    for ((name, e) <- Seq("blobs" -> blobs, "isotropic" -> iso,
+        "ties" -> ties)) {
+      val got = operators.Similarity.probeSweepHits(spark, e)
+      val want = perDepthHits(e)
+      assert(got == want, s"$name: one pass $got, per depth $want")
+    }
+  }
+
+  test("probe sweep stays one pass: at most 13 Spark jobs") {
+    // local[8] (SparkSpec): the per-depth sweep ran 38 jobs on the blob
+    // fixture, the one-pass sweep 13. Only jobs tagged with this
+    // test's job group count (AQE splits one action into several
+    // jobs, and other suites' jobs must not leak in).
+    blobs.count() // the fixture's own checkpoint job runs outside
+    val probe = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(j.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == "sweep-probe") probe.incrementAndGet()
+        if (g == "sweep-sentinel") sentinel.incrementAndGet()
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("sweep-probe", "one probeSweepHits call")
+      val hits = operators.Similarity.probeSweepHits(spark, blobs)
+      sc.setJobGroup("sweep-sentinel", "flush listener bus")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime + 30L * 1000000000
+      while (sentinel.get() < 1 && System.nanoTime < deadline)
+        Thread.sleep(10)
+      // FIFO bus: every probe-group event arrived before the sentinel's
+      assert(sentinel.get() >= 1)
+      assert(hits.map(_._1) == Seq(1, 2, 4, 8, 16))
+      assert(probe.get() <= 13, s"probeSweepHits ran ${probe.get()} jobs")
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
   }
 
   test("clustered corpus: cascade saturates at 100 candidates") {
@@ -63,15 +180,8 @@ class AnnClusteredSpec extends SparkSpec {
       s"blob tightness $tFitB/$tAnchB")
     assert(derivedNprobe(tFitB, 16, filtered = false) == 1)
     assert(derivedCands(tAnchB) == 100)
-    // isotropic corpus (seeded random gaussians — the synthetic-table
-    // regime, measured fit 0.27–0.33 / anchor 0.23–0.25): both
-    // estimators stay under the 0.5 cut → the shipped widest dials
-    val rnd = new scala.util.Random(7)
-    val iso = (0 until 500).map { i =>
-      (i.toLong, Seq.fill(64)(rnd.nextGaussian().toFloat), i % 10)
-    }.toDF("vec_id", "embedding", "label")
-      .withColumn("embedding", col("embedding").cast("array<float>"))
-      .localCheckpoint()
+    // isotropic corpus: both estimators stay under the 0.5 cut → the
+    // shipped widest dials
     val (assignedI, centI) = operators.Ivf.fit(iso, k = 16, iters = 3)
     val tFitI = corpusTightnessMicro(assignedI.localCheckpoint(), centI)
     val tAnchI = anchorTightnessMicro(iso)

@@ -5,6 +5,28 @@ import org.apache.spark.sql.types._
 import graft.core._
 import graft.sources.GraftArray
 
+/** A `vanish:`-scheme local filesystem whose `listStatus` deletes one
+  * armed file right after listing it, once — the window in which a
+  * concurrent vacuum removes a manifest that a lister has just named. */
+class VanishingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "vanish"
+  override def getUri: java.net.URI = java.net.URI.create("vanish:///")
+  override def listStatus(
+      f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    val listed = super.listStatus(f)
+    val name = VanishingFs.armed.get()
+    listed.find(_.getPath.getName == name)
+      .filter(_ => VanishingFs.armed.compareAndSet(name, null))
+      .foreach(st => delete(st.getPath, false))
+    listed
+  }
+}
+
+object VanishingFs {
+  /** Name of the file the next listing that contains it deletes. */
+  val armed = new java.util.concurrent.atomic.AtomicReference[String]()
+}
+
 /** Fragment consolidation + vacuum (the reference's OPTIMIZE TABLE hook
   * [HA_CONCURRENT_OPTIMIZE, ha_mytile.cc:2948]; the storage model's
   * consolidate/vacuum pair): merging preserves query results and time
@@ -92,6 +114,59 @@ class ConsolidationSpec extends SparkSpec {
     assert(GraftArray.vacuum(spark, uri) == 0)
     // fewer than two fragments → consolidation is a no-op
     assert(GraftArray.consolidate(spark, uri).isEmpty)
+  }
+
+  test("vacuum evicts every removed manifest from the manifest cache") {
+    import scala.jdk.CollectionConverters._
+    val uri = tmp()
+    GraftArray.create(spark, uri, sch)
+    for (i <- 0 until 3)
+      GraftArray.write(spark, uri, spark.range(i * 10L, i * 10L + 20L)
+        .select(col("id").as("k"), lit(i.toDouble).as("v")))
+    assert(GraftArray.consolidate(spark, uri).isDefined)
+    val store = GraftArray.store(spark, uri)
+    assert(store.listFragmentsRaw().size == 4) // caches all four
+    assert(GraftArray.vacuum(spark, uri) == 3)
+    val root = new org.apache.hadoop.fs.Path(uri)
+    val prefix = store.fileSystem.makeQualified(root).toString + "/"
+    val cached = FragmentStore.manifestCache.keySet.asScala
+      .filter(_.startsWith(prefix)).toSeq
+    val live = store.listFragmentsRaw()
+    assert(live.size == 1)
+    assert(cached.size == 1 && cached.head.contains(live.head.id),
+      cached.mkString(","))
+  }
+
+  test("a manifest vanishing between list and read is re-listed, not fatal") {
+    spark.sparkContext.hadoopConfiguration.set(
+      "fs.vanish.impl", classOf[VanishingFs].getName)
+    // 3 originals take the sequential read, 10 the parallel cold load
+    for (n <- Seq(3, 10)) {
+      val uri = "vanish:" + tmp()
+      GraftArray.create(spark, uri, sch)
+      for (i <- 0 until n)
+        GraftArray.write(spark, uri, spark.range(i * 10L, i * 10L + 20L)
+          .select(col("id").as("k"), lit(i.toDouble).as("v")))
+      assert(GraftArray.consolidate(spark, uri).isDefined)
+      val store = GraftArray.store(spark, uri)
+      val all = store.listFragmentsRaw()
+      val merged = all.filter(_.replaces.nonEmpty)
+      val victim = all.filter(_.replaces.isEmpty).head
+      // what a vacuum deletes: a replaced manifest, already superseded
+      // by the committed consolidated one; start cold so the listing
+      // has to read the victim
+      val prefix = store.fileSystem
+        .makeQualified(new org.apache.hadoop.fs.Path(uri)).toString + "/"
+      FragmentStore.manifestCache.keySet.removeIf(_.startsWith(prefix))
+      VanishingFs.armed.set(
+        f"${victim.timestamp}%020d_${victim.id}.json")
+      val vis = store.listFragments()
+      assert(VanishingFs.armed.get() == null, "the listing never fired")
+      assert(vis.map(_.id) == merged.map(_.id), s"n=$n")
+      val raw = store.listFragmentsRaw().map(_.id)
+      assert(raw.size == n && !raw.contains(victim.id), s"n=$n: $raw")
+      assert(read(uri).count() == (n - 1) * 10L + 20L)
+    }
   }
 
   test("windowed consolidation collapses only in-window fragments") {
