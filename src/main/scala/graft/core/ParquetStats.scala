@@ -18,6 +18,25 @@ import scala.jdk.CollectionConverters._
   */
 object ParquetStats {
 
+  /** Read options for `path` built from `conf`. `ParquetFileReader.open`
+    * without options builds them from a fresh default `Configuration`,
+    * whose first read parses Hadoop's default XML — per file, and
+    * blind to the session's settings (filesystems, decryption). */
+  def readOptions(conf: Configuration, path: Path)
+      : org.apache.parquet.ParquetReadOptions =
+    org.apache.parquet.HadoopReadOptions.builder(conf, path).build()
+
+  /** Opens `path` with read options built from `conf`. */
+  def open(path: Path, conf: Configuration): ParquetFileReader =
+    ParquetFileReader.open(
+      HadoopInputFile.fromPath(path, conf), readOptions(conf, path))
+
+  /** The footer row count of one parquet file. */
+  def rowCount(path: Path, conf: Configuration): Long = {
+    val r = open(path, conf)
+    try r.getRecordCount finally r.close()
+  }
+
   /** (rows, per-column stats) aggregated across `files`. Sums are not
     * in parquet footers; callers fill them separately if needed. */
   def collect(files: Seq[Path], schema: StructType, conf: Configuration)
@@ -62,7 +81,7 @@ object ParquetStats {
     val ord = TypedValue.ordering
 
     Seq(f).foreach { f =>
-      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf))
+      val reader = open(f, conf)
       try {
         val footer = reader.getFooter
         val msgType = footer.getFileMetaData.getSchema

@@ -67,12 +67,8 @@ object Dedup {
           if (files.length > 256) None
           else {
             val conf = df.sparkSession.sessionState.newHadoopConf()
-            Some(files.map { f =>
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-              try r.getRecordCount finally r.close()
-            }.sum)
+            Some(files.map(f => graft.core.ParquetStats.rowCount(
+              new org.apache.hadoop.fs.Path(f), conf)).sum)
           }
         case _ => None
       }

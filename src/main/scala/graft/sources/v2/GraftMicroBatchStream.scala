@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming._
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.util.SerializableConfiguration
 import graft.core.ArraySchema
 import graft.sources.GraftArray
 import graft.sources.v2.PredicateSupport.Pred
@@ -181,7 +180,7 @@ class GraftMicroBatchStream(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(streamStruct, schema.dimNames, preds,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
+      HadoopConfBroadcast(spark),
       keyHex =
         if (!schema.encrypted) None
         else Some(spark.conf.getOption(graft.core.EncryptionKeys.ConfKey)

@@ -7,6 +7,7 @@ import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
 import graft.core._
 import graft.sources.GraftArray
@@ -89,7 +90,7 @@ class GraftDeltaBatchWrite(
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DeltaWriterFactory =
     new GraftDeltaWriterFactory(uri, fragId, schema, rowSchema,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
+      HadoopConfBroadcast(spark),
       keyHex)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -117,12 +118,12 @@ class GraftDeltaBatchWrite(
 
 class GraftDeltaWriterFactory(
     uri: String, fragId: String, schema: ArraySchema,
-    rowSchema: StructType, conf: SerializableConfiguration,
+    rowSchema: StructType, conf: Broadcast[SerializableConfiguration],
     keyHex: Option[String]) extends DeltaWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] =
     new GraftDeltaWriter(uri, fragId, partitionId, schema, rowSchema,
-      conf.value, keyHex, taskId)
+      conf.value.value, keyHex, taskId)
 }
 
 /** Task-side delta writer: inserts/updates stream into a data part

@@ -3,7 +3,9 @@ package graft.sources.v2
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.SeekableInputStream
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.io.ColumnIOFactory
@@ -12,10 +14,14 @@ import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetReadShim, VectorizedParquetRecordReader}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
-import graft.core.TypedValue
+import graft.core.{ParquetStats, TypedValue}
 import graft.sources.v2.PredicateSupport.Pred
 import scala.jdk.CollectionConverters._
 
@@ -108,11 +114,68 @@ case class GraftFillPartition(
     ranges: Seq[(Long, Long)], // inclusive per-dim coordinate ranges
     files: Seq[(String, Long)]) extends InputPartition
 
+/** The session Hadoop configuration as a broadcast, for every reader and
+  * writer factory (as Spark's `ParquetScan` does): factories carry a
+  * handle instead of the whole conf, and no task deserializes it. In
+  * `local[N]` the value IS the driver's live configuration, so tasks
+  * must copy it before any write (`GraftParquetReadShim.taskConf`,
+  * `GraftDataWriter`).
+  *
+  * One broadcast serves every factory while the conf's entries stay the
+  * same: serializing the conf costs about 10 ms of driver CPU (every
+  * entry's source list is gzipped on its own), and a query builds its
+  * reader factory twice, besides one per micro-batch and write job.
+  * Any change to an entry, or a new SparkContext, makes a fresh
+  * broadcast. */
+object HadoopConfBroadcast {
+  private case class Cached(sc: SparkContext,
+      entries: java.util.Map[String, String],
+      value: Broadcast[SerializableConfiguration])
+  private var cached: Option[Cached] = None
+
+  def apply(spark: SparkSession): Broadcast[SerializableConfiguration] =
+    synchronized {
+      val sc = spark.sparkContext
+      val conf = sc.hadoopConfiguration
+      val entries = new java.util.HashMap[String, String]()
+      conf.forEach(e => entries.put(e.getKey, e.getValue))
+      cached.filter(c => (c.sc eq sc) && !sc.isStopped && c.entries == entries)
+        .getOrElse {
+          val c = Cached(sc, entries,
+            sc.broadcast(new SerializableConfiguration(conf)))
+          cached = Some(c)
+          c
+        }.value
+    }
+}
+
+/** A fragment file whose footer was read once, with read options built
+  * from the task's conf, and the open stream it was read from — handed
+  * on to the vectorized reader, which takes ownership of the stream. */
+private[v2] final case class FooterRead(
+    input: HadoopInputFile, stream: SeekableInputStream,
+    footer: ParquetMetadata) {
+  def schema: org.apache.parquet.schema.MessageType =
+    footer.getFileMetaData.getSchema
+  def rows: Long = footer.getBlocks.asScala.map(_.getRowCount).sum
+}
+
+private[v2] object FooterRead {
+  def apply(file: String, conf: Configuration): FooterRead = {
+    val path = new Path(file)
+    val input = HadoopInputFile.fromPath(path, conf)
+    val stream = input.newStream()
+    try FooterRead(input, stream, ParquetFileReader.readFooter(
+      input, ParquetStats.readOptions(conf, path), stream))
+    catch { case e: Throwable => stream.close(); throw e }
+  }
+}
+
 class GraftReaderFactory(
     readSchema: StructType,
     dimNames: Seq[String],
     preds: Seq[Pred],
-    conf: SerializableConfiguration,
+    conf: Broadcast[SerializableConfiguration],
     keyHex: Option[String] = None,
     /** Dense-fill context: when set, fill partitions may appear in the
       * scan, so every partition must report row-based (Spark rejects
@@ -146,10 +209,10 @@ class GraftReaderFactory(
     p match {
       case f: GraftFillPartition =>
         new GraftFillPartitionReader(f, readSchema, fillSchema.get,
-          preds, conf.value, keyHex, tombstones, dimStruct)
+          preds, conf.value.value, keyHex, tombstones, dimStruct)
       case g: GraftInputPartition =>
         new GraftPartitionReader(g, readSchema, dimNames, preds,
-          conf.value, keyHex, metaCols, tombstones, dimStruct, evoFills)
+          conf.value.value, keyHex, metaCols, tombstones, dimStruct, evoFills)
     }
 
   /** All-or-nothing per scan; see `columnar` above. When true, EVERY
@@ -166,7 +229,7 @@ class GraftReaderFactory(
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarPartitionReader(
-      p.asInstanceOf[GraftInputPartition], readSchema, conf.value, metaCols,
+      p.asInstanceOf[GraftInputPartition], readSchema, conf.value.value, metaCols,
       evoFills)
 }
 
@@ -183,12 +246,15 @@ object GraftColumnarPartitionReader {
 
 /** ColumnarBatch reader over one partition's fragment files using
   * Spark's VectorizedParquetRecordReader (the engine the built-in
-  * parquet source runs on). Files open through the session Hadoop
-  * configuration (GraftParquetReadShim), so the vectorized path works
-  * on any Hadoop filesystem, not just `file:`. Columns are permuted to
-  * the requested order; columns a file predates (schema evolution)
-  * surface as all-null constant vectors — same semantics as the row
-  * path. */
+  * parquet source runs on). `conf` is the scan's Hadoop configuration
+  * and is only read: the reader copies it once into a task conf
+  * (GraftParquetReadShim.taskConf), reads each footer once with read
+  * options built from that copy, and initializes the vectorized reader
+  * with the same copy, footer and stream — no per-file default
+  * configuration, and any Hadoop filesystem works, not just `file:`.
+  * Columns are permuted to the requested order; columns a file
+  * predates (schema evolution) surface as all-null constant vectors —
+  * same semantics as the row path. */
 class GraftColumnarPartitionReader(
     part: GraftInputPartition,
     readSchema: StructType,
@@ -200,11 +266,11 @@ class GraftColumnarPartitionReader(
     evoFills: Map[String, Any] = Map.empty)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetReadShim, VectorizedParquetRecordReader}
   import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private val Capacity = 4096
+  private val taskConf = GraftParquetReadShim.taskConf(conf)
   private val files = part.files.iterator // (path, fragment ts)
   private var reader: VectorizedParquetRecordReader = _
   private var inner: ColumnarBatch = _ // reader-owned, wanted-col order
@@ -256,18 +322,15 @@ class GraftColumnarPartitionReader(
     if (!files.hasNext) false
     else {
       val (path, fragTs) = files.next()
-      val fr = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new Path(path), conf))
-      val md = fr.getFooter
-      val fileSchema = md.getFileMetaData.getSchema
+      val file = FooterRead(path, taskConf)
+      val fileSchema = file.schema
       val fileFields = fileSchema.getFields.asScala.map(_.getName).toSet
-      val fileRows = md.getBlocks.asScala.map(_.getRowCount).sum
       val wanted = readSchema.fields.filter(f => fileFields.contains(f.name))
       if (wanted.isEmpty) {
         // nothing to decode; rows still count (constant vectors carry
         // any requested provenance metadata)
-        fr.close()
-        pendingNullRows = fileRows
+        file.stream.close()
+        pendingNullRows = file.rows
         val cs = readSchema.fields.map(constFor(_, path, fragTs))
         out = new ColumnarBatch(cs.toArray[ColumnVector])
         true
@@ -277,11 +340,11 @@ class GraftColumnarPartitionReader(
         val byName = fileSchema.getFields.asScala.map(t => t.getName -> t).toMap
         val requested = new org.apache.parquet.schema.MessageType(
           fileSchema.getName, wanted.map(f => byName(f.name)): _*)
-        // hands fr's ownership to the vectorized reader (closes it);
-        // until that succeeds the file reader is still ours to close
-        try GraftParquetReadShim.initVectorized(
-          reader, fileSchema, requested, fr, fileRows)
-        catch { case e: Throwable => fr.close(); reader = null; throw e }
+        // hands the stream to the vectorized reader (closes it); until
+        // that succeeds the stream is still ours to close
+        try GraftParquetReadShim.initVectorized(reader, taskConf,
+          file.input, file.stream, file.footer, requested)
+        catch { case e: Throwable => file.stream.close(); reader = null; throw e }
         inner = reader.resultBatch()
         val vectors: Array[ColumnVector] = readSchema.fields.map { f =>
           val i = wanted.indexWhere(_.name == f.name)
@@ -341,6 +404,12 @@ object GraftScanMetrics {
   * fraction of the per-row cost. The parquet-hadoop Group API remains
   * only as the fallback for what the vectorized reader cannot decode
   * (LIST columns in the projection, encrypted files).
+  * `conf` is the scan's Hadoop configuration and is only read: the
+  * reader copies it once into a task conf (GraftParquetReadShim.taskConf)
+  * and opens every file with read options built from that copy — the
+  * vectorized path with a footer read once, the Group path with
+  * `HadoopReadOptions` (plus decryption when keyed). Readers it nests
+  * (coordinate tombstones) get `conf` and make their own copy.
   * Latest-wins merge: files arrive ts-ascending; a hash map keyed by
   * the dim tuple keeps the last (newest) row [SURVEY §1.1].
   */
@@ -360,6 +429,8 @@ class GraftPartitionReader(
       * GraftArray.load's per-fragment fill). */
     evoFills: Map[String, Any] = Map.empty)
   extends PartitionReader[InternalRow] {
+
+  private val taskConf = GraftParquetReadShim.taskConf(conf)
 
   /** (readCols index, storage fill) for the columns `fileSchema`
     * lacks that declare fills. */
@@ -569,29 +640,27 @@ class GraftPartitionReader(
     * the decoded vector types) convert batch cells to the storage
     * domain readFileGroup produces, so merge/slab/tombstone logic and
     * predicate eval downstream are byte-identical. None → Group path
-    * (LIST column in the projection, INT96, or >2^31-row part file). */
-  private def readFileVectorized(file: String): Option[Iterator[Array[Any]]] = {
-    import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetReadShim, VectorizedParquetRecordReader}
-    val fr = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
-    val md = fr.getFooter
-    val fileSchema = md.getFileMetaData.getSchema
+    * (LIST column in the projection, or INT96). */
+  private def readFileVectorized(path: String): Option[Iterator[Array[Any]]] = {
+    val file = FooterRead(path, taskConf)
+    val fileSchema = file.schema
     val wanted = readCols.map(_.name).filter(fileSchema.containsField)
     val fillsForFile = evoFillIdx(fileSchema.containsField)
     val parquetFields = wanted.map(n =>
       fileSchema.getType(Array(n): _*))
-    val fileRows = md.getBlocks.asScala.map(_.getRowCount).sum
-    val vectorizable = wanted.nonEmpty && fileRows <= Int.MaxValue &&
+    val vectorizable = wanted.nonEmpty &&
       parquetFields.forall(t => t.isPrimitive &&
         t.asPrimitiveType().getPrimitiveTypeName != PrimitiveTypeName.INT96)
-    if (!vectorizable) { fr.close(); return None }
+    if (!vectorizable) { file.stream.close(); return None }
     GraftScanMetrics.vectorizedFiles.increment()
     val requested = new MessageType(fileSchema.getName, parquetFields: _*)
     val reader = new VectorizedParquetRecordReader(
       null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
-    // reader takes ownership of fr on success; until then it is ours
-    try GraftParquetReadShim.initVectorized(
-      reader, fileSchema, requested, fr, fileRows)
-    catch { case e: Throwable => fr.close(); throw e }
+    // reader takes ownership of the stream on success; until then it
+    // is ours
+    try GraftParquetReadShim.initVectorized(reader, taskConf,
+      file.input, file.stream, file.footer, requested)
+    catch { case e: Throwable => file.stream.close(); throw e }
     openReader = reader
     val batch = reader.resultBatch()
     val target: Array[Int] = wanted.map(colIdx).toArray
@@ -648,17 +717,13 @@ class GraftPartitionReader(
   }
 
   private def readFileGroup(file: String): Iterator[Array[Any]] = {
-    val inputFile = HadoopInputFile.fromPath(new Path(file), conf)
-    val reader = keyHex match {
-      case Some(k) => ParquetFileReader.open(inputFile,
-        org.apache.parquet.HadoopReadOptions
-          .builder(conf, new Path(file))
-          .withDecryption(org.apache.parquet.crypto.FileDecryptionProperties
-            .builder().withFooterKey(graft.core.EncryptionKeys.parse(k))
-            .build())
-          .build())
-      case None => ParquetFileReader.open(inputFile)
-    }
+    val path = new Path(file)
+    val options = org.apache.parquet.HadoopReadOptions.builder(taskConf, path)
+    keyHex.foreach(k => options.withDecryption(
+      org.apache.parquet.crypto.FileDecryptionProperties.builder()
+        .withFooterKey(graft.core.EncryptionKeys.parse(k)).build()))
+    val reader = ParquetFileReader.open(
+      HadoopInputFile.fromPath(path, taskConf), options.build())
     openReader = reader
     val fileSchema = reader.getFooter.getFileMetaData.getSchema
     val wanted = readCols.map(_.name).filter(fileSchema.containsField)

@@ -8,7 +8,6 @@ import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predica
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{EqualTo, Filter, In}
 import org.apache.spark.sql.types._
-import org.apache.spark.util.SerializableConfiguration
 import graft.core._
 import graft.core.RangeAlgebra.DimConstraint
 import graft.sources.FragmentPruning
@@ -1009,7 +1008,7 @@ class GraftScanImpl(
 
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(requiredStruct, schema.dimNames, preds,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
+      HadoopConfBroadcast(spark),
       // decryption key resolved driver-side from the session conf;
       // never persisted (ArraySchema.encrypted scaladoc)
       if (!schema.encrypted) None

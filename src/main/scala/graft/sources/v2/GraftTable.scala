@@ -11,6 +11,7 @@ import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.util.SerializableConfiguration
 import graft.core._
 import graft.sources.GraftArray
@@ -476,7 +477,7 @@ class GraftBatchWrite(
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =
     new GraftDataWriterFactory(uri, fragId, schema, writeSchema,
-      new SerializableConfiguration(spark.sparkContext.hadoopConfiguration),
+      HadoopConfBroadcast(spark),
       keyHex)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
@@ -503,13 +504,13 @@ class GraftBatchWrite(
 
 class GraftDataWriterFactory(
     uri: String, fragId: String, schema: ArraySchema,
-    writeSchema: StructType, conf: SerializableConfiguration,
+    writeSchema: StructType, conf: Broadcast[SerializableConfiguration],
     keyHex: Option[String] = None)
   extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long)
       : DataWriter[InternalRow] =
     new GraftDataWriter(uri, fragId, partitionId, schema, writeSchema,
-      conf.value, keyHex, taskId = taskId)
+      conf.value.value, keyHex, taskId = taskId)
 }
 
 /** Fragment writer: InternalRow → parquet via Spark's own
@@ -541,6 +542,8 @@ class GraftDataWriter(
   private val relFile =
     f"frag_$fragId/$filePrefix%s-$partitionId%05d-t$taskId%d.parquet"
   private val path = new Path(uri, relFile)
+  // a copy: taskConf is the broadcast value (in local[N], the driver's
+  // live configuration) and the write support configures this one
   private val conf = new org.apache.hadoop.conf.Configuration(taskConf)
 
   private class InternalRowWriterBuilder(

@@ -398,12 +398,8 @@ object EventPipeline {
         require(files.nonEmpty,
           s"parquetRows: no .parquet files under $path")
         val conf = spark.sessionState.newHadoopConf()
-        files.map { pf =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(pf.getPath), conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRecordCount finally r.close()
-        }.sum
+        files.map(pf => graft.core.ParquetStats.rowCount(
+          new org.apache.hadoop.fs.Path(pf.getPath), conf)).sum
       })
 
   /** Deterministic slice staging for the file-per-micro-batch stream
