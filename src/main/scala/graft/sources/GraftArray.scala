@@ -22,9 +22,10 @@ import graft.core._
   *    scan stays shuffle-free; only overlapping fragments pay a
   *    window-dedup — the 100 TB design is tile-aligned writes so
   *    overlap is rare (SURVEY §7.4.4).
-  *  - **dense fill values**: unwritten cells of a dense array's domain
-  *    materialize as fill values [ha_mytile.cc:1088–1164], via a
-  *    generated coordinate grid left-joined to written cells.
+  *  - **dense fill values**: unwritten cells of a bounded dense
+  *    array's domain materialize as fill values [ha_mytile.cc:1088–1164]
+  *    in the DSv2 scan's fill partitions (`GraftFillPartitionReader`);
+  *    `load` returns written cells only.
   */
 object GraftArray {
 
@@ -392,13 +393,10 @@ object GraftArray {
     *
     * @param asOf   time-travel timestamp (millis); fragments committed
     *               after it are invisible [open_at semantics]
-    * @param materializeFills dense arrays: generate unwritten cells of
-    *               the bounded domain with attribute fill values
     * @param since  window start (millis, inclusive) — incremental view
     *               of fragments committed in `[since, asOf]`
     */
   def load(spark: SparkSession, uri: String, asOf: Option[Long] = None,
-      materializeFills: Boolean = false,
       since: Option[Long] = None): DataFrame = {
     val st = store(spark, uri)
     val schema = st.loadSchema(asOf)
@@ -412,14 +410,11 @@ object GraftArray {
       var r = spark.read.format("graftarray").option("path", uri)
       asOf.foreach(t => r = r.option("asOfTimestamp", t.toString))
       since.foreach(t => r = r.option("sinceTimestamp", t.toString))
-      if (!materializeFills && schema.kind == ArrayKind.Dense)
+      if (schema.kind == ArrayKind.Dense)
         r = r.option("graft.internal.raw_cells", "true")
       return r.load()
     }
-    val deduped = mergedView(spark, uri, schema, frags)
-    if (materializeFills && schema.kind == ArrayKind.Dense)
-      materializeDense(spark, schema, deduped)
-    else deduped
+    mergedView(spark, uri, schema, frags)
   }
 
   /** Latest-wins merged view of an explicit fragment set (the
@@ -820,38 +815,6 @@ object GraftArray {
   def putMetadata(spark: SparkSession, uri: String,
       kv: Map[String, String]): Unit =
     store(spark, uri).putMetadata(kv, now())
-
-  /** Dense-domain fill materialization: bounded integral dims →
-    * generated grid left-joined with written cells; unwritten cells get
-    * attribute fill values. Grid generation is `spark.range`-based on
-    * the first dim (partitioned, scales linearly) × sequence-explode on
-    * the rest. */
-  private def materializeDense(spark: SparkSession, schema: ArraySchema,
-      cells: DataFrame): DataFrame = {
-    val bounded = schema.dims.forall(d =>
-      d.lowerBound.isDefined && d.upperBound.isDefined &&
-        TypedValue.isIntegral(d.dataType))
-    require(bounded, "materializeFills requires bounded integral dims")
-    val d0 = schema.dims.head
-    var grid: DataFrame = spark.range(
-      d0.lowerBound.get.toLong, d0.upperBound.get.toLong + 1)
-      .select(col("id").cast(d0.dataType).as(d0.name))
-    schema.dims.tail.foreach { d =>
-      grid = grid
-        .withColumn(d.name, explode(sequence(lit(d.lowerBound.get.toLong),
-          lit(d.upperBound.get.toLong))))
-        .withColumn(d.name, col(d.name).cast(d.dataType))
-    }
-    val joined = grid.join(cells, schema.dimNames, "left")
-    schema.attrs.foldLeft(joined) { (df, a) =>
-      a.fillValue match {
-        case Some(fv) => df.withColumn(a.name,
-          coalesce(col(a.name),
-            lit(TypedValue.parse(a.dataType, fv)).cast(a.dataType)))
-        case None => df
-      }
-    }
-  }
 
   // ---- helpers ------------------------------------------------------
 

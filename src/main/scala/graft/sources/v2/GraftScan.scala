@@ -6,11 +6,7 @@ import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.SeekableInputStream
-import org.apache.parquet.example.data.Group
-import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.schema.{GroupType, MessageType, PrimitiveType}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
@@ -21,7 +17,7 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
-import graft.core.{ParquetStats, TypedValue}
+import graft.core.{EncryptionKeys, TypedValue}
 import graft.sources.v2.PredicateSupport.Pred
 import scala.jdk.CollectionConverters._
 
@@ -123,8 +119,8 @@ case class GraftFillPartition(
   *
   * One broadcast serves every factory while the conf's entries stay the
   * same: serializing the conf costs about 10 ms of driver CPU (every
-  * entry's source list is gzipped on its own), and a query builds its
-  * reader factory twice, besides one per micro-batch and write job.
+  * entry's source list is gzipped on its own), and every scan,
+  * micro-batch and write job builds a factory.
   * Any change to an entry, or a new SparkContext, makes a fresh
   * broadcast. */
 object HadoopConfBroadcast {
@@ -151,22 +147,47 @@ object HadoopConfBroadcast {
 
 /** A fragment file whose footer was read once, with read options built
   * from the task's conf, and the open stream it was read from — handed
-  * on to the vectorized reader, which takes ownership of the stream. */
+  * on to the vectorized reader, which takes ownership of the stream.
+  * With a key, the options carry the footer key: the footer comes back
+  * holding the file's decryptor, and the vectorized reader decrypts
+  * column chunks through it. */
 private[v2] final case class FooterRead(
     input: HadoopInputFile, stream: SeekableInputStream,
     footer: ParquetMetadata) {
-  def schema: org.apache.parquet.schema.MessageType =
-    footer.getFileMetaData.getSchema
+  def schema: MessageType = footer.getFileMetaData.getSchema
   def rows: Long = footer.getBlocks.asScala.map(_.getRowCount).sum
+
+  /** A vectorized reader over the top-level fields `names` of this
+    * file, in that order, initialized with `taskConf`; it takes
+    * ownership of the stream, which is closed here if initialization
+    * fails. */
+  def vectorized(taskConf: org.apache.hadoop.mapred.JobConf,
+      names: Seq[String]): VectorizedParquetRecordReader = {
+    val reader = new VectorizedParquetRecordReader(
+      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, FooterRead.BatchRows)
+    try GraftParquetReadShim.initVectorized(reader, taskConf, input, stream,
+      footer, new MessageType(schema.getName,
+        names.map(n => schema.getType(Array(n): _*)): _*))
+    catch { case e: Throwable => stream.close(); throw e }
+    reader
+  }
 }
 
 private[v2] object FooterRead {
-  def apply(file: String, conf: Configuration): FooterRead = {
+  /** Rows per vectorized batch. */
+  val BatchRows = 4096
+
+  def apply(file: String, conf: Configuration,
+      keyHex: Option[String]): FooterRead = {
     val path = new Path(file)
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf, path)
+    keyHex.foreach(k => options.withDecryption(
+      org.apache.parquet.crypto.FileDecryptionProperties.builder()
+        .withFooterKey(EncryptionKeys.parse(k)).build()))
     val input = HadoopInputFile.fromPath(path, conf)
     val stream = input.newStream()
-    try FooterRead(input, stream, ParquetFileReader.readFooter(
-      input, ParquetStats.readOptions(conf, path), stream))
+    try FooterRead(input, stream,
+      ParquetFileReader.readFooter(input, options.build(), stream))
     catch { case e: Throwable => stream.close(); throw e }
   }
 }
@@ -216,30 +237,32 @@ class GraftReaderFactory(
     }
 
   /** All-or-nothing per scan; see `columnar` above. When true, EVERY
-    * planned partition is a simple local-file partition (no latest-wins
-    * merge, no slab/hash ownership, no fill, no decryption) with
-    * atomic column types, and streams ColumnarBatches through Spark's
-    * vectorized parquet reader — several× faster than the row-at-a-time
-    * Group path, which remains only where per-row merge logic is
-    * genuinely needed. Pushed predicates are re-applied by Spark's
-    * codegen Filter (pushPredicates returns everything as residual),
-    * so the columnar path needs no row filtering. */
+    * planned partition is a simple file partition (no latest-wins
+    * merge, no slab/hash ownership, no fill) with vectorizable column
+    * types, and streams Spark's vectorized parquet reader's
+    * ColumnarBatches straight through; otherwise the row reader decodes
+    * through the same vectorized reader and merges per row. Pushed
+    * predicates are re-applied by Spark's codegen Filter
+    * (pushPredicates returns everything as residual), so the columnar
+    * path needs no row filtering. */
   override def supportColumnarReads(p: InputPartition): Boolean = columnar
 
   override def createColumnarReader(p: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new GraftColumnarPartitionReader(
-      p.asInstanceOf[GraftInputPartition], readSchema, conf.value.value, metaCols,
-      evoFills)
+      p.asInstanceOf[GraftInputPartition], readSchema, conf.value.value, keyHex,
+      metaCols, evoFills)
 }
 
 object GraftColumnarPartitionReader {
-  /** Types the vectorized fast path handles (everything the fragment
-    * writer emits except LIST columns, which stay on the row path). */
+  /** Types the columnar scan hands to Spark as its vectorized reader
+    * decodes them: every type the fragment writer emits, LIST columns
+    * (multi-value attributes) of such types included. */
   def supported(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType | FloatType |
          DoubleType | BooleanType | StringType | BinaryType | DateType |
          TimestampType | _: DecimalType => true
+    case ArrayType(e, _) => supported(e)
     case _ => false
   }
 }
@@ -252,13 +275,15 @@ object GraftColumnarPartitionReader {
   * options built from that copy, and initializes the vectorized reader
   * with the same copy, footer and stream — no per-file default
   * configuration, and any Hadoop filesystem works, not just `file:`.
+  * Encrypted files decrypt with `keyHex` (see FooterRead).
   * Columns are permuted to the requested order; columns a file
-  * predates (schema evolution) surface as all-null constant vectors —
-  * same semantics as the row path. */
+  * predates (schema evolution) surface as fill or all-null constant
+  * vectors — same semantics as the row path. */
 class GraftColumnarPartitionReader(
     part: GraftInputPartition,
     readSchema: StructType,
     conf: Configuration,
+    keyHex: Option[String] = None,
     metaCols: Set[String] = Set.empty,
     /** storage-domain fill per evolved attr declaring one — applied
       * ONLY to files that physically lack the column (same semantics
@@ -269,7 +294,6 @@ class GraftColumnarPartitionReader(
   import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-  private val Capacity = 4096
   private val taskConf = GraftParquetReadShim.taskConf(conf)
   private val files = part.files.iterator // (path, fragment ts)
   private var reader: VectorizedParquetRecordReader = _
@@ -293,7 +317,7 @@ class GraftColumnarPartitionReader(
     * the column), or null. */
   private def constFor(f: StructField, path: String,
       ts: Long): ConstantColumnVector = {
-    val c = new ConstantColumnVector(Capacity, f.dataType)
+    val c = new ConstantColumnVector(FooterRead.BatchRows, f.dataType)
     f.name match {
       case GraftMetaCols.FragId if metaCols.contains(f.name) =>
         c.setUtf8String(UTF8String.fromString(GraftMetaCols.fragIdOf(path)))
@@ -322,7 +346,7 @@ class GraftColumnarPartitionReader(
     if (!files.hasNext) false
     else {
       val (path, fragTs) = files.next()
-      val file = FooterRead(path, taskConf)
+      val file = FooterRead(path, taskConf, keyHex)
       val fileSchema = file.schema
       val fileFields = fileSchema.getFields.asScala.map(_.getName).toSet
       val wanted = readSchema.fields.filter(f => fileFields.contains(f.name))
@@ -335,22 +359,15 @@ class GraftColumnarPartitionReader(
         out = new ColumnarBatch(cs.toArray[ColumnVector])
         true
       } else {
-        reader = new VectorizedParquetRecordReader(
-          null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, Capacity)
-        val byName = fileSchema.getFields.asScala.map(t => t.getName -> t).toMap
-        val requested = new org.apache.parquet.schema.MessageType(
-          fileSchema.getName, wanted.map(f => byName(f.name)): _*)
-        // hands the stream to the vectorized reader (closes it); until
-        // that succeeds the stream is still ours to close
-        try GraftParquetReadShim.initVectorized(reader, taskConf,
-          file.input, file.stream, file.footer, requested)
-        catch { case e: Throwable => file.stream.close(); reader = null; throw e }
+        reader = file.vectorized(taskConf, wanted.map(_.name))
         inner = reader.resultBatch()
         val vectors: Array[ColumnVector] = readSchema.fields.map { f =>
           val i = wanted.indexWhere(_.name == f.name)
           if (i >= 0) {
             val v = inner.column(i)
-            require(v.dataType() == f.dataType,
+            // a LIST column's element nullability is the writing
+            // frame's, not the schema's
+            require(DataType.equalsIgnoreNullability(v.dataType(), f.dataType),
               s"columnar type mismatch for ${f.name}: " +
                 s"file ${v.dataType()} vs schema ${f.dataType}")
             v
@@ -364,7 +381,7 @@ class GraftColumnarPartitionReader(
   override def next(): Boolean = {
     while (true) {
       if (pendingNullRows > 0) {
-        out.setNumRows(math.min(pendingNullRows, Capacity.toLong).toInt)
+        out.setNumRows(math.min(pendingNullRows, FooterRead.BatchRows.toLong).toInt)
         pendingNullRows -= out.numRows()
         return true
       }
@@ -387,29 +404,17 @@ class GraftColumnarPartitionReader(
   override def close(): Unit = closeCurrent()
 }
 
-/** Per-reader decode-path counters, exposed for plan/path assertions
-  * in specs (which run in-process on local[n]). Cheap LongAdders —
-  * incremented once per FILE, not per row. */
-object GraftScanMetrics {
-  val vectorizedFiles = new java.util.concurrent.atomic.LongAdder
-  val groupFiles = new java.util.concurrent.atomic.LongAdder
-  def reset(): Unit = { vectorizedFiles.reset(); groupFiles.reset() }
-}
-
-/** Row-path reader over fragment parquet. Decoding is vectorized:
-  * each file streams through Spark's VectorizedParquetRecordReader
-  * (page-level columnar decode) and batch rows are surfaced as
-  * storage-domain value arrays — the same contract the old Group
-  * decode had, so all merge machinery downstream is untouched, at a
-  * fraction of the per-row cost. The parquet-hadoop Group API remains
-  * only as the fallback for what the vectorized reader cannot decode
-  * (LIST columns in the projection, encrypted files).
+/** Row reader over fragment parquet, for scans the columnar reader
+  * cannot serve (merge, slab, hash, limit, tombstone and fill
+  * partitions). Each file streams through Spark's
+  * VectorizedParquetRecordReader, the one decoder both readers share,
+  * and batch rows are surfaced as storage-domain value arrays for the
+  * merge machinery downstream.
   * `conf` is the scan's Hadoop configuration and is only read: the
   * reader copies it once into a task conf (GraftParquetReadShim.taskConf)
-  * and opens every file with read options built from that copy — the
-  * vectorized path with a footer read once, the Group path with
-  * `HadoopReadOptions` (plus decryption when keyed). Readers it nests
-  * (coordinate tombstones) get `conf` and make their own copy.
+  * and reads every footer once with read options built from that copy
+  * (plus decryption when keyed). Readers it nests (coordinate
+  * tombstones) get `conf` and make their own copy.
   * Latest-wins merge: files arrive ts-ascending; a hash map keyed by
   * the dim tuple keeps the last (newest) row [SURVEY §1.1].
   */
@@ -625,42 +630,36 @@ class GraftPartitionReader(
     case (other, _) => other
   }
 
-  /** Stream one parquet file as storage-domain value arrays aligned to
-    * `readCols`; columns missing from the file (schema evolution) are
-    * null. Vectorized decode unless the file is encrypted or the
-    * projection needs a LIST column. */
-  private def readFile(file: String): Iterator[Array[Any]] =
-    (if (keyHex.isEmpty) readFileVectorized(file) else None).getOrElse {
-      GraftScanMetrics.groupFiles.increment()
-      readFileGroup(file)
-    }
-
-  /** Vectorized decode of one file: Spark's VectorizedParquetRecordReader
-    * streams ColumnarBatches; per-column extractors (dispatched once on
-    * the decoded vector types) convert batch cells to the storage
-    * domain readFileGroup produces, so merge/slab/tombstone logic and
-    * predicate eval downstream are byte-identical. None → Group path
-    * (LIST column in the projection, or INT96). */
-  private def readFileVectorized(path: String): Option[Iterator[Array[Any]]] = {
-    val file = FooterRead(path, taskConf)
+  /** Stream one parquet file through Spark's vectorized reader as
+    * storage-domain value arrays aligned to `readCols`: per-column
+    * extractors (dispatched once on the decoded vector types) convert
+    * batch cells, so merge/slab/tombstone logic and predicate eval
+    * downstream see one value domain. Columns missing from the file
+    * (schema evolution) carry their fill or null; a file holding none
+    * of `readCols` yields its footer row count of such rows. */
+  private def readFile(path: String): Iterator[Array[Any]] = {
+    val file = FooterRead(path, taskConf, keyHex)
     val fileSchema = file.schema
     val wanted = readCols.map(_.name).filter(fileSchema.containsField)
     val fillsForFile = evoFillIdx(fileSchema.containsField)
-    val parquetFields = wanted.map(n =>
-      fileSchema.getType(Array(n): _*))
-    val vectorizable = wanted.nonEmpty &&
-      parquetFields.forall(t => t.isPrimitive &&
-        t.asPrimitiveType().getPrimitiveTypeName != PrimitiveTypeName.INT96)
-    if (!vectorizable) { file.stream.close(); return None }
-    GraftScanMetrics.vectorizedFiles.increment()
-    val requested = new MessageType(fileSchema.getName, parquetFields: _*)
-    val reader = new VectorizedParquetRecordReader(
-      null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 4096)
-    // reader takes ownership of the stream on success; until then it
-    // is ours
-    try GraftParquetReadShim.initVectorized(reader, taskConf,
-      file.input, file.stream, file.footer, requested)
-    catch { case e: Throwable => file.stream.close(); throw e }
+    def blank(): Array[Any] = {
+      val out = new Array[Any](readCols.size)
+      fillsForFile.foreach { case (fi, fv) => out(fi) = fv }
+      out
+    }
+    if (wanted.isEmpty) {
+      file.stream.close()
+      return new Iterator[Array[Any]] {
+        private var left = file.rows
+        override def hasNext: Boolean = left > 0
+        override def next(): Array[Any] = {
+          if (!hasNext) throw new NoSuchElementException
+          left -= 1
+          blank()
+        }
+      }
+    }
+    val reader = file.vectorized(taskConf, wanted)
     openReader = reader
     val batch = reader.resultBatch()
     val target: Array[Int] = wanted.map(colIdx).toArray
@@ -681,8 +680,8 @@ class GraftPartitionReader(
         case StringType =>
           i => if (v.isNullAt(i)) null else v.getUTF8String(i).toString
         case BinaryType => targetType match {
-          // mirror the Group path: unannotated binary read into a
-          // string/untyped slot surfaces as UTF-8 text
+          // unannotated binary read into a string/untyped slot
+          // surfaces as UTF-8 text
           case StringType | NullType => i =>
             if (v.isNullAt(i)) null
             else new String(v.getBinary(i), java.nio.charset.StandardCharsets.UTF_8)
@@ -690,11 +689,14 @@ class GraftPartitionReader(
         }
         case dt: DecimalType =>
           i => if (v.isNullAt(i)) null else v.getDecimal(i, dt.precision, dt.scale)
+        // multi-value attribute: catalyst ArrayData, copied out of the
+        // reused batch (never referenced by pushed predicates)
+        case _: ArrayType => i => if (v.isNullAt(i)) null else v.getArray(i).copy()
         case other => throw new UnsupportedOperationException(
           s"vectorized extractor for $other")
       }
     }
-    Some(new Iterator[Array[Any]] {
+    new Iterator[Array[Any]] {
       private var rows = 0
       private var i = 0
       private var done = false
@@ -706,154 +708,13 @@ class GraftPartitionReader(
       override def hasNext: Boolean = { advance(); !done }
       override def next(): Array[Any] = {
         if (!hasNext) throw new NoSuchElementException
-        val out = new Array[Any](readCols.size)
+        val out = blank()
         var c = 0
         while (c < target.length) { out(target(c)) = extract(c)(i); c += 1 }
-        fillsForFile.foreach { case (fi, fv) => out(fi) = fv }
         i += 1
         out
       }
-    })
-  }
-
-  private def readFileGroup(file: String): Iterator[Array[Any]] = {
-    val path = new Path(file)
-    val options = org.apache.parquet.HadoopReadOptions.builder(taskConf, path)
-    keyHex.foreach(k => options.withDecryption(
-      org.apache.parquet.crypto.FileDecryptionProperties.builder()
-        .withFooterKey(graft.core.EncryptionKeys.parse(k)).build()))
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(path, taskConf), options.build())
-    openReader = reader
-    val fileSchema = reader.getFooter.getFileMetaData.getSchema
-    val wanted = readCols.map(_.name).filter(fileSchema.containsField)
-    val fillsForFile = evoFillIdx(fileSchema.containsField)
-    val fieldByName = fileSchema.getFields.asScala
-      .map(t => t.getName -> t).toMap
-    val requested = new MessageType("requested",
-      wanted.map(fieldByName): _*)
-    reader.setRequestedSchema(requested)
-
-    new Iterator[Array[Any]] {
-      private var pages = reader.readNextRowGroup()
-      private var recordReader =
-        if (pages == null) null
-        else new ColumnIOFactory().getColumnIO(requested)
-          .getRecordReader(pages, new GroupRecordConverter(requested))
-      private var remaining = if (pages == null) 0L else pages.getRowCount
-      advanceIfNeeded()
-
-      private def advanceIfNeeded(): Unit = {
-        while (remaining == 0L && pages != null) {
-          pages = reader.readNextRowGroup()
-          if (pages == null) {
-            recordReader = null; reader.close(); openReader = null
-          }
-          else {
-            recordReader = new ColumnIOFactory().getColumnIO(requested)
-              .getRecordReader(pages, new GroupRecordConverter(requested))
-            remaining = pages.getRowCount
-          }
-        }
-        if (pages == null && recordReader == null && remaining == 0L) ()
-      }
-
-      override def hasNext: Boolean = remaining > 0L
-
-      override def next(): Array[Any] = {
-        val g = recordReader.read()
-        remaining -= 1
-        if (remaining == 0L) advanceIfNeeded()
-        val row = decode(g)
-        fillsForFile.foreach { case (fi, fv) => row(fi) = fv }
-        row
-      }
     }
-  }
-
-  private def decode(g: Group): Array[Any] = {
-    val out = new Array[Any](readCols.size)
-    var w = 0
-    val gt: GroupType = g.getType
-    while (w < gt.getFieldCount) {
-      val name = gt.getFieldName(w)
-      val target = colIdx(name)
-      out(target) =
-        if (g.getFieldRepetitionCount(w) == 0) null
-        else if (!gt.getType(w).isPrimitive)
-          decodeList(g.getGroup(w, 0), readCols(target).dataType)
-        else gt.getType(w).asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT32 =>
-            gt.getType(w).getLogicalTypeAnnotation match {
-              // Spark's standard layout stores precision ≤ 9 decimals
-              // as INT32 — surface them as Decimal, not a bare long
-              case d: org.apache.parquet.schema.LogicalTypeAnnotation
-                  .DecimalLogicalTypeAnnotation =>
-                org.apache.spark.sql.types.Decimal(
-                  g.getInteger(w, 0).toLong, d.getPrecision, d.getScale)
-              case _ => g.getInteger(w, 0).toLong
-            }
-          case PrimitiveTypeName.INT64 =>
-            gt.getType(w).getLogicalTypeAnnotation match {
-              case d: org.apache.parquet.schema.LogicalTypeAnnotation
-                  .DecimalLogicalTypeAnnotation =>
-                org.apache.spark.sql.types.Decimal(
-                  g.getLong(w, 0), d.getPrecision, d.getScale)
-              case _ => g.getLong(w, 0)
-            }
-          case PrimitiveTypeName.FLOAT => g.getFloat(w, 0).toDouble
-          case PrimitiveTypeName.DOUBLE => g.getDouble(w, 0)
-          case PrimitiveTypeName.BOOLEAN => g.getBoolean(w, 0)
-          case PrimitiveTypeName.BINARY |
-               PrimitiveTypeName.FIXED_LEN_BYTE_ARRAY =>
-            readCols(target).dataType match {
-              case StringType | NullType => g.getBinary(w, 0).toStringUsingUTF8
-              case dt: org.apache.spark.sql.types.DecimalType =>
-                // wide decimal: fixed-width two's-complement unscaled
-                org.apache.spark.sql.types.Decimal(
-                  new java.math.BigDecimal(
-                    new java.math.BigInteger(g.getBinary(w, 0).getBytes),
-                    dt.scale), dt.precision, dt.scale)
-              case _ => g.getBinary(w, 0).getBytes
-            }
-          case PrimitiveTypeName.INT96 =>
-            throw new UnsupportedOperationException(
-              "INT96 timestamps not supported; write with TIMESTAMP_MICROS")
-        }
-      w += 1
-    }
-    out
-  }
-
-  /** parquet 3-level LIST group → catalyst ArrayData (multi-value
-    * attributes; never referenced by pushed predicates). */
-  private def decodeList(listGroup: Group, dt: DataType): Any = {
-    val elemType = dt match {
-      case ArrayType(e, _) => e
-      case _ => NullType
-    }
-    val n = listGroup.getFieldRepetitionCount(0)
-    val out = new Array[Any](n)
-    var k = 0
-    while (k < n) {
-      val el = listGroup.getGroup(0, k)
-      out(k) =
-        if (el.getFieldRepetitionCount(0) == 0) null
-        else el.getType.getType(0).asPrimitiveType().getPrimitiveTypeName match {
-          case PrimitiveTypeName.INT32 => el.getInteger(0, 0)
-          case PrimitiveTypeName.INT64 => el.getLong(0, 0)
-          case PrimitiveTypeName.FLOAT =>
-            if (elemType == DoubleType) el.getFloat(0, 0).toDouble
-            else el.getFloat(0, 0)
-          case PrimitiveTypeName.DOUBLE => el.getDouble(0, 0)
-          case PrimitiveTypeName.BOOLEAN => el.getBoolean(0, 0)
-          case PrimitiveTypeName.BINARY =>
-            UTF8String.fromString(el.getBinary(0, 0).toStringUsingUTF8)
-          case other => throw new UnsupportedOperationException(s"$other")
-        }
-      k += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 }
 

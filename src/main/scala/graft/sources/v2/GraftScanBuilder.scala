@@ -991,12 +991,12 @@ class GraftScanImpl(
     * row-based and columnar partitions, so the decision is made ONCE
     * here over the full planned partition set and passed to the
     * factory as a constant — columnar only when EVERY partition is a
-    * simple local-file partition (no merge/slab/hash/limit/fill/
-    * decryption) with vectorizable column types. Runtime filters only
+    * simple local-file partition (no merge/slab/hash/limit/fill)
+    * with vectorizable column types. Runtime filters only
     * ever REMOVE fragments, which cannot introduce merge partitions
     * into an overlap-free plan, so a true decision stays valid. */
   private def columnarEligible: Boolean =
-    !schema.encrypted && !denseFillable && tombstones.isEmpty &&
+    !denseFillable && tombstones.isEmpty &&
       requiredStruct.fields.forall(f =>
         GraftColumnarPartitionReader.supported(f.dataType)) &&
       planAll().forall {
@@ -1006,7 +1006,18 @@ class GraftScanImpl(
         case _ => false
       }
 
-  override def createReaderFactory(): PartitionReaderFactory =
+  // reader-factory cache: every copy of the scan's exec node asks for
+  // the factory, and its columnar decision, metadata columns and
+  // tombstones depend only on the runtime-filter state (invalidated
+  // in filter(), alongside plannedCache)
+  private var factoryCache: PartitionReaderFactory = _
+
+  override def createReaderFactory(): PartitionReaderFactory = {
+    if (factoryCache == null) factoryCache = buildReaderFactory()
+    factoryCache
+  }
+
+  private def buildReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(requiredStruct, schema.dimNames, preds,
       HadoopConfBroadcast(spark),
       // decryption key resolved driver-side from the session conf;
@@ -1073,6 +1084,7 @@ class GraftScanImpl(
   override def filter(filters: Array[Filter]): Unit = {
     // runtime filters narrow the partition/fragment sets
     plannedCache = null; selectedCache = null; tombstoneCache = null
+    factoryCache = null
     runtimeNarrowed = true
     filters.foreach(applyRuntime)
   }

@@ -33,6 +33,11 @@ class EncryptionSpec extends SparkSpec {
     val got = spark.table(s"$cat.e").orderBy("k")
       .as[(Long, Double, String)].collect().toSeq
     assert(got == Seq((1L, 1.5, "alpha"), (2L, 2.5, "beta")))
+    // decryption rides the vectorized reader: the scan is columnar
+    val scan = spark.table(s"$cat.e").queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.head
+    assert(scan.supportsColumnar, "an encrypted scan should be columnar")
     // wrong key → decryption failure at read time
     spark.conf.set(EncryptionKeys.ConfKey, WrongKey)
     val e1 = intercept[Exception] {

@@ -740,7 +740,6 @@ class ScanPlanningSpec extends SparkSpec {
   }
 
   test("latest-wins merge path decodes files vectorized, not via Groups") {
-    import graft.sources.v2.GraftScanMetrics
     val uri = tmp()
     GraftArray.create(spark, uri, sch)
     // overlapping fragments → slab-merge partitions on the row path
@@ -752,19 +751,14 @@ class ScanPlanningSpec extends SparkSpec {
     val scan = df.queryExecution.executedPlan.collect {
       case b: BatchScanExec => b }.head
     assert(!scan.supportsColumnar, "merge plan reports row-based to Spark")
-    GraftScanMetrics.reset()
-    // merged result stays exact AND every file decoded vectorized
+    // merged result stays exact through the row reader's vectorized
+    // decode (the only decoder there is)
     assert(df.count() == 2000)
     assert(df.agg(min("v"), max("v")).as[(Double, Double)].head() ==
       ((2.0, 2.0)))
-    assert(GraftScanMetrics.vectorizedFiles.sum() > 0,
-      "merge partitions did not use the vectorized decoder")
-    assert(GraftScanMetrics.groupFiles.sum() == 0,
-      "merge partitions fell back to the Group reader")
   }
 
-  test("LIST columns in the projection fall back to the Group decoder") {
-    import graft.sources.v2.GraftScanMetrics
+  test("LIST columns in the projection scan columnar; merges still read row-based") {
     val uri = tmp()
     GraftArray.create(spark, uri, ArraySchema(ArrayKind.Sparse,
       Seq(DimensionSpec("k", LongType)),
@@ -772,24 +766,47 @@ class ScanPlanningSpec extends SparkSpec {
     GraftArray.write(spark, uri, spark.range(0, 100)
       .select(col("id").as("k"),
         array(col("id").cast("float"), lit(1.0f)).as("emb")))
-    val df = spark.read.format("graftarray").option("path", uri).load()
-    GraftScanMetrics.reset()
-    assert(df.select("emb").count() == 100)
-    assert(df.selectExpr("aggregate(emb, 0D, (a, x) -> a + x)")
-      .as[Double].collect().sum > 0)
-    assert(GraftScanMetrics.groupFiles.sum() > 0,
-      "LIST projection should use the Group decoder")
-    // but pruning the LIST column away re-enables vectorized decode
-    // (disjoint single fragment scans columnar; force the row path
-    // with a second overlapping fragment)
+    def load() = spark.read.format("graftarray").option("path", uri).load()
+    def scanOf(df: org.apache.spark.sql.DataFrame): BatchScanExec =
+      df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }.head
+    val embs = load().select("k", "emb")
+    assert(scanOf(embs).supportsColumnar,
+      "a disjoint LIST projection should scan columnar")
+    val want = (0L until 100L).map(k => (k, Seq(k.toFloat, 1.0f)))
+    assert(embs.as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq == want)
+    assert(load().selectExpr("aggregate(emb, 0D, (a, x) -> a + x)")
+      .as[Double].collect().sum == (0 until 100).map(_ + 1.0).sum)
+    // an overlapping second fragment forces latest-wins merge slabs:
+    // the LIST projection reads row-based and the newer version wins
+    GraftArray.write(spark, uri, spark.range(50, 100)
+      .select(col("id").as("k"), array(lit(9.0f), lit(9.0f)).as("emb")))
+    val merged = load().select("k", "emb")
+    assert(!scanOf(merged).supportsColumnar, "merge plan reports row-based")
+    assert(merged.as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq ==
+      want.take(50) ++ (50L until 100L).map(k => (k, Seq(9.0f, 9.0f))))
+    assert(load().select("k").count() == 100)
+  }
+
+  test("one reader factory per scan until a runtime filter narrows it") {
+    val uri = tmp()
+    GraftArray.create(spark, uri, sch)
     GraftArray.write(spark, uri, spark.range(0, 100)
-      .select(col("id").as("k"),
-        array(lit(9.0f), lit(9.0f)).as("emb")))
-    val df2 = spark.read.format("graftarray").option("path", uri).load()
-    GraftScanMetrics.reset()
-    assert(df2.select("k").count() == 100)
-    assert(GraftScanMetrics.vectorizedFiles.sum() > 0,
-      "dim-only projection of merge scan should decode vectorized")
+      .select(col("id").as("k"), col("id").cast("double").as("v")))
+    val df = spark.read.format("graftarray").option("path", uri).load()
+      .filter(col("v") >= 10.0)
+    assert(df.count() == 90)
+    val execs = (df.queryExecution.sparkPlan.collect { case b: BatchScanExec => b } ++
+      df.queryExecution.executedPlan.collect { case b: BatchScanExec => b })
+    val scan = execs.head.scan.asInstanceOf[graft.sources.v2.GraftScanImpl]
+    val first = scan.toBatch.createReaderFactory()
+    assert(scan.toBatch.createReaderFactory() eq first)
+    // every copy of the exec node holds the scan's one factory
+    assert(execs.forall(_.readerFactory eq first))
+    scan.filter(Array[org.apache.spark.sql.sources.Filter](
+      org.apache.spark.sql.sources.GreaterThan("k", 50L)))
+    val narrowed = scan.toBatch.createReaderFactory()
+    assert(narrowed ne first)
+    assert(scan.toBatch.createReaderFactory() eq narrowed)
   }
 
   test("clustered scans report output ordering: redundant sorts elided") {

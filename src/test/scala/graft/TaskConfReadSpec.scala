@@ -174,14 +174,11 @@ class TaskConfReadSpec extends SparkSpec {
     val df = spark.read.format("graftarray").option("path", uri).load()
       .select("k", "v", "s", "w")
 
-    // merge partition over all four files, row reader, vectorized decode
+    // merge partition over all four files through the row reader
     val mergeFactory = scanOf(df).readerFactory
-    GraftScanMetrics.reset()
     val merged = read(mergeFactory, GraftInputPartition(all, needDedup = true),
       columnar = false)
     assert(merged == (0L until 300L).map(want))
-    assert(GraftScanMetrics.vectorizedFiles.sum() == 4 &&
-      GraftScanMetrics.groupFiles.sum() == 0)
     assert(df.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getString(2), if (r.isNullAt(3)) null else Long.box(r.getLong(3))))
       .sortBy(_._1).toSeq == (0L until 300L).map(want))
