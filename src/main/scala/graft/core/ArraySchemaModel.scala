@@ -43,6 +43,15 @@ case class DimensionSpec(
 /** Session-supplied AES keys for parquet modular encryption. */
 object EncryptionKeys {
   val ConfKey = "spark.graft.encryption.key"
+  /** The session's key for an array: None when it is not encrypted,
+    * else the hex key from the session conf, which must be set. Resolved
+    * on the driver and shipped to tasks; never persisted. */
+  def sessionKey(spark: org.apache.spark.sql.SparkSession,
+      schema: ArraySchema): Option[String] =
+    if (!schema.encrypted) None
+    else Some(spark.conf.getOption(ConfKey).getOrElse(
+      throw new IllegalArgumentException(
+        s"array is encrypted; set $ConfKey")))
   /** Hex → raw bytes; AES accepts 16/24/32-byte keys. */
   def parse(hex: String): Array[Byte] = {
     require(Set(32, 48, 64).contains(hex.length) &&
@@ -143,6 +152,11 @@ case class ArraySchema(
       val declared = attrs.flatMap(_.codec).distinct
       if (declared.size == 1) Some(declared.head) else None
     }.getOrElse("SNAPPY")
+
+  /** Declared fill per attribute that has one, parsed once into the
+    * manifest value domain ([[TypedValue.parse]]). */
+  def fills: Map[String, Any] = attrs.flatMap(a =>
+    a.fillValue.map(a.name -> TypedValue.parse(a.dataType, _))).toMap
 
   def dataTypeOf(name: String): DataType =
     dims.find(_.name == name).map(_.dataType)

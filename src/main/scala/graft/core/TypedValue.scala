@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** String⇄typed-value codec + ordering for dimension/attribute values as
   * they appear in manifests (bounds, MBRs, fill values) and pushdown
@@ -39,6 +40,25 @@ object TypedValue {
     case BooleanType => s.toBoolean
     case StringType => s
     case _ => s
+  }
+
+  /** Storage-domain value → Catalyst value of type `dt`, for every
+    * reader: decoded cells and manifest values (fills, aggregate
+    * results) alike. Integral values narrow from Long, DATE from epoch
+    * days and FLOAT from Double; a manifest decimal is its unscaled
+    * Long at the column's scale and a manifest binary is base64 text
+    * (see [[parse]] and [[show]]). Decoded decimals, bytes, arrays and
+    * Long/Double/Boolean cells of their own width pass through. */
+  def toCatalyst(dt: DataType, v: Any): Any = (dt, v) match {
+    case (_, null) => null
+    case (ByteType, l: Long) => l.toByte
+    case (ShortType, l: Long) => l.toShort
+    case (IntegerType | DateType, l: Long) => l.toInt
+    case (FloatType, d: Double) => d.toFloat
+    case (StringType, s: String) => UTF8String.fromString(s)
+    case (BinaryType, s: String) => java.util.Base64.getDecoder.decode(s)
+    case (d: DecimalType, l: Long) => Decimal(l, d.precision, d.scale)
+    case (_, other) => other
   }
 
   /** Manifest string encoding. */

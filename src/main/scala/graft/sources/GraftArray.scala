@@ -11,17 +11,17 @@ import graft.core._
   * fragment semantics (S1), time travel (S7), metadata table (S6),
   * schema evolution (S12), DROP (S11).
   *
-  * Reads are plain declarative DataFrame plans over the fragment
-  * parquet, so Catalyst drives pushdown/pruning; fragment-level pruning
-  * and latest-wins dedup are the two pieces the reference implements in
-  * its storage layer and we add on top:
+  * Every read goes through the one DSv2 scan (`graftarray`), like the
+  * reference's single read path; fragment-level pruning and latest-wins
+  * dedup are the two pieces the reference implements in its storage
+  * layer and the scan adds on top:
   *
   *  - **latest-wins** [SURVEY §1.1 fragments]: newer fragment overwrites
   *    older at equal coordinates when `allowsDups=false`. When fragment
-  *    MBRs are pairwise disjoint over the dims this is a no-op and the
-  *    scan stays shuffle-free; only overlapping fragments pay a
-  *    window-dedup — the 100 TB design is tile-aligned writes so
-  *    overlap is rare (SURVEY §7.4.4).
+  *    MBRs are pairwise disjoint over the dims this is a no-op; only
+  *    overlapping fragments pay an in-reader merge per dim0 slab — the
+  *    100 TB design is tile-aligned writes so overlap is rare
+  *    (SURVEY §7.4.4).
   *  - **dense fill values**: unwritten cells of a bounded dense
   *    array's domain materialize as fill values [ha_mytile.cc:1088–1164]
   *    in the DSv2 scan's fill partitions (`GraftFillPartitionReader`);
@@ -360,7 +360,7 @@ object GraftArray {
       .getOption("spark.graft.write.partitions").map(_.toInt))
       .getOrElse(math.max(df.rdd.getNumPartitions, 1))
     schema.cellOrder match {
-      case "UNORDERED" => df
+      case "UNORDERED" => partitions.fold(df)(df.coalesce)
       case "HILBERT" if dims.size >= 2 && dims.size <= 63 &&
         dims.forall(d => TypedValue.isIntegral(d.dataType) &&
           d.lowerBound.isDefined) =>
@@ -398,82 +398,24 @@ object GraftArray {
     */
   def load(spark: SparkSession, uri: String, asOf: Option[Long] = None,
       since: Option[Long] = None): DataFrame = {
-    val st = store(spark, uri)
-    val schema = st.loadSchema(asOf)
+    val schema = store(spark, uri).loadSchema(asOf)
     require(!schema.encrypted, "encrypted arrays read through the DSv2 " +
       "path only (spark.read.format(\"graftarray\") or the graft catalog)")
-    val frags = st.listFragments(asOf, since)
-    // delete tombstones need per-cell masking — that lives in the
-    // DSv2 readers, so tombstone-bearing arrays route there
-    if (frags.exists(f =>
-      f.deletePred.isDefined || f.deleteCoordFiles.nonEmpty)) {
-      var r = spark.read.format("graftarray").option("path", uri)
-      asOf.foreach(t => r = r.option("asOfTimestamp", t.toString))
-      since.foreach(t => r = r.option("sinceTimestamp", t.toString))
-      if (schema.kind == ArrayKind.Dense)
-        r = r.option("graft.internal.raw_cells", "true")
-      return r.load()
-    }
-    mergedView(spark, uri, schema, frags)
+    scan(spark, uri, asOf, since,
+      rawCells = schema.kind == ArrayKind.Dense)
   }
 
-  /** Latest-wins merged view of an explicit fragment set (the
-    * building block of `load` and of consolidation). */
-  private def mergedView(spark: SparkSession, uri: String,
-      schema: ArraySchema, frags: Seq[FragmentMeta]): DataFrame = {
-    val struct = schema.toStruct
-    if (frags.isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], struct)
-
-    val paths = frags.flatMap(f => f.files.map(rel => s"$uri/$rel"))
-    // explicit schema → old fragments lacking evolved columns read null,
-    // dropped columns are simply not requested
-    var df = spark.read.schema(struct).parquet(paths: _*)
-
-    // evolved-column fill values — ONLY for fragments that physically
-    // lack the column (pre-evolution: no stats entry, the manifest
-    // records stats for every written column incl. all-null ones). An
-    // unconditional coalesce would also rewrite EXPLICITLY-written
-    // NULLs in post-evolution fragments to the fill, silently altering
-    // data and diverging from the DSv2 read path, which leaves them
-    // null.
-    schema.attrs.foreach { a =>
-      a.fillValue.foreach { fv =>
-        if (frags.exists(!_.stats.contains(a.name))) {
-          // per-fragment "lacks this column" flag, keyed off the file
-          // path like _frag_ts below — no extra column storage
-          val perFrag = map(frags.flatMap { f =>
-            Seq(lit(f.id), lit(!f.stats.contains(a.name)))
-          }: _*)
-          df = df.withColumn(a.name,
-            when(element_at(perFrag,
-                regexp_extract(input_file_name(), "frag_([^/]+)/", 1)) &&
-                col(a.name).isNull,
-              lit(TypedValue.parse(a.dataType, fv)).cast(a.dataType))
-              .otherwise(col(a.name)))
-        }
-      }
-    }
-
-    if (schema.allowsDups || frags.size <= 1 ||
-      FragmentPruning.pairwiseDisjoint(frags, schema)) df
-    else {
-      // latest-wins: newer fragment overwrites equal coordinates.
-      // _frag_ts derived from the file path → no extra column storage.
-      val tsById = frags.map(f => (f.id, f.timestamp))
-      val tsMap = map(tsById.flatMap {
-        case (id, ts) => Seq(lit(id), lit(ts)) }: _*)
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(schema.dimNames.map(col): _*)
-        .orderBy(col("_frag_ts").desc)
-      df.withColumn("_frag_id",
-          regexp_extract(input_file_name(), "frag_([^/]+)/", 1))
-        .withColumn("_frag_ts", element_at(tsMap, col("_frag_id")))
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") === 1)
-        .drop("_frag_id", "_frag_ts", "_rn")
-    }
+  /** The array through the DSv2 scan: latest-wins and tombstone
+    * masking over the fragments visible in `[since, asOf]`, with
+    * evolution fills applied. `rawCells` keeps a dense array's unwritten
+    * cells virtual (written cells only). */
+  private def scan(spark: SparkSession, uri: String, asOf: Option[Long],
+      since: Option[Long], rawCells: Boolean): DataFrame = {
+    var r = spark.read.format("graftarray").option("path", uri)
+    if (rawCells) r = r.option("graft.internal.raw_cells", "true")
+    asOf.foreach(t => r = r.option("asOfTimestamp", t.toString))
+    since.foreach(t => r = r.option("sinceTimestamp", t.toString))
+    r.load()
   }
 
   // ---- consolidation & vacuum ---------------------------------------
@@ -492,9 +434,10 @@ object GraftArray {
     * still sees the originals (until vacuum). Latest-wins against
     * fragments outside the window is unchanged: within-window versions
     * collapse to the window's winner at the window's max timestamp.
-    * The merge is a single distributed job (one shuffle on the dim
-    * key), and the rewrite re-clusters cells, restoring per-file MBR
-    * pruning that many small interleaved fragments had destroyed.
+    * The merge runs inside the DSv2 scan (latest-wins and tombstone
+    * masking), and the rewrite re-clusters cells into files sized from
+    * the merged data, restoring per-file MBR pruning that many small
+    * interleaved fragments had destroyed.
     * Returns the consolidated fragment's timestamp, or None if fewer
     * than two fragments were eligible. */
   def consolidate(spark: SparkSession, uri: String,
@@ -534,21 +477,7 @@ object GraftArray {
     // tombstone's timestamp, so surviving tombstones never re-mask it.
     val replaced =
       if (since.isDefined) frags.filterNot(isTomb) else frags
-    val merged =
-      if (!schema.encrypted && !anyTomb)
-        // tombstone-free: Spark's vectorized parquet read (mergedView)
-        // — several× faster than the row-path DSv2 readers on the
-        // scan-bound part of a large consolidation
-        mergedView(spark, uri, schema, frags)
-      else {
-        // the DSv2 scan applies latest-wins AND tombstone masking;
-        // raw_cells keeps dense fills virtual (written cells only)
-        var r = spark.read.format("graftarray").option("path", uri)
-          .option("graft.internal.raw_cells", "true")
-        since.foreach(t => r = r.option("sinceTimestamp", t.toString))
-        asOf.foreach(t => r = r.option("asOfTimestamp", t.toString))
-        r.load()
-      }
+    val merged = scan(spark, uri, asOf, since, rawCells = true)
     val origin = s"consolidate:${replaced.size}"
     if (schema.encrypted) {
       // encrypted data round-trips through the DSv2 writer only (it
@@ -567,9 +496,24 @@ object GraftArray {
       // the convenience writer re-clusters cells (restoring per-file
       // MBR pruning), which the DSv2 INSERT path does not
       writeFragment(spark, uri, merged, origin = Some(origin),
-        commitTs = Some(maxTs), replaces = replaced.map(_.id))
+        commitTs = Some(maxTs), replaces = replaced.map(_.id),
+        partitions = Some(mergedFiles(spark, merged)))
     }
     Some(maxTs)
+  }
+
+  /** File count for a consolidated or restored fragment, from the
+    * merged size by AQE's coalescing rule: one file per
+    * `spark.sql.adaptive.coalescePartitions.minPartitionSize` of the
+    * scan's size estimate, at least one and at most
+    * `spark.sql.shuffle.partitions`. The scan's own partitioning counts
+    * input files and merge slabs, not merged bytes. */
+  private def mergedFiles(spark: SparkSession, merged: DataFrame): Int = {
+    val size = merged.queryExecution.optimizedPlan.stats.sizeInBytes
+    val perFile = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+      spark.conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize"))
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    ((size + perFile - 1) / perFile).min(cap).max(1).toInt
   }
 
   /** Physically delete the fragments committed in `[lo, hi]` — the
@@ -681,9 +625,7 @@ object GraftArray {
     val schema = st.loadSchema()
     val frags = st.listFragments(None)
     if (!frags.exists(_.timestamp > asOfTs)) return None
-    val view = spark.read.format("graftarray").option("path", uri)
-      .option("graft.internal.raw_cells", "true")
-      .option("asOfTimestamp", asOfTs.toString).load()
+    val view = scan(spark, uri, Some(asOfTs), None, rawCells = true)
     val origin = s"rollback:$asOfTs"
     val ts =
       if (schema.encrypted) {
@@ -703,7 +645,8 @@ object GraftArray {
         commitAt
       } else
         writeFragment(spark, uri, view, origin = Some(origin),
-          commitTs = None, replaces = frags.map(_.id))
+          commitTs = None, replaces = frags.map(_.id),
+          partitions = Some(mergedFiles(spark, view)))
     Some(ts)
   }
 

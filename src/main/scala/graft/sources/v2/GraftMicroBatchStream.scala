@@ -181,11 +181,7 @@ class GraftMicroBatchStream(
   override def createReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(streamStruct, schema.dimNames, preds,
       HadoopConfBroadcast(spark),
-      keyHex =
-        if (!schema.encrypted) None
-        else Some(spark.conf.getOption(graft.core.EncryptionKeys.ConfKey)
-          .getOrElse(throw new IllegalArgumentException(
-            s"array is encrypted; set ${graft.core.EncryptionKeys.ConfKey}"))),
+      keyHex = graft.core.EncryptionKeys.sessionKey(spark, schema),
       // row path throughout: micro-batches are small by construction
       columnar = false,
       metaCols = metaFields.map(_._1).toSet,
@@ -198,10 +194,7 @@ class GraftMicroBatchStream(
       },
       dimStruct = org.apache.spark.sql.types.StructType(schema.dims.map(d =>
         org.apache.spark.sql.types.StructField(d.name, d.dataType))),
-      evoFills = schema.attrs.collect {
-        case a if a.fillValue.isDefined =>
-          a.name -> graft.core.TypedValue.parse(a.dataType, a.fillValue.get)
-      }.toMap)
+      evoFills = schema.fills)
 
   override def commit(end: Offset): Unit = () // fragments are immutable
 

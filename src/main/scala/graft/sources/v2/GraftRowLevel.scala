@@ -82,10 +82,7 @@ class GraftDeltaBatchWrite(
   private val fragId = java.util.UUID.randomUUID.toString.take(12)
 
   private val keyHex: Option[String] =
-    if (!schema.encrypted) None
-    else Some(spark.conf.getOption(EncryptionKeys.ConfKey).getOrElse(
-      throw new IllegalArgumentException(
-        s"array is encrypted; set ${EncryptionKeys.ConfKey}")))
+    EncryptionKeys.sessionKey(spark, schema)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DeltaWriterFactory =

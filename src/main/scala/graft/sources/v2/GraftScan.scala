@@ -12,7 +12,6 @@ import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.execution.datasources.parquet.{GraftParquetReadShim, VectorizedParquetRecordReader}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
@@ -287,11 +286,11 @@ class GraftColumnarPartitionReader(
     metaCols: Set[String] = Set.empty,
     /** storage-domain fill per evolved attr declaring one — applied
       * ONLY to files that physically lack the column (same semantics
-      * as the merge path and GraftArray.load). */
+      * as the merge path). */
     evoFills: Map[String, Any] = Map.empty)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+  import org.apache.spark.sql.execution.vectorized.{ColumnVectorUtils, ConstantColumnVector}
   import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   private val taskConf = GraftParquetReadShim.taskConf(conf)
@@ -318,26 +317,14 @@ class GraftColumnarPartitionReader(
   private def constFor(f: StructField, path: String,
       ts: Long): ConstantColumnVector = {
     val c = new ConstantColumnVector(FooterRead.BatchRows, f.dataType)
-    f.name match {
+    val v = f.name match {
       case GraftMetaCols.FragId if metaCols.contains(f.name) =>
-        c.setUtf8String(UTF8String.fromString(GraftMetaCols.fragIdOf(path)))
-      case GraftMetaCols.CommitTs if metaCols.contains(f.name) =>
-        c.setLong(ts)
-      case n if evoFills.contains(n) =>
-        (evoFills(n), f.dataType) match {
-          case (l: Long, ByteType) => c.setByte(l.toByte)
-          case (l: Long, ShortType) => c.setShort(l.toShort)
-          case (l: Long, IntegerType | DateType) => c.setInt(l.toInt)
-          case (l: Long, LongType | TimestampType) => c.setLong(l)
-          case (d: Double, FloatType) => c.setFloat(d.toFloat)
-          case (d: Double, DoubleType) => c.setDouble(d)
-          case (s: String, StringType) =>
-            c.setUtf8String(UTF8String.fromString(s))
-          case (b: Boolean, BooleanType) => c.setBoolean(b)
-          case _ => c.setNull() // exotic fill types stay null
-        }
-      case _ => c.setNull()
+        GraftMetaCols.fragIdOf(path)
+      case GraftMetaCols.CommitTs if metaCols.contains(f.name) => ts
+      case n => evoFills.getOrElse(n, null)
     }
+    ColumnVectorUtils.populate(c,
+      new GenericInternalRow(Array(TypedValue.toCatalyst(f.dataType, v))), 0)
     constVectors = constVectors :+ c
     c
   }
@@ -430,8 +417,8 @@ class GraftPartitionReader(
     dimStruct: StructType = new StructType(),
     /** storage-domain fill per evolved attr declaring one — applied
       * ONLY where a file physically lacks the column, so explicit
-      * NULLs in post-evolution fragments stay null (mirrors
-      * GraftArray.load's per-fragment fill). */
+      * NULLs in post-evolution fragments stay null (the columnar
+      * reader applies the same rule). */
     evoFills: Map[String, Any] = Map.empty)
   extends PartitionReader[InternalRow] {
 
@@ -492,26 +479,11 @@ class GraftPartitionReader(
       val inner = new GraftPartitionReader(
         GraftInputPartition(t.coordFiles.map((_, t.ts)), needDedup = false),
         dimStruct, dimNames, Nil, conf, keyHex)
-      while (inner.next()) {
-        val r = inner.get()
-        set.add((0 until dimStruct.length).map(i => catalystToStorage(
-          r.get(i, dimStruct(i).dataType), dimStruct(i).dataType)))
-      }
+      while (inner.next())
+        set.add(inner.storageRow.take(dimStruct.length).toSeq)
       inner.close()
       (t.ts, set)
     }
-
-  /** Inverse of toCatalyst for dim values (coordinate-set keys must
-    * live in the storage domain the decoded rows use). */
-  private def catalystToStorage(v: Any, dt: DataType): Any = v match {
-    case null => null
-    case b: java.lang.Byte => b.longValue()
-    case s: java.lang.Short => s.longValue()
-    case i: java.lang.Integer => i.longValue()
-    case f: java.lang.Float => f.doubleValue()
-    case u: UTF8String => u.toString
-    case other => other // Long, Double, String, Boolean, Decimal
-  }
 
   private val iter: Iterator[Array[Any]] = {
     val raw = part.files.sortBy(_._2).iterator.flatMap {
@@ -593,6 +565,12 @@ class GraftPartitionReader(
 
   private var current: Array[Any] = _
 
+  /** The current row in the storage domain, aligned to the read
+    * columns (`readSchema` first): what nested readers (coordinate
+    * tombstones, the dense seen-set) consume, without a round trip
+    * through Catalyst values. */
+  private[v2] def storageRow: Array[Any] = current
+
   /** The reader of the file currently being streamed (files decode
     * strictly sequentially) — closed here if the scan is abandoned
     * early (pushed LIMIT, cancelled task) before the iterator drains. */
@@ -605,7 +583,8 @@ class GraftPartitionReader(
     val out = new Array[Any](readSchema.length)
     var i = 0
     while (i < out.length) {
-      out(i) = toCatalyst(current(outIdx(i)), readSchema.fields(i).dataType)
+      out(i) = TypedValue.toCatalyst(readSchema.fields(i).dataType,
+        current(outIdx(i)))
       i += 1
     }
     new GenericInternalRow(out)
@@ -613,21 +592,6 @@ class GraftPartitionReader(
 
   override def close(): Unit = {
     if (openReader != null) { openReader.close(); openReader = null }
-  }
-
-  /** storage-domain → catalyst value. */
-  private def toCatalyst(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (l: Long, ByteType) => l.toByte
-    case (l: Long, ShortType) => l.toShort
-    case (l: Long, IntegerType | DateType) => l.toInt
-    case (l: Long, LongType | TimestampType) => l
-    case (d: Double, FloatType) => d.toFloat
-    case (d: Double, DoubleType) => d
-    case (s: String, StringType) => UTF8String.fromString(s)
-    case (b: Array[Byte], BinaryType) => b
-    case (b: Boolean, BooleanType) => b
-    case (other, _) => other
   }
 
   /** Stream one parquet file through Spark's vectorized reader as
@@ -739,14 +703,6 @@ class GraftFillPartitionReader(
   private val dims = schema.dims
   private val nDims = dims.size
 
-  private def coordLong(r: InternalRow, i: Int): Long =
-    dims(i).dataType match {
-      case ByteType => r.getByte(i).toLong
-      case ShortType => r.getShort(i).toLong
-      case IntegerType | DateType => r.getInt(i).toLong
-      case _ => r.getLong(i)
-    }
-
   // written coordinates within this slab (files listed may span
   // neighboring slabs — only our range is recorded, so memory is
   // bounded by slab size and each cell is owned by exactly one slab)
@@ -759,8 +715,8 @@ class GraftFillPartitionReader(
         dimStruct0, schema.dimNames, Nil, conf, keyHex,
         tombstones = tombstones, dimStruct = dimStruct0)
       while (inner.next()) {
-        val r = inner.get()
-        val coords = (0 until nDims).map(coordLong(r, _))
+        val r = inner.storageRow
+        val coords = (0 until nDims).map(r(_).asInstanceOf[Long])
         val inRange = (0 until nDims).forall(i =>
           coords(i) >= part.ranges(i)._1 && coords(i) <= part.ranges(i)._2)
         if (inRange) s.add(coords)
@@ -770,9 +726,9 @@ class GraftFillPartitionReader(
     s
   }
 
-  // fill values: storage domain (for predicate eval) + catalyst form
-  private val attrStorage: Map[String, Any] = schema.attrs.map(a =>
-    a.name -> a.fillValue.map(TypedValue.parse(a.dataType, _)).orNull).toMap
+  // fill values in the storage domain (predicate eval); get()
+  // converts them
+  private val fills: Map[String, Any] = schema.fills
   private val dimIndexOf: Map[String, Int] =
     schema.dimNames.zipWithIndex.toMap
 
@@ -794,7 +750,7 @@ class GraftFillPartitionReader(
   private def storageValueAt(coords: Seq[Long])(name: String): Any =
     dimIndexOf.get(name) match {
       case Some(i) => coords(i)
-      case None => attrStorage.getOrElse(name, null)
+      case None => fills.getOrElse(name, null)
     }
 
   override def next(): Boolean = {
@@ -815,31 +771,8 @@ class GraftFillPartitionReader(
     var i = 0
     while (i < out.length) {
       val f = readSchema.fields(i)
-      out(i) = dimIndexOf.get(f.name) match {
-        case Some(d) => f.dataType match {
-          case ByteType => current(d).toByte
-          case ShortType => current(d).toShort
-          case IntegerType | DateType => current(d).toInt
-          case _ => current(d)
-        }
-        case None => (attrStorage.getOrElse(f.name, null), f.dataType) match {
-          case (null, _) => null
-          case (s: String, StringType) => UTF8String.fromString(s)
-          // storage forms that differ from catalyst: manifest decimals
-          // are unscaled longs at the column's scale; binary fill
-          // values are base64 text (TypedValue.parse/show)
-          case (s: String, BinaryType) =>
-            java.util.Base64.getDecoder.decode(s)
-          case (l: Long, dt: DecimalType) =>
-            org.apache.spark.sql.types.Decimal(
-              java.math.BigDecimal.valueOf(l, dt.scale), dt.precision, dt.scale)
-          case (l: Long, ByteType) => l.toByte
-          case (l: Long, ShortType) => l.toShort
-          case (l: Long, IntegerType | DateType) => l.toInt
-          case (d: Double, FloatType) => d.toFloat
-          case (v, _) => v
-        }
-      }
+      out(i) = TypedValue.toCatalyst(f.dataType,
+        storageValueAt(current)(f.name))
       i += 1
     }
     new GenericInternalRow(out)
@@ -869,19 +802,7 @@ case class GraftAggReaderFactory(schema: StructType)
       override def next(): Boolean = if (done) false else { done = true; true }
       override def get(): InternalRow =
         new GenericInternalRow(vals.zip(schema.fields).map {
-          case (v, f) => (v, f.dataType) match {
-            case (null, _) => null
-            case (s: String, StringType) => UTF8String.fromString(s)
-            case (l: Long, ByteType) => l.toByte
-            case (l: Long, ShortType) => l.toShort
-            case (l: Long, IntegerType | DateType) => l.toInt
-            case (d: Double, FloatType) => d.toFloat
-            // manifest decimals are unscaled longs at the column's scale
-            case (l: Long, dt: DecimalType) =>
-              org.apache.spark.sql.types.Decimal(
-                java.math.BigDecimal.valueOf(l, dt.scale), dt.precision, dt.scale)
-            case (other, _) => other
-          }
+          case (v, f) => TypedValue.toCatalyst(f.dataType, v)
         }.toArray)
       override def close(): Unit = ()
     }

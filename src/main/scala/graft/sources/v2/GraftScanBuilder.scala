@@ -1020,12 +1020,7 @@ class GraftScanImpl(
   private def buildReaderFactory(): PartitionReaderFactory =
     new GraftReaderFactory(requiredStruct, schema.dimNames, preds,
       HadoopConfBroadcast(spark),
-      // decryption key resolved driver-side from the session conf;
-      // never persisted (ArraySchema.encrypted scaladoc)
-      if (!schema.encrypted) None
-      else Some(spark.conf.getOption(graft.core.EncryptionKeys.ConfKey)
-        .getOrElse(throw new IllegalArgumentException(
-          s"array is encrypted; set ${graft.core.EncryptionKeys.ConfKey}"))),
+      graft.core.EncryptionKeys.sessionKey(spark, schema),
       fillSchema = if (denseFillable) Some(schema) else None,
       columnar = columnarEligible,
       // active metadata columns: requested OR referenced by a pushed
@@ -1039,12 +1034,8 @@ class GraftScanImpl(
         StructField(d.name, d.dataType))),
       // evolution fills (storage domain): applied by the readers only
       // where a FILE physically lacks the column, so explicit NULLs in
-      // post-evolution fragments stay null — same semantics as
-      // GraftArray.load's per-fragment fill
-      evoFills = schema.attrs.collect {
-        case a if a.fillValue.isDefined =>
-          a.name -> TypedValue.parse(a.dataType, a.fillValue.get)
-      }.toMap)
+      // post-evolution fragments stay null
+      evoFills = schema.fills)
 
   // ---- SupportsReportStatistics [ref: records estimate §4] ---------
   override def estimateStatistics(): Statistics = new Statistics {

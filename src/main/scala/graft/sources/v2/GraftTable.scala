@@ -469,10 +469,7 @@ class GraftBatchWrite(
   // task closure — the same trust boundary as the reference passing
   // encryption_key over the client connection [ha_mytile.cc:792–795]
   private val keyHex: Option[String] =
-    if (!schema.encrypted) None
-    else Some(spark.conf.getOption(EncryptionKeys.ConfKey).getOrElse(
-      throw new IllegalArgumentException(
-        s"array is encrypted; set ${EncryptionKeys.ConfKey}")))
+    EncryptionKeys.sessionKey(spark, schema)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
       : DataWriterFactory =

@@ -257,28 +257,94 @@ class ArrayConnectorSpec extends SparkSpec {
     assert(!GraftArray.load(spark, uri).columns.contains("extra"))
   }
 
+  /** One typed fill: the attribute's type, its manifest fill string,
+    * the value that string means, and a value a later write stores. */
+  private case class FillCase(dt: DataType, fill: String, means: Any,
+      written: Any)
+
+  private val fillCases = Seq(
+    FillCase(LongType, "42", 42L, 7L),
+    FillCase(DoubleType, "1.5", 1.5, 2.5),
+    FillCase(StringType, "fill", "fill", "w"),
+    FillCase(BooleanType, "true", true, false),
+    // binary fills are base64
+    FillCase(BinaryType, "AQID", Seq[Byte](1, 2, 3), Array[Byte](9)),
+    // manifest decimals are unscaled longs at the column's scale
+    FillCase(DecimalType(9, 2), "12345", BigDecimal("123.45"),
+      new java.math.BigDecimal("6.78")),
+    // dates are epoch days, timestamps epoch microseconds
+    FillCase(DateType, "19000", java.time.LocalDate.parse("2022-01-08"),
+      java.sql.Date.valueOf("2000-01-01")),
+    FillCase(TimestampType, "1700000000000000",
+      java.time.Instant.parse("2023-11-14T22:13:20Z"),
+      java.sql.Timestamp.from(java.time.Instant.parse("2001-01-01T00:00:00Z"))))
+
+  /** A collected cell in a comparable form. */
+  private def norm(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case d: java.math.BigDecimal => BigDecimal(d)
+    case d: java.sql.Date => d.toLocalDate
+    case t: java.sql.Timestamp => t.toInstant
+    case other => other
+  }
+
   test("evolution fill: explicit NULLs survive; load and DSv2 agree") {
-    val uri = tmp()
-    GraftArray.create(spark, uri, schema2d)
-    // pre-evolution fragment → fill on read
-    GraftArray.write(spark, uri,
-      Seq((1L, 1L, 1L, "x")).toDF("rows", "cols", "a", "s"))
-    GraftArray.addColumn(spark, uri,
-      AttributeSpec("extra", LongType, nullable = true, fillValue = Some("42")))
-    // post-evolution fragment with an EXPLICITLY-written NULL — must
-    // stay NULL (the round-8 bug coalesced it to the fill on load,
-    // while DSv2 read left it null: two readers, two answers)
-    GraftArray.write(spark, uri,
-      Seq((2L, 2L, 2L, "y", Some(7L)), (3L, 3L, 3L, "z", None))
-        .toDF("rows", "cols", "a", "s", "extra"))
-    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Option[Long])] =
-      df.orderBy("rows").select("rows", "extra")
-        .collect().map(r => (r.getLong(0),
-          if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSeq
-    val expect = Seq((1L, Some(42L)), (2L, Some(7L)), (3L, None))
-    assert(rows(GraftArray.load(spark, uri)) == expect, "load path")
-    assert(rows(spark.read.format("graftarray").option("path", uri).load())
-      == expect, "DSv2 path (incl. pre-evolution fill, a round-8 fix)")
+    import scala.jdk.CollectionConverters._
+    def read(uri: String) =
+      spark.read.format("graftarray").option("path", uri).load()
+    def columnar(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.executedPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b }.head.supportsColumnar
+    def cells(df: org.apache.spark.sql.DataFrame): Seq[(Long, Any)] =
+      df.orderBy("k").select("k", "x").collect()
+        .map(r => (r.getLong(0), norm(r.get(1)))).toSeq
+    val failed = fillCases.flatMap { c =>
+      scala.util.Try {
+        val w = norm(c.written)
+        def put(uri: String, rows: (Long, Any)*): Unit =
+          GraftArray.write(spark, uri, spark.createDataFrame(
+            rows.map { case (k, x) => org.apache.spark.sql.Row(k, k, x) }.asJava,
+            StructType(Seq(StructField("k", LongType),
+              StructField("a", LongType), StructField("x", c.dt)))))
+        // sparse: a pre-evolution fragment reads the fill; a post-
+        // evolution fragment's explicit NULL stays null
+        val uri = tmp()
+        GraftArray.create(spark, uri, ArraySchema(ArrayKind.Sparse,
+          Seq(DimensionSpec("k", LongType)), Seq(AttributeSpec("a", LongType))))
+        GraftArray.write(spark, uri, Seq((1L, 1L), (5L, 5L)).toDF("k", "a"))
+        GraftArray.addColumn(spark, uri,
+          AttributeSpec("x", c.dt, fillValue = Some(c.fill)))
+        put(uri, 10L -> c.written, 11L -> null)
+        assert(columnar(read(uri)), "disjoint fragments scan columnar")
+        assert(cells(read(uri)) ==
+          Seq(1L -> c.means, 5L -> c.means, 10L -> w, 11L -> null),
+          "columnar scan")
+        // a write inside the pre-evolution fragment's MBR forces a merge
+        put(uri, 3L -> c.written)
+        val merged = Seq(1L -> c.means, 3L -> w, 5L -> c.means, 10L -> w,
+          11L -> null)
+        assert(!columnar(read(uri)), "overlapping fragments merge row-wise")
+        assert(cells(read(uri)) == merged, "merge scan")
+        assert(cells(GraftArray.load(spark, uri)) == merged, "GraftArray.load")
+        GraftArray.consolidate(spark, uri)
+        GraftArray.vacuum(spark, uri)
+        assert(GraftArray.fragments(spark, uri).size == 1)
+        assert(cells(read(uri)) == merged, "after consolidate + vacuum")
+        // dense: unwritten cells inside the written cells' bounding box
+        // read the declared fill
+        val dense = tmp()
+        GraftArray.create(spark, dense, ArraySchema(ArrayKind.Dense,
+          Seq(DimensionSpec("k", LongType, Some("0"), Some("3"), Some(4L))),
+          Seq(AttributeSpec("a", LongType),
+            AttributeSpec("x", c.dt, fillValue = Some(c.fill)))))
+        put(dense, 0L -> c.written, 3L -> null)
+        assert(cells(read(dense)) ==
+          Seq(0L -> w, 1L -> c.means, 2L -> c.means, 3L -> null),
+          "dense fill partition")
+      }.failed.toOption.map(e => s"${c.dt.simpleString}: ${e.getMessage}")
+    }
+    assert(failed.isEmpty, failed.mkString("\n"))
   }
 
   test("IN list with a NULL literal plans without NPE, right rows") {

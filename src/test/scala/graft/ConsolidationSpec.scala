@@ -86,6 +86,65 @@ class ConsolidationSpec extends SparkSpec {
       .select("v").as[Double].head() == 99.0)
   }
 
+  /** A stream-ingest-shaped array: a base fragment of `base` rows and
+    * `batches` fragments of `batch` rows, a fifth of each batch
+    * rewriting existing keys, keys ascending with gaps (seeded). */
+  private def ingestShaped(uri: String, base: Int, batches: Int,
+      batch: Int, cellOrder: String = "ROW_MAJOR"): Unit = {
+    val rnd = new java.util.SplittableRandom(3)
+    val keys = scala.collection.mutable.ArrayBuffer[Long]()
+    def fresh(): Long = {
+      keys += keys.lastOption.getOrElse(0L) + 1 + rnd.nextInt(3); keys.last }
+    def cell(k: Long) = (k, rnd.nextLong(1000000L), rnd.nextInt(100000) / 8.0)
+    GraftArray.create(spark, uri, ArraySchema(ArrayKind.Sparse,
+      Seq(DimensionSpec("k", LongType)),
+      Seq(AttributeSpec("v", LongType), AttributeSpec("w", DoubleType)),
+      cellOrder = cellOrder))
+    GraftArray.write(spark, uri,
+      Seq.fill(base)(cell(fresh())).toDF("k", "v", "w"))
+    for (_ <- 1 to batches) {
+      val old = Iterator.continually(keys(rnd.nextInt(keys.size)))
+        .distinct.take(batch / 5).toSeq
+      val rows = old ++ Seq.fill(batch - old.size)(fresh())
+      GraftArray.write(spark, uri, rows.map(cell).toDF("k", "v", "w"))
+    }
+  }
+
+  test("consolidating a stream-ingest-shaped array writes one file") {
+    // UNORDERED writes without a range shuffle: the count still comes
+    // from the merged size, not from the scan's partitions
+    for (order <- Seq("ROW_MAJOR", "UNORDERED")) {
+      val uri = tmp()
+      ingestShaped(uri, base = 2000, batches = 4, batch = 200, order)
+      val before =
+        read(uri).orderBy("k").as[(Long, Long, Double)].collect().toSeq
+      assert(GraftArray.consolidate(spark, uri).isDefined)
+      GraftArray.vacuum(spark, uri)
+      // files per visible fragment
+      assert(GraftArray.fragments(spark, uri).map(_.files.size) == Seq(1),
+        order)
+      assert(read(uri).orderBy("k").as[(Long, Long, Double)].collect().toSeq ==
+        before, order)
+    }
+  }
+
+  test("a larger consolidation stays within spark.sql.shuffle.partitions files") {
+    val uri = tmp()
+    ingestShaped(uri, base = 40000, batches = 4, batch = 5000)
+    val before = read(uri).orderBy("k").as[(Long, Long, Double)].collect().toSeq
+    val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
+    val prev = spark.conf.getOption(key)
+    // ~1.4 MB of merged cells over 64 KB per file asks for more files
+    // than there are shuffle partitions
+    spark.conf.set(key, "64k")
+    try assert(GraftArray.consolidate(spark, uri).isDefined)
+    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val cap = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val files = GraftArray.fragments(spark, uri).head.files
+    assert(files.size > 1 && files.size <= cap, s"${files.size} files, cap $cap")
+    assert(read(uri).orderBy("k").as[(Long, Long, Double)].collect().toSeq == before)
+  }
+
   test("vacuum reclaims superseded fragments; nested consolidation safe") {
     val uri = tmp()
     GraftArray.create(spark, uri, sch)

@@ -34,6 +34,9 @@ class RollbackSpec extends SparkSpec {
     // current read = the good content
     assert(spark.table(s"$cat.t").filter(col("v") < 0).count() == 0)
     assert(spark.table(s"$cat.t").count() == 100)
+    // one restore fragment, its files sized from the restored data,
+    // not from the scan's partitions
+    assert(GraftArray.fragments(spark, s"$wh/t").map(_.files.size) == Seq(1))
     // the bad instant is still reachable by time travel
     val bad = spark.read.format("graftarray").option("path", s"$wh/t")
       .option("asOfTimestamp", ts2.toString).load()
