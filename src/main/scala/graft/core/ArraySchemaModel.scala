@@ -137,6 +137,9 @@ case class ArraySchema(
 
   def dimNames: Seq[String] = dims.map(_.name)
   def columnNames: Seq[String] = dims.map(_.name) ++ attrs.map(_.name)
+  /** The dimension columns in array order, as the readers read them. */
+  def dimStruct: StructType =
+    StructType(dims.map(d => StructField(d.name, d.dataType)))
 
   /** The codec the fragment writers apply. Parquet-mr writes ONE codec
     * per file (no per-column-chunk codec in its writer API), so

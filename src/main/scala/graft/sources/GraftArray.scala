@@ -24,8 +24,8 @@ import graft.core._
   *    (SURVEY §7.4.4).
   *  - **dense fill values**: unwritten cells of a bounded dense
   *    array's domain materialize as fill values [ha_mytile.cc:1088–1164]
-  *    in the DSv2 scan's fill partitions (`GraftFillPartitionReader`);
-  *    `load` returns written cells only.
+  *    in the DSv2 scan's fill partitions, which read columnar like
+  *    every other partition; `load` returns written cells only.
   */
 object GraftArray {
 

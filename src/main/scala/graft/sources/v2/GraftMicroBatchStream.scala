@@ -179,11 +179,9 @@ class GraftMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(streamStruct, schema.dimNames, preds,
-      HadoopConfBroadcast(spark),
+    new GraftReaderFactory(streamStruct,
+      schema.dimStruct, preds, HadoopConfBroadcast(spark),
       keyHex = graft.core.EncryptionKeys.sessionKey(spark, schema),
-      // row path throughout: micro-batches are small by construction
-      columnar = false,
       metaCols = metaFields.map(_._1).toSet,
       // snapshot of the visible tombstones: unconsumed rows deliver
       // post-delete (see class doc for the freshness caveat)
@@ -192,8 +190,6 @@ class GraftMicroBatchStream(
           TombstoneSpec(f.timestamp, f.deletePred.map(PredJson.fromJson),
             f.deleteCoordFiles.map(rel => s"$uri/$rel"))
       },
-      dimStruct = org.apache.spark.sql.types.StructType(schema.dims.map(d =>
-        org.apache.spark.sql.types.StructField(d.name, d.dataType))),
       evoFills = schema.fills)
 
   override def commit(end: Offset): Unit = () // fragments are immutable

@@ -18,7 +18,8 @@ import graft.sources.v2.PredicateSupport.Pred
   *
   *  A. dim predicates → [[DimConstraint]]s → fragment pruning
   *     (subarray analog, P4/P8–P10)
-  *  B. attr predicates → in-reader row filters (QueryCondition, P5)
+  *  B. attr predicates → file skipping from per-file stats, then
+  *     Spark's Filter over the scan's batches (QueryCondition, P5)
   *  C. aggregates → fragment-statistics fast path (A1–A7) — COUNT /
   *     MIN / MAX / SUM / AVG answered with zero data I/O when exact
   *
@@ -42,7 +43,6 @@ class GraftScanBuilder(
   with SupportsPushDownRequiredColumns
   with SupportsPushDownV2Filters
   with SupportsPushDownAggregates
-  with SupportsPushDownLimit
   with SupportsPushDownTopN {
 
   private val fullStruct = schema.toStruct
@@ -51,13 +51,7 @@ class GraftScanBuilder(
   private var preds: Seq[Pred] = Nil
   private var aggValues: Option[Seq[Any]] = None
   private var aggSchema: StructType = _
-  private var limit: Int = -1
   private var topN: Option[(Boolean, Int)] = None
-
-  // ---- LIMIT pushdown: per-partition early termination -------------
-  override def pushLimit(n: Int): Boolean = { limit = n; false }
-  // false → Spark keeps its own Limit on top (per-partition cap is a
-  // row-count reduction, not a global limit)
 
   // ---- TopN pushdown: ORDER BY dim0 LIMIT k file pruning -----------
   /** Accept when the PRIMARY sort key is the first dimension (the
@@ -119,17 +113,16 @@ class GraftScanBuilder(
     pushed = converted.collect { case (p, Some(_)) => p }
     preds = converted.flatMap(_._2).toSeq
     // Predicates are returned as residual BY DEFAULT: accepted ones
-    // still drive fragment/file pruning (subarray analog) and are
-    // evaluated in-reader on the row-based merge path, but Spark keeps
-    // its own codegen Filter — the same contract as the built-in
-    // parquet source, letting simple partitions stream ColumnarBatches
-    // with the filter vectorized inside WholeStageCodegen.
+    // still drive fragment/file pruning (subarray analog), but Spark
+    // keeps its own codegen Filter over the scan's ColumnarBatches —
+    // the same contract as the built-in parquet source. The data
+    // readers evaluate no pushed predicate.
     //
     // EXCEPTION — exact coverage: a dim predicate PROVABLY true on
     // every file that survives MBR pruning is enforced entirely by the
-    // pruning itself, so it is consumed (no residual). Row/fill paths
-    // still evaluate it in-reader (free safety); the columnar path
-    // needs no filtering because no surviving row can violate it.
+    // pruning itself, so it is consumed (no residual): no row of a
+    // planned file can violate it. Fill partitions, whose cells lie in
+    // no file, still evaluate every pushed predicate in-reader.
     // Consumption is what unlocks Spark's aggregate pushdown under dim
     // ranges — Spark only pushes aggregates when no post-scan filter
     // remains — matching the reference's aggregates-under-pushed-
@@ -423,7 +416,7 @@ class GraftScanBuilder(
         val constraints =
           PredicateSupport.dimConstraints(preds, schema)
         new GraftScanImpl(spark, uri, schema, frags, requiredStruct,
-          preds, constraints, limit, rawCells, streamMaxFrags,
+          preds, constraints, rawCells, streamMaxFrags,
           streamMaxRows, topN)
     }
   }
@@ -439,7 +432,6 @@ class GraftScanImpl(
     requiredStruct: StructType,
     preds: Seq[Pred],
     initialConstraints: Map[String, DimConstraint],
-    limit: Int = -1,
     rawCells: Boolean = false,
     streamMaxFrags: Option[Int] = None,
     streamMaxRows: Option[Long] = None,
@@ -519,10 +511,10 @@ class GraftScanImpl(
   }
 
   // selection + tombstone parsing cached per runtime-filter state:
-  // estimateStatistics, planning, columnar eligibility and the reader
-  // factory all consult them — recomputing per call site re-filters
-  // the fragment list and re-parses predicate JSON several times per
-  // scan (invalidated in filter(), alongside plannedCache)
+  // estimateStatistics, planning and the reader factory all consult
+  // them — recomputing per call site re-filters the fragment list and
+  // re-parses predicate JSON several times per scan (invalidated in
+  // filter(), alongside plannedCache)
   private var selectedCache: Seq[FragmentMeta] = _
   private var tombstoneCache: Seq[TombstoneSpec] = _
 
@@ -611,7 +603,7 @@ class GraftScanImpl(
     }
   }
 
-  // planned-partition cache: planInputPartitions and columnarEligible
+  // planned-partition cache: planInputPartitions and outputOrdering
   // both need the set; planning (overlap grouping, slab cutting,
   // per-file MBR parsing) must run ONCE per runtime-filter state, not
   // twice per scan
@@ -717,7 +709,7 @@ class GraftScanImpl(
         if (g.size == 1)
           selectFiles(g.head).map(rel =>
             GraftInputPartition(Seq((s"$uri/$rel", g.head.timestamp)),
-              needDedup = false, limit = limit))
+              needDedup = false))
         else slabPartitions(g)
       }.filter(_.files.nonEmpty).toArray
     } else {
@@ -729,7 +721,7 @@ class GraftScanImpl(
       topNPrune(frags.flatMap(f => selectFiles(f).map(f -> _)))
         .map { case (f, rel) =>
           GraftInputPartition(Seq((s"$uri/$rel", f.timestamp)),
-            needDedup = false, limit = limit,
+            needDedup = false,
             bucket = buckets.flatMap(_ => f.fileBuckets.get(rel)))
             : InputPartition
         }.toArray
@@ -778,9 +770,9 @@ class GraftScanImpl(
     * bucket keys must be DISTINCT across partitions (Spark
     * concatenates same-key partitions into one task, which would
     * break the per-partition order between files). Readers emit
-    * parquet rows in file order, and pushed predicates / tombstone
-    * masking / limits only FILTER rows, so each partition's output
-    * keeps the recorded order; Catalyst then elides redundant local
+    * parquet rows in file order, and tombstone masking and slab
+    * ownership only FILTER rows, so each partition's output keeps the
+    * recorded order; Catalyst then elides redundant local
     * sorts (RemoveRedundantSorts) and the per-partition sorts of
     * sort-merge joins over co-bucketed arrays — the SMB-join shape.
     * Only the longest prefix of the order present in the read schema
@@ -943,7 +935,7 @@ class GraftScanImpl(
           if (inSlab.isEmpty) None
           else Some(GraftInputPartition(inSlab.map(b => (b.path, b.ts)),
             needDedup = inSlab.map(_.ts).distinct.size > 1,
-            limit = limit, slabLo = lo, slabHi = hi))
+            slabLo = lo, slabHi = hi))
         }
       }
     }
@@ -959,7 +951,7 @@ class GraftScanImpl(
       : Seq[GraftInputPartition] = {
     val n = math.min(math.max(files.size, 2), 16)
     (0 until n).map(i => GraftInputPartition(files, needDedup = true,
-      limit = limit, hashMod = n, hashIdx = i))
+      hashMod = n, hashIdx = i))
   }
 
   private def overlapGroups(frags: Seq[FragmentMeta]): Seq[Seq[FragmentMeta]] = {
@@ -987,29 +979,9 @@ class GraftScanImpl(
     new GraftMicroBatchStream(spark, uri, schema, requiredStruct, preds,
       streamMaxFrags, streamMaxRows)
 
-  /** Scan-wide columnar eligibility: Spark rejects scans that mix
-    * row-based and columnar partitions, so the decision is made ONCE
-    * here over the full planned partition set and passed to the
-    * factory as a constant — columnar only when EVERY partition is a
-    * simple local-file partition (no merge/slab/hash/limit/fill)
-    * with vectorizable column types. Runtime filters only
-    * ever REMOVE fragments, which cannot introduce merge partitions
-    * into an overlap-free plan, so a true decision stays valid. */
-  private def columnarEligible: Boolean =
-    !denseFillable && tombstones.isEmpty &&
-      requiredStruct.fields.forall(f =>
-        GraftColumnarPartitionReader.supported(f.dataType)) &&
-      planAll().forall {
-        case g: GraftInputPartition =>
-          !g.needDedup && g.slabLo.isEmpty && g.slabHi.isEmpty &&
-            g.hashMod == 0 && g.limit < 0
-        case _ => false
-      }
-
   // reader-factory cache: every copy of the scan's exec node asks for
-  // the factory, and its columnar decision, metadata columns and
-  // tombstones depend only on the runtime-filter state (invalidated
-  // in filter(), alongside plannedCache)
+  // the factory, and its tombstones depend only on the runtime-filter
+  // state (invalidated in filter(), alongside plannedCache)
   private var factoryCache: PartitionReaderFactory = _
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -1018,20 +990,12 @@ class GraftScanImpl(
   }
 
   private def buildReaderFactory(): PartitionReaderFactory =
-    new GraftReaderFactory(requiredStruct, schema.dimNames, preds,
-      HadoopConfBroadcast(spark),
+    new GraftReaderFactory(requiredStruct,
+      schema.dimStruct, preds, HadoopConfBroadcast(spark),
       graft.core.EncryptionKeys.sessionKey(spark, schema),
       fillSchema = if (denseFillable) Some(schema) else None,
-      columnar = columnarEligible,
-      // active metadata columns: requested OR referenced by a pushed
-      // predicate (the in-reader residual eval needs the value), never
-      // names shadowed by user columns
-      metaCols = (requiredStruct.fieldNames.toSet ++ preds.flatMap(_.refs))
-        .intersect(GraftMetaCols.fields.keySet)
-        .diff(schema.columnNames.toSet),
+      metaCols = GraftMetaCols.fields.keySet.diff(schema.columnNames.toSet),
       tombstones = tombstones,
-      dimStruct = StructType(schema.dims.map(d =>
-        StructField(d.name, d.dataType))),
       // evolution fills (storage domain): applied by the readers only
       // where a FILE physically lacks the column, so explicit NULLs in
       // post-evolution fragments stay null

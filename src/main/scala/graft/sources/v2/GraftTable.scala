@@ -377,8 +377,8 @@ object GraftMaintenance {
   val ConfFlag = "spark.graft.internal.maintenance"
 }
 
-/** The scan-side metadata column surface. Values are file-constant on
-  * the columnar path and injected per-file on the row path; dense fill
+/** The scan-side metadata column surface. Values are constant vectors
+  * per file, and a merged row keeps its winning version's; dense fill
   * cells (virtual, never committed) read NULL for both. */
 object GraftMetaCols {
   val FragId = "_frag_id"

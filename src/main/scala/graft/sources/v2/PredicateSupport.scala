@@ -18,7 +18,8 @@ import graft.core.RangeAlgebra.{DimConstraint, Interval}
   */
 object PredicateSupport {
 
-  /** A predicate we accepted for in-reader evaluation. */
+  /** A predicate we accepted: it prunes fragments and files, masks
+    * rows as a delete tombstone, and filters dense fill cells. */
   sealed trait Pred extends Serializable {
     def eval(get: String => Any): Boolean
     /** Column names this predicate reads (reader must materialize them
@@ -38,7 +39,7 @@ object PredicateSupport {
   /** Pruning-only wrapper: the wrapped tree is a NECESSARY condition of
     * the original predicate (a candidate superset, e.g. the padded-MBR
     * region of a geometry-column spatial call), not equivalent to it.
-    * In-reader evaluation and file pruning apply as usual — but it must
+    * File pruning and fill-cell evaluation apply as usual — but it must
     * never be CONSUMED ([[provablyTrueOnMbr]] = false), because Spark's
     * residual filter is what restores exactness. */
   case class Approx(p: Pred) extends Pred {

@@ -3,11 +3,14 @@ package org.apache.spark.sql.execution.datasources.parquet
 import org.apache.hadoop.conf.Configuration
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.RowToColumnConverter
+import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** [[ParquetWriteSupport]] is package-private to Spark; this shim
-  * re-exposes exactly what graft's fragment writer needs: an
+  * re-exposes exactly what graft's fragment writer needs (and the row
+  * copier its partition readers write column vectors with): an
   * InternalRow→parquet write support producing the SAME physical
   * format Spark's own parquet sink writes (standard lists, decimal
   * int32/int64/fixed by precision, µs timestamps), so both graft write
@@ -31,4 +34,12 @@ object GraftParquetWriteShim {
     conf.set(SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.key,
       SQLConf.PARQUET_ANNOTATE_VARIANT_LOGICAL_TYPE.defaultValueString)
   }
+
+  /** Spark's row-to-column copier (package-private to Spark): appends
+    * one row of `schema` to writable vectors of that schema. Every field
+    * is taken as nullable, since a column a file predates reads null
+    * whatever the schema declares. */
+  def rowToColumns(schema: StructType)
+      : (InternalRow, Array[WritableColumnVector]) => Unit =
+    new RowToColumnConverter(schema.asNullable).convert
 }

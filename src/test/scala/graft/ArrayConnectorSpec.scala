@@ -324,7 +324,7 @@ class ArrayConnectorSpec extends SparkSpec {
         put(uri, 3L -> c.written)
         val merged = Seq(1L -> c.means, 3L -> w, 5L -> c.means, 10L -> w,
           11L -> null)
-        assert(!columnar(read(uri)), "overlapping fragments merge row-wise")
+        assert(columnar(read(uri)), "overlapping fragments merge columnar")
         assert(cells(read(uri)) == merged, "merge scan")
         assert(cells(GraftArray.load(spark, uri)) == merged, "GraftArray.load")
         GraftArray.consolidate(spark, uri)
@@ -339,6 +339,7 @@ class ArrayConnectorSpec extends SparkSpec {
           Seq(AttributeSpec("a", LongType),
             AttributeSpec("x", c.dt, fillValue = Some(c.fill)))))
         put(dense, 0L -> c.written, 3L -> null)
+        assert(columnar(read(dense)), "fill partitions scan columnar")
         assert(cells(read(dense)) ==
           Seq(0L -> w, 1L -> c.means, 2L -> c.means, 3L -> null),
           "dense fill partition")

@@ -9,14 +9,18 @@ import graft.core._
 import graft.sources.GraftArray
 import scala.jdk.CollectionConverters._
 
-/** Differential check of the one parquet decode path: generated sparse
+/** Differential check of the one partition reader: generated sparse
   * arrays, every attribute type the fragment writer emits, are written
-  * twice — plaintext and encrypted — and read back through the columnar
-  * scan (disjoint fragments) and the row reader's latest-wins merge
+  * twice — plaintext and encrypted — and read back through simple
+  * partitions (disjoint fragments) and latest-wins merge partitions
   * (overlapping fragments). Both copies must read the same rows, and
   * those rows must be the latest-wins view of what was written,
   * including the fill of a column added after the first fragments and a
-  * projection of that column alone. */
+  * projection of that column alone. A second property reads every other
+  * partition kind — delete tombstones by predicate and by coordinate,
+  * hash ownership, dense fills — against a latest-wins model of the
+  * versions written, provenance columns included. Every scan reads
+  * columnar. */
 class DecodeDifferentialSpec extends SparkSpec {
 
   private val Key = "00112233445566778899aabbccddeeff"
@@ -127,9 +131,8 @@ class DecodeDifferentialSpec extends SparkSpec {
         val reads = uris.map { uri =>
           val all = load(uri).orderBy("k")
           val evOnly = load(uri).select("e")
-          // disjoint fragments scan columnar; an overlap forces merge
-          // partitions, so the whole scan reads row-based
-          assert(scanOf(load(uri)).supportsColumnar == !overlap, s"$uri plan")
+          // an overlap plans merge partitions; both layouts read columnar
+          assert(scanOf(load(uri)).supportsColumnar, s"$uri plan")
           (norm(all.collect().toSeq),
             evOnly.collect().toSeq.map(r => Option(r.get(0))).sortBy(_.toString))
         }
@@ -146,5 +149,156 @@ class DecodeDifferentialSpec extends SparkSpec {
       case Some(k) => spark.conf.set(EncryptionKeys.ConfKey, k)
       case None => spark.conf.unset(EncryptionKeys.ConfKey)
     }
+  }
+
+  /** The versions of a cell not yet masked, oldest first: the model
+    * of fragments, tombstones and latest-wins the scans must match. */
+  private class Model[K] {
+    case class Version(fragId: String, ts: Long, v: Long, s: String)
+    val cells = scala.collection.mutable.Map.empty[K, List[Version]]
+    def put(k: K, ver: Version): Unit =
+      cells(k) = cells.getOrElse(k, Nil) :+ ver
+    /** A tombstone masks the matching versions committed before it:
+      * every version the model holds. */
+    def mask(hit: (K, Version) => Boolean): Unit =
+      cells.keys.toSeq.foreach { k =>
+        cells(k) = cells(k).filterNot(hit(k, _))
+        if (cells(k).isEmpty) cells.remove(k)
+      }
+    def visible: Map[K, Version] = cells.map { case (k, vs) => k -> vs.last }.toMap
+  }
+
+  /** The one fragment `before` lacks: (id, timestamp). */
+  private def newest(path: String, before: Set[String]): (String, Long) = {
+    val added = GraftArray.fragments(spark, path).filterNot(f => before(f.id))
+    assert(added.size == 1, added.map(_.id))
+    (added.head.id, added.head.timestamp)
+  }
+  private def fragIds(path: String): Set[String] =
+    GraftArray.fragments(spark, path).map(_.id).toSet
+
+  test("every partition kind reads columnar and latest-wins") {
+    import org.apache.spark.sql.functions.col
+    import graft.sources.v2.PredicateSupport.Cmp
+    val cases = for {
+      n <- Gen.chooseNum(12, 40)
+      seed <- Gen.long
+    } yield (n, seed)
+    def rowsOf(df: DataFrame): Seq[Row] = df.collect().toSeq
+    val prop = Prop.forAllNoShrink(cases) { case (n, seed) =>
+      val r = new scala.util.Random(seed)
+      val wh = java.nio.file.Files.createTempDirectory("graft_kinds").toString
+      val cat = "gk" + r.alphanumeric.take(6).mkString
+      spark.conf.set(s"spark.sql.catalog.$cat", "graft.sources.GraftCatalog")
+      spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
+
+      // sparse: two overlapping writes (slab merge partitions), a
+      // DELETE WHERE on a dim range and an attribute-predicate
+      // tombstone (both by predicate), a MERGE whose matched deletes
+      // are coordinate tombstones, then a write newer than them all
+      spark.sql(s"""CREATE TABLE $cat.t (k BIGINT, v BIGINT, s STRING)
+        |TBLPROPERTIES('graft.dimensions'='k')""".stripMargin)
+      val path = s"$wh/t"
+      val m = new Model[Long]
+      def write(keys: Seq[Long]): Unit = {
+        val rs = keys.map(k => (k, r.nextInt(100).toLong, s"s${r.nextInt(4)}"))
+        val before = fragIds(path)
+        GraftArray.write(spark, path, spark.createDataFrame(rs)
+          .toDF("k", "v", "s").coalesce(2))
+        val (id, ts) = newest(path, before)
+        rs.foreach { case (k, v, s) => m.put(k, m.Version(id, ts, v, s)) }
+      }
+      write((0L until n.toLong).filter(_ => r.nextInt(4) > 0))
+      val lo = r.nextInt(n / 2).toLong
+      write((lo until lo + n).filter(_ => r.nextInt(4) > 0))
+      val dlo = r.nextInt(n).toLong
+      spark.sql(s"DELETE FROM $cat.t WHERE k BETWEEN $dlo AND ${dlo + 2}")
+      m.mask((k, _) => k >= dlo && k <= dlo + 2)
+      val cut = r.nextInt(30).toLong
+      GraftArray.commitTombstone(spark, path, Cmp("<", "v", cut))
+      m.mask((_, ver) => ver.v < cut)
+      val visible = m.visible.keys.toSeq.sorted
+      // the first matched key is always deleted
+      val src = (r.shuffle(visible).take(4).zipWithIndex
+        .map { case (k, i) => (k, i == 0 || r.nextBoolean()) } ++
+        Seq((n * 2L, false))).map { case (k, del) => (k, 1000L + k, del) }
+      spark.createDataFrame(src).toDF("k", "nv", "del")
+        .createOrReplaceTempView(s"${cat}_src")
+      val before = fragIds(path)
+      spark.sql(s"""MERGE INTO $cat.t t USING ${cat}_src u ON t.k = u.k
+        |WHEN MATCHED AND u.del THEN DELETE
+        |WHEN MATCHED THEN UPDATE SET v = u.nv
+        |WHEN NOT MATCHED THEN INSERT (k, v, s) VALUES (u.k, u.nv, 'm')
+        |""".stripMargin)
+      val (mid, mts) = newest(path, before)
+      val seen = m.visible
+      src.foreach { case (k, nv, del) =>
+        if (del) m.mask((kk, _) => kk == k)
+        else m.put(k, m.Version(mid, mts, nv, seen.get(k).map(_.s).getOrElse("m")))
+      }
+      write(Seq.fill(3)(r.nextInt(n).toLong).distinct)
+      assert(GraftArray.fragments(spark, path).exists(_.deleteCoordFiles.nonEmpty))
+      val all = load(path).select(col("k"), col("v"), col("s"),
+        col("_frag_id"), col("_commit_ts"))
+      val keysOnly = load(path).select("k")
+      val want = m.visible.toSeq.sortBy(_._1).map { case (k, ver) =>
+        Row(k, ver.v, ver.s, ver.fragId, ver.ts) }
+
+      // hash ownership: two string-dim fragments with coincident MBRs
+      // (shared first and last name), an attribute tombstone between
+      val hpath = s"$wh/h"
+      GraftArray.create(spark, hpath, ArraySchema(ArrayKind.Sparse,
+        Seq(DimensionSpec("name", StringType)), Seq(AttributeSpec("v", LongType))))
+      val hm = new Model[String]
+      def hwrite(names: Seq[String]): Unit = {
+        val rs = names.map(nm => (nm, r.nextInt(100).toLong))
+        val before = fragIds(hpath)
+        GraftArray.write(spark, hpath, spark.createDataFrame(rs)
+          .toDF("name", "v").coalesce(1))
+        val (id, ts) = newest(hpath, before)
+        rs.foreach { case (nm, v) => hm.put(nm, hm.Version(id, ts, v, nm)) }
+      }
+      val names = (0 until n).map(i => f"doc_$i%03d")
+      hwrite(names)
+      val hcut = r.nextInt(30).toLong
+      GraftArray.commitTombstone(spark, hpath, Cmp("<", "v", hcut))
+      hm.mask((_, ver) => ver.v < hcut)
+      hwrite(names.head +: names.tail.init.filter(_ => r.nextBoolean()) :+ names.last)
+      val hall = load(hpath).select(col("name"), col("v"), col("_frag_id"))
+      val hwant = hm.visible.toSeq.sortBy(_._1).map { case (k, ver) =>
+        Row(k, ver.v, ver.fragId) }
+
+      // dense: written cells, fills between them, one written cell
+      // deleted (it reverts to the fill)
+      val dpath = s"$wh/d"
+      GraftArray.create(spark, dpath, ArraySchema(ArrayKind.Dense,
+        Seq(DimensionSpec("r", LongType, Some("0"), Some(s"${2 * n}"), Some(8L))),
+        Seq(AttributeSpec("v", LongType, nullable = true, fillValue = Some("-1")))))
+      val written = (0L to 2L * n).filter(_ => r.nextInt(3) == 0)
+        .map(c => c -> r.nextInt(100).toLong).toMap ++
+        Map(1L -> 5L, 2L * n - 1 -> 6L)
+      GraftArray.write(spark, dpath, spark.createDataFrame(written.toSeq)
+        .toDF("r", "v").coalesce(2))
+      val gone = r.shuffle(written.keys.toSeq).head
+      GraftArray.commitTombstone(spark, dpath, Cmp("=", "r", gone))
+      val dwant = (written.keys.min to written.keys.max).map(c =>
+        Row(c, if (c == gone) -1L else written.getOrElse(c, -1L)))
+
+      val dfs = Seq(all, keysOnly, hall, load(dpath))
+      val hashParts = scanOf(hall).inputPartitions.collect {
+        case p: graft.sources.v2.GraftInputPartition => p }
+      assert(dfs.forall(df => scanOf(df).supportsColumnar), "row-based scan")
+      assert(hashParts.nonEmpty && hashParts.forall(_.hashMod > 1),
+        s"not hash-owned: $hashParts")
+      assert(rowsOf(all).sortBy(_.getLong(0)) == want, "sparse rows")
+      assert(rowsOf(keysOnly).map(_.getLong(0)).sorted == want.map(_.getLong(0)),
+        "sparse keys")
+      assert(rowsOf(hall).sortBy(_.getString(0)) == hwant, "hash-owned rows")
+      assert(rowsOf(load(dpath)).sortBy(_.getLong(0)) == dwant, "dense cells")
+      true
+    }
+    val res = SCTest.check(SCTest.Parameters.default
+      .withMinSuccessfulTests(4).withInitialSeed(Seed(20261020L)), prop)
+    assert(res.passed, res.status.toString)
   }
 }

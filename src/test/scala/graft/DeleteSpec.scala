@@ -208,6 +208,12 @@ class DeleteSpec extends SparkSpec {
       // the backlog delivers post-delete: k<3 never reaches the sink
       assert(spark.table(name).orderBy("k").as[(Long, Double)]
         .collect().toSeq == Seq((3L, 3.0)))
+      // the masking partition reads columnar
+      val scans = q.asInstanceOf[org.apache.spark.sql.execution.streaming
+        .runtime.StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+        .collect { case s: org.apache.spark.sql.execution.datasources.v2
+          .MicroBatchScanExec => s }
+      assert(scans.nonEmpty && scans.forall(_.supportsColumnar))
     } finally q.stop()
   }
 

@@ -211,7 +211,7 @@ class ScanPlanningSpec extends SparkSpec {
     }
   }
 
-  test("limit pushdown caps per-partition rows and stays exact") {
+  test("LIMIT over a scan stays exact, merged arrays included") {
     val uri = tmp()
     GraftArray.create(spark, uri, sch)
     GraftArray.write(spark, uri,
@@ -223,6 +223,15 @@ class ScanPlanningSpec extends SparkSpec {
     val got = df.filter(col("v") === 3.0).limit(4)
       .select("k").collect().map(_.getLong(0))
     assert(got.length == 4 && got.forall(k => k % 7 == 3))
+    // an overlapping rewrite of every key: the 5 rows Spark's Limit
+    // takes from the merge partitions are latest-wins rows
+    GraftArray.write(spark, uri,
+      spark.range(0, 10000).select(col("id").as("k"), lit(-1.0).as("v")))
+    val merged = spark.read.format("graftarray").option("path", uri).load()
+    val five = merged.limit(5).collect()
+    assert(five.length == 5 && five.forall(_.getDouble(1) == -1.0),
+      five.mkString(","))
+    assert(five.map(_.getLong(0)).distinct.length == 5)
   }
 
   test("overlapping multi-file fragments split into range-slab partitions") {
@@ -343,7 +352,7 @@ class ScanPlanningSpec extends SparkSpec {
     assert(frags.size == 1, s"prefix did not prune fragments: $frags")
   }
 
-  test("disjoint-fragment scans run columnar; merge scans stay row-based") {
+  test("disjoint-fragment and merge scans both run columnar") {
     val uri = tmp()
     GraftArray.create(spark, uri, sch)
     GraftArray.write(spark, uri,
@@ -359,7 +368,7 @@ class ScanPlanningSpec extends SparkSpec {
     // pushed predicate still correct through the columnar path (Spark
     // re-applies it as a codegen filter over the batches)
     assert(df.filter(col("k") >= 5500L && col("v") === 2.0).count() == 500)
-    // overlapping fragments (latest-wins merge) must stay row-based
+    // overlapping fragments (latest-wins merge) read columnar too
     val uri2 = tmp()
     GraftArray.create(spark, uri2, sch)
     GraftArray.write(spark, uri2,
@@ -369,16 +378,16 @@ class ScanPlanningSpec extends SparkSpec {
     val df2 = spark.read.format("graftarray").option("path", uri2).load()
     val scan2 = df2.queryExecution.executedPlan.collect {
       case b: BatchScanExec => b }.head
-    assert(!scan2.supportsColumnar, "merge partitions must be row-based")
+    assert(scan2.supportsColumnar, "merge partitions read columnar")
     assert(df2.count() == 100)
   }
 
-  test("mixed disjoint + overlapping fragments scan row-based, not crash") {
-    // one disjoint fragment (columnar-eligible on its own) next to an
-    // overlapping pair (slab merge partitions): Spark rejects scans
-    // whose partitions disagree on row-vs-columnar, so the decision
-    // must be made scan-wide on the driver — a per-partition answer
-    // threw "Cannot mix row-based and columnar input partitions" here
+  test("mixed disjoint + overlapping fragments scan columnar, not crash") {
+    // one disjoint fragment (a simple partition) next to an overlapping
+    // pair (slab merge partitions): Spark rejects scans whose
+    // partitions disagree on row-vs-columnar ("Cannot mix row-based and
+    // columnar input partitions"), so every partition kind must answer
+    // the same
     val uri = tmp()
     GraftArray.create(spark, uri, sch)
     GraftArray.write(spark, uri, spark.range(0, 500).coalesce(1)
@@ -397,8 +406,8 @@ class ScanPlanningSpec extends SparkSpec {
       p.slabHi.isEmpty && p.hashMod == 0), "no simple partition planned")
     assert(parts.exists(p => p.needDedup || p.slabLo.isDefined ||
       p.slabHi.isDefined || p.hashMod > 0), "no merge partition planned")
-    // uniform row-based execution, correct merge result
-    assert(!scan.supportsColumnar, "mixed plan must be uniformly row-based")
+    // uniform columnar execution, correct merge result
+    assert(scan.supportsColumnar, "mixed plan must be uniformly columnar")
     assert(df.count() == 1000)
     assert(df.filter(col("k") < 500L).agg(min("v"), max("v"))
       .as[(Double, Double)].head() == ((2.0, 2.0)))
@@ -577,7 +586,7 @@ class ScanPlanningSpec extends SparkSpec {
       r._3 == idByTs(t1) && r._4 == t1))
     assert(rows.filter(_._1 >= 500).forall(r =>
       r._3 == idByTs(t2) && r._4 == t2))
-    // latest-wins merge (row path): the winning version's fragment
+    // latest-wins merge: the winning version's fragment
     val t3 = GraftArray.write(spark, uri, spark.range(0, 50).coalesce(1)
       .select(col("id").as("k"), lit(3.0).as("v")))
     val idByTs2 = GraftArray.fragments(spark, uri)
@@ -742,7 +751,7 @@ class ScanPlanningSpec extends SparkSpec {
   test("latest-wins merge path decodes files vectorized, not via Groups") {
     val uri = tmp()
     GraftArray.create(spark, uri, sch)
-    // overlapping fragments → slab-merge partitions on the row path
+    // overlapping fragments → slab-merge partitions
     GraftArray.write(spark, uri, spark.range(0, 2000).coalesce(2)
       .select(col("id").as("k"), lit(1.0).as("v")))
     GraftArray.write(spark, uri, spark.range(0, 2000).coalesce(2)
@@ -750,15 +759,15 @@ class ScanPlanningSpec extends SparkSpec {
     val df = spark.read.format("graftarray").option("path", uri).load()
     val scan = df.queryExecution.executedPlan.collect {
       case b: BatchScanExec => b }.head
-    assert(!scan.supportsColumnar, "merge plan reports row-based to Spark")
-    // merged result stays exact through the row reader's vectorized
-    // decode (the only decoder there is)
+    assert(scan.supportsColumnar, "merge plan reports columnar to Spark")
+    // merged result stays exact through the vectorized decode (the
+    // only decoder there is)
     assert(df.count() == 2000)
     assert(df.agg(min("v"), max("v")).as[(Double, Double)].head() ==
       ((2.0, 2.0)))
   }
 
-  test("LIST columns in the projection scan columnar; merges still read row-based") {
+  test("LIST columns in the projection scan columnar, merges included") {
     val uri = tmp()
     GraftArray.create(spark, uri, ArraySchema(ArrayKind.Sparse,
       Seq(DimensionSpec("k", LongType)),
@@ -777,11 +786,11 @@ class ScanPlanningSpec extends SparkSpec {
     assert(load().selectExpr("aggregate(emb, 0D, (a, x) -> a + x)")
       .as[Double].collect().sum == (0 until 100).map(_ + 1.0).sum)
     // an overlapping second fragment forces latest-wins merge slabs:
-    // the LIST projection reads row-based and the newer version wins
+    // the LIST projection still reads columnar and the newer version wins
     GraftArray.write(spark, uri, spark.range(50, 100)
       .select(col("id").as("k"), array(lit(9.0f), lit(9.0f)).as("emb")))
     val merged = load().select("k", "emb")
-    assert(!scanOf(merged).supportsColumnar, "merge plan reports row-based")
+    assert(scanOf(merged).supportsColumnar, "merge plan reports columnar")
     assert(merged.as[(Long, Seq[Float])].collect().sortBy(_._1).toSeq ==
       want.take(50) ++ (50L until 100L).map(k => (k, Seq(9.0f, 9.0f))))
     assert(load().select("k").count() == 100)

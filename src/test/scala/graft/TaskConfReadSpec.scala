@@ -37,8 +37,8 @@ object CountingDecryptionFactory {
 
 /** The scan's readers open fragment files with the task's Hadoop
   * configuration: reader and writer factories carry a broadcast handle
-  * instead of the conf, the conf reaches parquet's read options on both
-  * readers, and the per-file requested schema set on the shared task
+  * instead of the conf, the conf reaches parquet's read options on
+  * simple and merge partitions alike, and the per-file requested schema set on the shared task
   * conf never leaks from one file into the next. */
 class TaskConfReadSpec extends SparkSpec {
 
@@ -120,15 +120,15 @@ class TaskConfReadSpec extends SparkSpec {
   test("the task conf reaches parquet read options on both readers") {
     val conf = spark.sparkContext.hadoopConfiguration
     val key = DecryptionPropertiesFactory.CRYPTO_FACTORY_CLASS_PROPERTY_NAME
-    val cases = Seq("columnar" -> (s1Like(), true), "merge" -> (s2Like(), false))
+    val cases = Seq("simple" -> s1Like(), "merge" -> s2Like())
     try {
       conf.set(key, classOf[CountingDecryptionFactory].getName)
-      cases.foreach { case (name, (uri, columnar)) =>
+      cases.foreach { case (name, uri) =>
         CountingDecryptionFactory.seen.clear()
         // an aggregate statistics cannot answer, so every file is read
         val q = spark.read.format("graftarray").option("path", uri).load()
           .agg(sum(col("v") * 2))
-        assert(scanOf(q).supportsColumnar == columnar, s"$name plan")
+        assert(scanOf(q).supportsColumnar, s"$name plan")
         assert(q.head().getLong(0) > 0)
         val want = files(uri).map(f => CountingDecryptionFactory.key(new Path(f._1)))
         val missed = want.filterNot(CountingDecryptionFactory.seen.contains)
@@ -159,47 +159,42 @@ class TaskConfReadSpec extends SparkSpec {
     def want(k: Long): Row4 =
       if (k < 100) (k, k, null, Long.box(7L))
       else (k, k + 1000, "p", if (k % 10 == 0) null else Long.box(5L))
-    def read(f: PartitionReaderFactory, p: GraftInputPartition,
-        columnar: Boolean): Seq[Row4] = {
+    def read(f: PartitionReaderFactory, p: GraftInputPartition): Seq[Row4] = {
       val out = Seq.newBuilder[Row4]
       def row(r: org.apache.spark.sql.catalyst.InternalRow): Row4 = (
         r.getLong(0), r.getLong(1),
         if (r.isNullAt(2)) null else r.getUTF8String(2).toString,
         if (r.isNullAt(3)) null else Long.box(r.getLong(3)))
-      if (columnar) drain(f.createColumnarReader(p)) { b =>
+      drain(f.createColumnarReader(p)) { b =>
         b.rowIterator().asScala.foreach(r => out += row(r)) }
-      else drain(f.createReader(p))(r => out += row(r))
       out.result().sortBy(r => (r._1, r._2))
     }
     val df = spark.read.format("graftarray").option("path", uri).load()
       .select("k", "v", "s", "w")
 
-    // merge partition over all four files through the row reader
+    // merge partition over all four files
     val mergeFactory = scanOf(df).readerFactory
-    val merged = read(mergeFactory, GraftInputPartition(all, needDedup = true),
-      columnar = false)
+    val merged = read(mergeFactory, GraftInputPartition(all, needDedup = true))
     assert(merged == (0L until 300L).map(want))
     assert(df.collect().map(r => (r.getLong(0), r.getLong(1),
       r.getString(2), if (r.isNullAt(3)) null else Long.box(r.getLong(3))))
       .sortBy(_._1).toSeq == (0L until 300L).map(want))
 
-    // columnar reader, files interleaved post/pre/post/pre in one
-    // partition so a leak in either direction would show; no merge, so
-    // both versions of [100, 200) come out
+    // simple partition, files interleaved post/pre/post/pre so a leak in
+    // either direction would show; no merge, so both versions of
+    // [100, 200) come out
     val interleaved = Seq(post(0), pre(0), post(1), pre(1))
-    val colFactory = new GraftReaderFactory(df.schema, Seq("k"), Nil,
-      HadoopConfBroadcast(spark), columnar = true,
-      evoFills = Map("w" -> 7L))
-    val cols = read(colFactory, GraftInputPartition(interleaved, needDedup = false),
-      columnar = true)
+    val colFactory = new GraftReaderFactory(df.schema, sch.dimStruct, Nil,
+      HadoopConfBroadcast(spark), evoFills = Map("w" -> 7L))
+    val cols = read(colFactory, GraftInputPartition(interleaved, needDedup = false))
     val wantCols = ((0L until 200L).map(k => (k, k, null, Long.box(7L))) ++
       (100L until 300L).map(want)).sortBy(r => (r._1, r._2))
     assert(cols == wantCols)
 
-    // projection-less count(*) through the columnar reader: footer
+    // projection-less count(*) through a simple partition: footer
     // row counts only, whatever the last file's requested schema was
-    val countFactory = new GraftReaderFactory(new StructType(), Seq("k"), Nil,
-      HadoopConfBroadcast(spark), columnar = true)
+    val countFactory = new GraftReaderFactory(new StructType(), sch.dimStruct,
+      Nil, HadoopConfBroadcast(spark))
     var n = 0L
     drain(countFactory.createColumnarReader(
       GraftInputPartition(interleaved, needDedup = false)))(b => n += b.numRows())
