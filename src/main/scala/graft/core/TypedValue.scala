@@ -38,7 +38,7 @@ object TypedValue {
     case _: DecimalType => s.toLong // unscaled (scale is fixed per column)
     case FloatType | DoubleType => s.toDouble
     case BooleanType => s.toBoolean
-    case StringType => s
+    case BinaryType => java.util.Base64.getDecoder.decode(s)
     case _ => s
   }
 
@@ -46,9 +46,9 @@ object TypedValue {
     * reader: decoded cells and manifest values (fills, aggregate
     * results) alike. Integral values narrow from Long, DATE from epoch
     * days and FLOAT from Double; a manifest decimal is its unscaled
-    * Long at the column's scale and a manifest binary is base64 text
-    * (see [[parse]] and [[show]]). Decoded decimals, bytes, arrays and
-    * Long/Double/Boolean cells of their own width pass through. */
+    * Long at the column's scale (see [[parse]] and [[show]]). Decoded
+    * decimals, bytes, arrays and Long/Double/Boolean cells of their own
+    * width pass through. */
   def toCatalyst(dt: DataType, v: Any): Any = (dt, v) match {
     case (_, null) => null
     case (ByteType, l: Long) => l.toByte
@@ -56,7 +56,6 @@ object TypedValue {
     case (IntegerType | DateType, l: Long) => l.toInt
     case (FloatType, d: Double) => d.toFloat
     case (StringType, s: String) => UTF8String.fromString(s)
-    case (BinaryType, s: String) => java.util.Base64.getDecoder.decode(s)
     case (d: DecimalType, l: Long) => Decimal(l, d.precision, d.scale)
     case (_, other) => other
   }
@@ -94,6 +93,8 @@ object TypedValue {
       case (x: Double, y: Long) => java.lang.Double.compare(x, y.toDouble)
       case (x: String, y: String) => utf8Compare(x, y)
       case (x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
+      case (x: Array[Byte], y: Array[Byte]) =>
+        java.util.Arrays.compareUnsigned(x, y) // parquet's binary order
       case _ => throw new IllegalArgumentException(
         s"incomparable: ${a.getClass} vs ${b.getClass}")
     }

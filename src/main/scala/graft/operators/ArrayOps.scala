@@ -471,8 +471,8 @@ object ArrayOps {
       val thr = ord.count() / 100
       (0 until 5).foreach { k =>
         val sl = ord.filter(col("o_orderkey") % 1000 === k)
-        // emptiness decided inside the write pass (footer counts) —
-        // no separate isEmpty job per slice
+        // emptiness decided inside the write job (the writer tasks'
+        // row counts) — no separate isEmpty job per slice
         GraftArray.writeNonEmpty(s, uri, sl, origin = None)
       }
       GraftArray.write(s, uri, ord.filter(col("o_orderkey") % 1000 >= 5))

@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core._
@@ -26,6 +25,13 @@ import graft.core._
   *    array's domain materialize as fill values [ha_mytile.cc:1088–1164]
   *    in the DSv2 scan's fill partitions, which read columnar like
   *    every other partition; `load` returns written cells only.
+  *
+  * Every write goes through the one fragment writer
+  * (`GraftBatchWrite`/`GraftDataWriter`), like the reference's single
+  * `write_row` → `flush_write` path that bulk insert reuses
+  * [ha_mytile.cc:3158–3410]: SQL INSERT reaches it through Spark's V2
+  * append, `write`, the streaming sink, consolidation and rollback
+  * after clustering cells by the array's layout.
   */
 object GraftArray {
 
@@ -60,56 +66,44 @@ object GraftArray {
 
   // ---- write (INSERT → new immutable fragment) ----------------------
 
-  /** Append `df` as one fragment. Null dimension values are rejected
-    * (dims are the coordinate key [ha_mytile.cc:3166–3171]). Returns
-    * the fragment timestamp (time-travel handle). */
+  /** Append `df` as one fragment, clustered by the array's cell order
+    * into `partitions` files (default: one per input partition), or one
+    * file per bucket, and written by the same fragment writer as SQL
+    * INSERT, whose guards reject null dimension values (dims are the
+    * coordinate key [ha_mytile.cc:3166–3171]), out-of-domain
+    * storage-typed values, values outside an enum and characters
+    * outside a charset. Returns the fragment timestamp (time-travel
+    * handle). */
   def write(spark: SparkSession, uri: String, df: DataFrame,
       origin: Option[String] = None,
-      /** Explicit file/partition count for the clustered layout —
-        * preferred over the `spark.graft.write.partitions` conf when a
-        * caller needs a specific granularity (session-conf mutation is
-        * a read-modify-write race under concurrent query building). */
       partitions: Option[Int] = None): Long =
-    writeFragment(spark, uri, df, origin, None, Nil, partitions)
+    writeFragment(spark, uri, df, origin, partitions = partitions).get
 
   /** Write only when the input has rows; an empty input leaves the
-    * array untouched and returns None. Emptiness is decided from the
-    * written files' parquet footers INSIDE the one write pass — the
-    * streaming sink previously ran a separate `isEmpty` Spark job per
-    * micro-batch before every write (one extra job per batch on
-    * st9/st17/st18); an empty batch now pays one empty write + rollback
-    * instead, and a non-empty batch pays nothing extra. */
+    * array untouched and returns None. Emptiness is the writer tasks'
+    * own row count, so no separate `isEmpty` job runs first (the
+    * streaming sink writes through here once per micro-batch). */
   private[graft] def writeNonEmpty(spark: SparkSession, uri: String,
       df: DataFrame, origin: Option[String]): Option[Long] =
-    writeFragmentImpl(spark, uri, df, origin, None, Nil, None,
-      skipIfEmpty = true)
+    writeFragment(spark, uri, df, origin, skipIfEmpty = true)
 
-  /** Full write path; `commitTs`/`replaces` are consolidation's hooks
-    * (commit the merged fragment at the originals' max timestamp so
-    * the time-travel axis is preserved). */
-  private[graft] def writeFragment(spark: SparkSession, uri: String,
+  /** Clusters `df` by the array's layout and commits it as one fragment
+    * through [[GraftBatchWrite.run]]. `commitTs`/`replaces` are
+    * consolidation's and rollback's hooks: commit the rewritten
+    * fragment at the originals' max timestamp (or now) superseding
+    * them. Only those rewrites may write an encrypted array here; the
+    * writer re-encrypts with the session key. */
+  private def writeFragment(spark: SparkSession, uri: String,
       df: DataFrame, origin: Option[String],
-      commitTs: Option[Long], replaces: Seq[String],
-      partitions: Option[Int] = None): Long =
-    writeFragmentImpl(spark, uri, df, origin, commitTs, replaces,
-      partitions, skipIfEmpty = false).get
-
-  private def writeFragmentImpl(spark: SparkSession, uri: String,
-      df: DataFrame, origin: Option[String],
-      commitTs: Option[Long], replaces: Seq[String],
-      partitions: Option[Int],
-      skipIfEmpty: Boolean): Option[Long] = {
-    val st = store(spark, uri)
-    val schema = st.loadSchema()
-    require(!schema.encrypted, "encrypted arrays write through the DSv2 " +
-      "path only (INSERT INTO via the graft catalog)")
+      commitTs: Option[Long] = None, replaces: Seq[String] = Nil,
+      partitions: Option[Int] = None,
+      skipIfEmpty: Boolean = false): Option[Long] = {
+    val schema = store(spark, uri).loadSchema()
+    require(!schema.encrypted || replaces.nonEmpty, "encrypted arrays " +
+      "write through the DSv2 path only (INSERT INTO via the graft catalog)")
     val cols = schema.columnNames
     require(df.columns.toSeq.sorted == cols.sorted,
       s"schema mismatch: ${df.columns.toSeq.sorted} vs ${cols.sorted}")
-
-    val fragId = java.util.UUID.randomUUID.toString.take(12)
-    val dataDir = st.fragmentDataDir(fragId)
-
     // conform input to the array's column types (parquet physical type
     // must match the schema exactly for the readers); sameType skips
     // nullability-only differences, which cast refuses to tighten
@@ -120,165 +114,18 @@ object GraftArray {
         inTypes(c), want)) col(c)
       else col(c).cast(want).as(c)
     }: _*)
-    // null-dim + enum-domain guards computed inside the same write pass
-    val nullGuarded = schema.dims.foldLeft(typed) {
-      (d, dim) =>
-        d.withColumn(dim.name,
-          when(col(dim.name).isNull,
-            raise_error(lit(s"null value in dimension ${dim.name}")))
-            .otherwise(col(dim.name)))
-    }
-    // enumerated attrs only accept their declared values
-    // [ref: ENUM ⇄ TileDB Enumeration, ha_mytile.cc:1330–1351]
-    val enumGuarded = schema.attrs.filter(_.enumValues.nonEmpty)
-      .foldLeft(nullGuarded) { (d, a) =>
-        d.withColumn(a.name,
-          when(col(a.name).isNotNull &&
-            !col(a.name).isInCollection(a.enumValues),
-            raise_error(concat(lit(s"value not in enum ${a.name}: "),
-              col(a.name).cast("string"))))
-            .otherwise(col(a.name)))
-      }
-    // declared storage types (unsigned, TIME) enforce their value
-    // domain — a UINT16 column rejects 70000 exactly as the reference's
-    // unsigned columns do [mytile.cc:385–398; SURVEY §1.2]
-    val guarded = schema.storageTyped.foldLeft(enumGuarded) {
-      case (d, (n, st)) => (st.guardLo, st.guardHi) match {
-        case (Some(lo), Some(hi)) =>
-          val dt = schema.dataTypeOf(n)
-          val (loL, hiL) = (lit(lo).cast(dt), lit(hi).cast(dt))
-          d.withColumn(n,
-            when(col(n).isNotNull && (col(n) < loL || col(n) > hiL),
-              raise_error(concat(
-                lit(s"value out of ${st.name} domain for $n: "),
-                col(n).cast("string"))))
-              .otherwise(col(n)))
-        case _ => d
-      }
-    }
-    // charset-limited string types reject characters outside their
-    // repertoire, like the reference's ascii/ucs2 columns
-    // [mytile.cc:218–224, 896–923]: ASCII iff UTF-8 octets == chars;
-    // UCS-2 (fixed 2-byte, BMP-only) rejects supplementary planes
-    val strGuarded = schema.storageTyped.foldLeft(guarded) {
-      case (d, (n, st)) if graft.core.StorageTypes.asciiOnly(st.name) =>
-        d.withColumn(n,
-          when(col(n).isNotNull &&
-            octet_length(col(n)) =!= length(col(n)),
-            raise_error(concat(
-              lit(s"non-ASCII value in ${st.name} $n: "), col(n))))
-            .otherwise(col(n)))
-      case (d, (n, st)) if graft.core.StorageTypes.bmpOnly(st.name) =>
-        d.withColumn(n,
-          when(col(n).isNotNull &&
-            col(n).rlike("[\\x{10000}-\\x{10FFFF}]"),
-            raise_error(concat(
-              lit(s"supplementary character in ${st.name} $n: "),
-              col(n))))
-            .otherwise(col(n)))
-      case (d, _) => d
-    }
-    // sums for the aggregate-pushdown fast path ride the write pass as
-    // an Observation — the data is seen exactly once (the round-1
-    // implementation re-read the fragment it had just written)
-    val struct = schema.toStruct
-    val numeric = struct.fields.filter(f => f.dataType match {
-      case ByteType | ShortType | IntegerType | LongType |
-           FloatType | DoubleType | _: DecimalType => true
-      case _ => false
-    })
-    val obs = org.apache.spark.sql.Observation(s"graft_write_$fragId")
     val clustered = schema.buckets match {
       // bucketed layout: task i holds exactly bucket i (identity
       // partitioner — `repartition(n, expr)` would re-hash the bucket
       // id and mix buckets per task), rows sorted by dims within. The
       // file written by task i is bucket i, recorded in the manifest.
-      case Some(n) => bucketByDim0(schema, strGuarded, n)
-      case None => clusterByCellOrder(schema, strGuarded, partitions)
+      case Some(n) => bucketByDim0(schema, typed, n)
+      case None => clusterByCellOrder(schema, typed, partitions)
     }
-    val observed =
-      if (numeric.isEmpty) clustered
-      else clustered.observe(obs,
-        sum(col(numeric.head.name)).as(numeric.head.name),
-        numeric.tail.map(f => sum(col(f.name)).as(f.name)): _*)
-    // the fragment readers speak INT64-micros only — never INT96. The
-    // conf is scoped to this write and RESTORED: setting it
-    // permanently silently changed every later non-graft parquet write
-    // in a session configured for INT96 interop.
-    val tsTypeKey = "spark.sql.parquet.outputTimestampType"
-    val prevTsType = spark.conf.getOption(tsTypeKey)
-    spark.conf.set(tsTypeKey, "TIMESTAMP_MICROS")
-    try observed.write.mode("errorifexists")
-      .option("compression", schema.effectiveCodec.toLowerCase)
-      .parquet(dataDir.toString)
-    finally prevTsType match {
-      case Some(v) => spark.conf.set(tsTypeKey, v)
-      case None => spark.conf.unset(tsTypeKey)
-    }
-
-    // min/max/nullCount from parquet footers (no data re-read)
-    val fs = st.fileSystem
-    val files = fs.listStatus(dataDir).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).toSeq
-    val perFile = ParquetStats.collectPerFile(files, struct,
-      spark.sparkContext.hadoopConfiguration)
-    val rows = perFile.map(_._2).sum
-    if (skipIfEmpty && rows == 0) {
-      // roll back the empty fragment: no manifest was committed, so the
-      // orphan data dir is invisible to every reader — remove it and
-      // report "nothing written"
-      fs.delete(dataDir, true)
-      return None
-    }
-    // fragment stats = pure fold of the footers read ONCE above
-    val (_, footerStats) = ParquetStats.merge(perFile, struct)
-    val sums: Map[String, (Option[Long], Option[Double])] =
-      if (numeric.isEmpty || rows == 0) Map.empty
-      else {
-        val row = obs.get
-        numeric.map { f =>
-          f.name -> (f.dataType match {
-            case ByteType | ShortType | IntegerType | LongType =>
-              (row.get(f.name).collect { case n: Number => n.longValue() }, None)
-            case dt: DecimalType =>
-              // decimal sums live in the manifest as unscaled longs
-              (row.get(f.name).flatMap {
-                case d: java.math.BigDecimal => try
-                  Some(d.setScale(dt.scale).unscaledValue().longValueExact())
-                catch { case _: ArithmeticException => None }
-                case _ => None
-              }, None)
-            case _ =>
-              (None, row.get(f.name).collect { case n: Number => n.doubleValue() })
-          })
-        }.toMap
-      }
-    val stats = footerStats.map { case (c, s0) =>
-      val (sl, sd) = sums.getOrElse(c, (None, None))
-      c -> s0.copy(sumLong = sl, sumDouble = sd)
-    }
-    val ts = commitTs.getOrElse(now())
-    // bucketed fragments record file→bucket from the task index in the
-    // part file name (probe-routed repartition ⇒ task index == bucket)
-    val fileBuckets: Map[String, Int] = schema.buckets match {
-      case Some(_) => files.flatMap { f =>
-        "part-(\\d{5})".r.findFirstMatchIn(f.getName)
-          .map(m => s"frag_$fragId/${f.getName}" -> m.group(1).toInt)
-      }.toMap
-      case None => Map.empty
-    }
-    st.commitFragment(FragmentMeta(fragId, ts,
-      files.map(f => s"frag_$fragId/${f.getName}"), rows, stats,
-      perFile.map { case (p, _, st0) =>
-        s"frag_$fragId/${p.getName}" -> st0 }.toMap,
-      perFile.map { case (p, n, _) =>
-        s"frag_$fragId/${p.getName}" -> n }.toMap,
-      buckets = schema.buckets.filter(_ =>
-        fileBuckets.size == files.size),
-      fileBuckets = fileBuckets,
-      origin = origin, replaces = replaces,
-      sortedBy = sortedByOf(schema)))
-    Some(ts)
+    new graft.sources.v2.GraftBatchWrite(spark, uri, schema,
+      clustered.schema, commitTs, replaces, origin,
+      skipIfEmpty = skipIfEmpty, bucketed = schema.buckets.isDefined)
+      .run(clustered)
   }
 
   /** The column order this write path physically sorts each file by —
@@ -353,12 +200,10 @@ object GraftArray {
       partitions: Option[Int] = None): DataFrame = {
     val dims = schema.dims
     // explicit partition count — AQE would otherwise coalesce the range
-    // shuffle and collapse the per-file MBR granularity. Settable via
-    // spark.graft.write.partitions (skips the extra physical-plan
-    // conversion df.rdd costs); defaults to the input's partitioning.
-    def parts: Int = partitions.orElse(df.sparkSession.conf
-      .getOption("spark.graft.write.partitions").map(_.toInt))
-      .getOrElse(math.max(df.rdd.getNumPartitions, 1))
+    // shuffle and collapse the per-file MBR granularity; defaults to the
+    // input's partitioning
+    def parts: Int =
+      partitions.getOrElse(math.max(df.rdd.getNumPartitions, 1))
     schema.cellOrder match {
       case "UNORDERED" => partitions.fold(df)(df.coalesce)
       case "HILBERT" if dims.size >= 2 && dims.size <= 63 &&
@@ -435,9 +280,11 @@ object GraftArray {
     * fragments outside the window is unchanged: within-window versions
     * collapse to the window's winner at the window's max timestamp.
     * The merge runs inside the DSv2 scan (latest-wins and tombstone
-    * masking), and the rewrite re-clusters cells into files sized from
-    * the merged data, restoring per-file MBR pruning that many small
-    * interleaved fragments had destroyed.
+    * masking), and the rewrite goes through the one fragment writer
+    * (re-encrypting an encrypted array with the session key), which
+    * re-clusters cells into files sized from the merged data, restoring
+    * per-file MBR pruning that many small interleaved fragments had
+    * destroyed.
     * Returns the consolidated fragment's timestamp, or None if fewer
     * than two fragments were eligible. */
   def consolidate(spark: SparkSession, uri: String,
@@ -446,9 +293,7 @@ object GraftArray {
         * rebucket path needs the rewrite for its LAYOUT, not for a
         * merge. Full consolidation only. */
       force: Boolean = false): Option[Long] = {
-    val st = store(spark, uri)
-    val schema = st.loadSchema(asOf)
-    val frags = st.listFragments(asOf, since)
+    val frags = store(spark, uri).listFragments(asOf, since)
     def isTomb(f: FragmentMeta) =
       f.deletePred.isDefined || f.deleteCoordFiles.nonEmpty
     val dataN = frags.count(!isTomb(_))
@@ -478,27 +323,11 @@ object GraftArray {
     val replaced =
       if (since.isDefined) frags.filterNot(isTomb) else frags
     val merged = scan(spark, uri, asOf, since, rawCells = true)
-    val origin = s"consolidate:${replaced.size}"
-    if (schema.encrypted) {
-      // encrypted data round-trips through the DSv2 writer only (it
-      // re-encrypts); the consolidation hooks ride as internal write
-      // options inside the maintenance window — rejected on ordinary
-      // user writes. The session must hold the key for both halves.
-      spark.conf.set(graft.sources.v2.GraftMaintenance.ConfFlag, "true")
-      try
-        merged.write.format("graftarray").option("path", uri)
-          .option("graft.internal.commit_ts", maxTs.toString)
-          .option("graft.internal.replaces", replaced.map(_.id).mkString(","))
-          .option("graft.internal.origin", origin)
-          .mode("append").save()
-      finally spark.conf.unset(graft.sources.v2.GraftMaintenance.ConfFlag)
-    } else {
-      // the convenience writer re-clusters cells (restoring per-file
-      // MBR pruning), which the DSv2 INSERT path does not
-      writeFragment(spark, uri, merged, origin = Some(origin),
-        commitTs = Some(maxTs), replaces = replaced.map(_.id),
-        partitions = Some(mergedFiles(spark, merged)))
-    }
+    // the write re-clusters cells, restoring per-file MBR pruning
+    writeFragment(spark, uri, merged,
+      origin = Some(s"consolidate:${replaced.size}"),
+      commitTs = Some(maxTs), replaces = replaced.map(_.id),
+      partitions = Some(mergedFiles(spark, merged)))
     Some(maxTs)
   }
 
@@ -621,33 +450,12 @@ object GraftArray {
     * timestamp, or None when nothing newer than `ts` exists. */
   def rollback(spark: SparkSession, uri: String, asOfTs: Long)
       : Option[Long] = {
-    val st = store(spark, uri)
-    val schema = st.loadSchema()
-    val frags = st.listFragments(None)
+    val frags = store(spark, uri).listFragments(None)
     if (!frags.exists(_.timestamp > asOfTs)) return None
     val view = scan(spark, uri, Some(asOfTs), None, rawCells = true)
-    val origin = s"rollback:$asOfTs"
-    val ts =
-      if (schema.encrypted) {
-        // encrypted content round-trips through the DSv2 writer only
-        // (it re-encrypts); maintenance hooks ride as internal options
-        val commitAt = now()
-        spark.conf.set(graft.sources.v2.GraftMaintenance.ConfFlag, "true")
-        try
-          view.write.format("graftarray").option("path", uri)
-            .option("graft.internal.commit_ts", commitAt.toString)
-            .option("graft.internal.replaces",
-              frags.map(_.id).mkString(","))
-            .option("graft.internal.origin", origin)
-            .mode("append").save()
-        finally
-          spark.conf.unset(graft.sources.v2.GraftMaintenance.ConfFlag)
-        commitAt
-      } else
-        writeFragment(spark, uri, view, origin = Some(origin),
-          commitTs = None, replaces = frags.map(_.id),
-          partitions = Some(mergedFiles(spark, view)))
-    Some(ts)
+    writeFragment(spark, uri, view, origin = Some(s"rollback:$asOfTs"),
+      replaces = frags.map(_.id),
+      partitions = Some(mergedFiles(spark, view)))
   }
 
   /** `CALL cat.rebucket('t', n)` — change the storage bucket count:
@@ -667,10 +475,7 @@ object GraftArray {
   def rebucket(spark: SparkSession, uri: String, n: Int): Option[Long] = {
     val st = store(spark, uri)
     val s = st.loadSchema()
-    require(!s.encrypted,
-      "rebucket is unsupported on encrypted arrays: their consolidation " +
-        "rides the DSv2 writer, which does not produce bucket-complete " +
-        "files, so the rewrite could never re-arm the layout")
+    require(!s.encrypted, "rebucket is unsupported on encrypted arrays")
     val nb = if (n > 0) Some(n) else None
     if (s.buckets == nb) return None
     st.evolveSchema(s.copy(buckets = nb), now())

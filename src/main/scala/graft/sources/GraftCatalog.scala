@@ -293,7 +293,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     ident.name().toLowerCase match {
       case op @ ("consolidate" | "vacuum" | "rebucket" | "rollback"
                  | "compact_small" | "delete_fragments") =>
-        new GraftMaintenanceProcedure(op, this)
+        new GraftFragmentProcedure(op, this)
       case op @ ("build_pair_index" | "stage_media") =>
         new GraftArtifactProcedure(op)
       case other => throw new IllegalArgumentException(
@@ -324,7 +324,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   * all visible fragments into one (returns its timestamp, NULL when
   * fewer than two fragments exist); `vacuum(table)` reclaims superseded
   * fragments (returns the count removed). */
-class GraftMaintenanceProcedure(op: String, cat: GraftCatalog)
+class GraftFragmentProcedure(op: String, cat: GraftCatalog)
   extends procedures.UnboundProcedure {
   override def name(): String = op
   override def description(): String = op match {
@@ -345,7 +345,7 @@ class GraftMaintenanceProcedure(op: String, cat: GraftCatalog)
     new procedures.BoundProcedure {
       override def name(): String = op
       override def description(): String =
-        GraftMaintenanceProcedure.this.description()
+        GraftFragmentProcedure.this.description()
       override def parameters(): Array[procedures.ProcedureParameter] =
         if (op == "rebucket")
           Array(procedures.ProcedureParameter.in("table", StringType).build(),

@@ -68,8 +68,8 @@ class GraftRowLevelOperation(
 }
 
 case class GraftDeltaCommitMessage(
-    data: Option[GraftCommitMessage],
-    coords: Option[GraftCommitMessage]) extends WriterCommitMessage
+    data: GraftCommitMessage,
+    coords: GraftCommitMessage) extends WriterCommitMessage
 
 /** One fragment per row-level operation: updated/inserted versions as
   * data files, deleted coordinates as `del-*` files, one manifest. */
@@ -91,19 +91,11 @@ class GraftDeltaBatchWrite(
       keyHex)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.map(_.asInstanceOf[GraftDeltaCommitMessage])
-    val dataMsgs = msgs.flatMap(_.data).filter(_.rows > 0).toSeq
-    val coordMsgs = msgs.flatMap(_.coords).filter(_.rows > 0).toSeq
-    if (dataMsgs.isEmpty && coordMsgs.isEmpty) return // no-op operation
-    import GraftWriteStats.redact
-    GraftArray.store(spark, uri).commitFragment(FragmentMeta(
-      fragId, GraftArray.now(), dataMsgs.map(_.file),
-      dataMsgs.map(_.rows).sum,
-      redact(schema, GraftWriteStats.merge(schema, dataMsgs)),
-      dataMsgs.map(m => m.file -> redact(schema, m.stats)).toMap,
-      dataMsgs.map(m => m.file -> m.rows).toMap,
-      origin = Some(s"rowlevel"),
-      deleteCoordFiles = coordMsgs.map(_.file)))
+    val msgs = messages.map(_.asInstanceOf[GraftDeltaCommitMessage]).toSeq
+    // an operation that wrote and deleted nothing commits nothing
+    FragmentCommit(spark, uri, schema, fragId, msgs.map(_.data),
+      coordFiles = msgs.map(_.coords).filter(_.rows > 0).map(_.file),
+      origin = Some("rowlevel"), skipIfEmpty = true)
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -125,8 +117,8 @@ class GraftDeltaWriterFactory(
 
 /** Task-side delta writer: inserts/updates stream into a data part
   * file, deletes stream their rowId (dim tuple) into a `del` file;
-  * either writer opens lazily so a pure-update task writes no empty
-  * delete file and vice versa. */
+  * each file opens with its first row, so a pure-update task writes no
+  * empty delete file and vice versa. */
 class GraftDeltaWriter(
     uri: String, fragId: String, partitionId: Int,
     schema: ArraySchema, rowSchema: StructType,
@@ -141,41 +133,27 @@ class GraftDeltaWriter(
   private val dimStruct = StructType(schema.dims.map(d =>
     StructField(d.name, d.dataType, nullable = false)))
 
-  private var dataWriter: GraftDataWriter = _
-  private var coordWriter: GraftDataWriter = _
+  private val data = new GraftDataWriter(uri, fragId, partitionId, schema,
+    rowSchema, conf, keyHex, taskId = taskId)
+  private val coords = new GraftDataWriter(uri, fragId, partitionId, schema,
+    dimStruct, conf, keyHex, filePrefix = "del", taskId = taskId)
 
-  private def data(): GraftDataWriter = {
-    if (dataWriter == null)
-      dataWriter = new GraftDataWriter(uri, fragId, partitionId, schema,
-        rowSchema, conf, keyHex, taskId = taskId)
-    dataWriter
-  }
-  private def coords(): GraftDataWriter = {
-    if (coordWriter == null)
-      coordWriter = new GraftDataWriter(uri, fragId, partitionId, schema,
-        dimStruct, conf, keyHex, filePrefix = "del", taskId = taskId)
-    coordWriter
-  }
-
-  override def insert(row: InternalRow): Unit = data().write(row)
+  override def insert(row: InternalRow): Unit = data.write(row)
 
   override def update(meta: InternalRow, id: InternalRow,
-      row: InternalRow): Unit = data().write(row)
+      row: InternalRow): Unit = data.write(row)
 
   override def delete(meta: InternalRow, id: InternalRow): Unit =
-    coords().write(id)
+    coords.write(id)
 
   override def commit(): WriterCommitMessage = GraftDeltaCommitMessage(
-    Option(dataWriter).map(_.commit().asInstanceOf[GraftCommitMessage]),
-    Option(coordWriter).map(_.commit().asInstanceOf[GraftCommitMessage]))
+    data.commit().asInstanceOf[GraftCommitMessage],
+    coords.commit().asInstanceOf[GraftCommitMessage])
 
   override def abort(): Unit = {
-    Option(dataWriter).foreach(_.abort())
-    Option(coordWriter).foreach(_.abort())
+    data.abort()
+    coords.abort()
   }
 
-  override def close(): Unit = {
-    Option(dataWriter).foreach(_.close())
-    Option(coordWriter).foreach(_.close())
-  }
+  override def close(): Unit = ()
 }

@@ -265,7 +265,7 @@ class GraftScanBuilder(
           val f = fs.head._1
           // fragment fully inside the range → its fragment-level stats
           // are exact (and carry sums even when per-file stats don't,
-          // e.g. footer-derived fileStats from the convenience writer)
+          // as in manifests from the earlier footer-derived writer)
           if (fs.size == f.files.size) Seq((f.rows, f.stats))
           else fs.map { case (_, rel) =>
             if (!f.fileRows.contains(rel) || !f.fileStats.contains(rel)) {
@@ -292,8 +292,8 @@ class GraftScanBuilder(
       case StringType =>
         // strings only when provably untruncated. The invariant this
         // leans on is the WRITER's, not the stat length per se: graft
-        // manifests record full min/max values (GraftDataWriter and
-        // GraftArray.write never truncate), so any stat ≤ 32 bytes is
+        // manifests record full min/max values (GraftDataWriter never
+        // truncates), so any stat ≤ 32 bytes is
         // exact. The 32-byte cap mirrors the reference's string-agg
         // gate [ha_mytile.cc:316–339] and additionally shields against
         // a hypothetical future writer that truncates at ≥ 32 bytes;

@@ -4,14 +4,17 @@ import java.util
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopOutputFile
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 import graft.core._
 import graft.sources.GraftArray
@@ -315,17 +318,19 @@ class GraftWriteBuilder(
 
   override def build(): Write = new Write
       with org.apache.spark.sql.connector.write.RequiresDistributionAndOrdering {
-    // cell-order clustering for DSv2 writes: no forced shuffle
+    // cell-order clustering for SQL writes: no forced shuffle
     // (distribution unspecified), but Spark sorts each task's rows by
     // the ROW-MAJOR cell order before the writer sees them, so those
-    // part files match the library write path and record `sortedBy`
-    // for the scan-side ordering report. HILBERT schemas are the
-    // exception: requiredOrdering is empty there (the curve key is a
-    // derived expression, not a sortable column ref), so a DSv2
-    // INSERT into a hilbert array writes unordered parts — honest
-    // (`sortedBy` stays empty, no false ordering report) but without
-    // the MBR-tightness the library path's hilbert sort buys; bulk
-    // hilbert loads should go through GraftArray.write
+    // part files are sorted like GraftArray.write's and record
+    // `sortedBy` for the scan-side ordering report. GraftArray.write
+    // additionally range-partitions (or buckets) before the same
+    // writer. HILBERT schemas are the exception: requiredOrdering is
+    // empty there (the curve key is a derived expression, not a
+    // sortable column ref), so a SQL INSERT into a hilbert array writes
+    // unordered parts — honest (`sortedBy` stays empty, no false
+    // ordering report) but without the MBR-tightness the hilbert
+    // clustering of GraftArray.write buys; bulk hilbert loads should
+    // go through GraftArray.write
     // [cell/tile order ha_mytile.cc:71–73, 1380–1395].
     override def requiredDistribution()
         : org.apache.spark.sql.connector.distributions.Distribution =
@@ -343,38 +348,11 @@ class GraftWriteBuilder(
       val in = info.schema().fieldNames.toSeq
       require(in.sorted == schema.columnNames.sorted,
         s"schema mismatch: $in vs ${schema.columnNames}")
-      // consolidation hooks: commit the fragment at an explicit
-      // timestamp superseding others. These can REWRITE HISTORY (mark
-      // live fragments superseded → vacuum deletes them), so they are
-      // honored only inside a maintenance window opened by
-      // GraftArray.consolidate (session conf flag) — a stray user
-      // write carrying them fails loudly instead of silently hiding
-      // live data
-      val opts = info.options()
-      val internal = Seq("graft.internal.commit_ts",
-        "graft.internal.replaces", "graft.internal.origin")
-        .filter(opts.containsKey)
-      if (internal.nonEmpty && !spark.conf
-          .getOption(GraftMaintenance.ConfFlag).exists(_.toBoolean))
-        throw new IllegalArgumentException(
-          s"${internal.mkString(", ")} are maintenance-internal write " +
-            "options (set by consolidation); they are not accepted on " +
-            "user writes")
       new GraftBatchWrite(spark, uri, schema, info.schema(),
-        commitTs = Option(opts.get("graft.internal.commit_ts")).map(_.toLong),
-        replaces = Option(opts.get("graft.internal.replaces"))
-          .map(_.split(",").toSeq).getOrElse(Nil),
-        origin = Option(opts.get("graft.internal.origin"))
-          .orElse(overwritePred.map(_ => "overwrite")),
+        origin = overwritePred.map(_ => "overwrite"),
         overwrite = overwritePred)
     }
   }
-}
-
-/** Maintenance-window flag: consolidation sets it around its DSv2
-  * write so the history-rewriting internal options are accepted. */
-object GraftMaintenance {
-  val ConfFlag = "spark.graft.internal.maintenance"
 }
 
 /** The scan-side metadata column surface. Values are constant vectors
@@ -402,34 +380,72 @@ object GraftMetaCols {
 }
 
 case class GraftCommitMessage(
-    file: String, rows: Long,
+    file: String, partition: Int, rows: Long,
     stats: Map[String, ColumnStats]) extends WriterCommitMessage
 
-/** Cross-task fragment-stat assembly shared by the batch and delta
-  * (row-level) commit paths. */
-object GraftWriteStats {
-  def merge(schema: ArraySchema,
+/** The one fragment commit. Every write — SQL INSERT and OVERWRITE,
+  * row-level operations, and GraftArray's appends, stream batches,
+  * consolidations and rollbacks — turns its task messages into one
+  * manifest here: the files that hold rows, per-file and fragment
+  * stats, and the caller's history hooks. Returns the commit
+  * timestamp, or None when `skipIfEmpty` left nothing to commit. */
+object FragmentCommit {
+  def apply(spark: SparkSession, uri: String, schema: ArraySchema,
+      fragId: String, messages: Seq[GraftCommitMessage],
+      coordFiles: Seq[String] = Nil,
+      commitTs: Option[Long] = None,
+      replaces: Seq[String] = Nil,
+      origin: Option[String] = None,
+      overwrite: Option[PredicateSupport.Pred] = None,
+      sortedBy: Seq[String] = Nil,
+      bucketed: Boolean = false,
+      skipIfEmpty: Boolean = false): Option[Long] = {
+    val msgs = messages.filter(_.rows > 0)
+    // a write that supersedes fragments or masks rows commits even
+    // without rows (consolidating a fully deleted array is one)
+    if (skipIfEmpty && msgs.isEmpty && coordFiles.isEmpty &&
+        replaces.isEmpty && overwrite.isEmpty) return None
+    val ts = commitTs.getOrElse(GraftArray.now())
+    GraftArray.store(spark, uri).commitFragment(FragmentMeta(
+      fragId, ts, msgs.map(_.file), msgs.map(_.rows).sum,
+      redact(schema, merge(schema, msgs)),
+      msgs.map(m => m.file -> redact(schema, m.stats)).toMap,
+      msgs.map(m => m.file -> m.rows).toMap,
+      // task i of a bucketed GraftArray write holds exactly bucket i
+      buckets = schema.buckets.filter(_ => bucketed),
+      fileBuckets =
+        if (bucketed) msgs.map(m => m.file -> m.partition).toMap
+        else Map.empty,
+      origin = origin, replaces = replaces,
+      deletePred = overwrite.map(PredJson.toJson),
+      deleteCoordFiles = coordFiles, sortedBy = sortedBy))
+    Some(ts)
+  }
+
+  /** Fragment stats from per-file stats: the least min and greatest
+    * max, added null counts, and sums added exactly (dropped, never
+    * wrapped, when the total leaves the Long range). */
+  private def merge(schema: ArraySchema,
       msgs: Seq[GraftCommitMessage]): Map[String, ColumnStats] = {
     val ord = TypedValue.ordering
     schema.columnNames.map { c =>
+      val dt = schema.dataTypeOf(c)
       val per = msgs.flatMap(_.stats.get(c))
-      def opt(vs: Seq[String], min: Boolean): Option[String] = {
-        val dt = schema.dataTypeOf(c)
-        val parsed = vs.map(TypedValue.parse(dt, _))
-        if (parsed.isEmpty) None
-        else Some(TypedValue.show(
-          if (min) parsed.min(ord) else parsed.max(ord)))
-      }
-      c -> ColumnStats(
-        opt(per.flatMap(_.min).toSeq, min = true),
-        opt(per.flatMap(_.max).toSeq, min = false),
-        per.map(_.nullCount).sum,
+      def pick(vs: Seq[String], min: Boolean): Option[String] =
+        if (vs.isEmpty) None
+        else {
+          val parsed = vs.map(TypedValue.parse(dt, _))
+          Some(TypedValue.show(if (min) parsed.min(ord) else parsed.max(ord)))
+        }
+      val sumLong =
         if (per.nonEmpty && per.forall(_.sumLong.isDefined))
-          // exact addition: cross-task overflow drops the stat rather
-          // than recording a wrapped sum
-          try Some(per.flatMap(_.sumLong).foldLeft(0L)(Math.addExact))
-          catch { case _: ArithmeticException => None }
-        else None,
+          Some(per.flatMap(_.sumLong).foldLeft(BigInt(0))(_ + _))
+            .filter(_.isValidLong).map(_.toLong)
+        else None
+      c -> ColumnStats(
+        pick(per.flatMap(_.min), min = true),
+        pick(per.flatMap(_.max), min = false),
+        per.map(_.nullCount).sum, sumLong,
         if (per.nonEmpty && per.forall(_.sumDouble.isDefined))
           Some(per.flatMap(_.sumDouble).sum) else None)
     }.toMap
@@ -440,7 +456,7 @@ object GraftWriteStats {
     * keep DIMENSION stats only (the pruning index). Aggregate
     * pushdown gates on stats presence, so encrypted aggregates
     * correctly fall back to a real (decrypting) scan. */
-  def redact(schema: ArraySchema,
+  private def redact(schema: ArraySchema,
       st: Map[String, ColumnStats]): Map[String, ColumnStats] =
     if (!schema.encrypted) st
     else st.view.filterKeys(schema.dimNames.contains).toMap
@@ -449,19 +465,27 @@ object GraftWriteStats {
 /** One fragment per commit; every task writes one parquet part file and
   * reports exact column stats gathered in-stream (rows are seen once —
   * the same trick the reference uses to buffer columns during
-  * `write_row` [ha_mytile.cc:3158–3193]). */
+  * `write_row` [ha_mytile.cc:3158–3193]). SQL INSERT and OVERWRITE
+  * reach it through Spark's V2 append, GraftArray's writes through
+  * [[run]]; both commit through [[FragmentCommit]]. */
 class GraftBatchWrite(
     spark: SparkSession,
     uri: String,
     schema: ArraySchema,
     writeSchema: StructType,
+    /** Consolidation's and rollback's hooks: the commit timestamp and
+      * the fragments the new one supersedes. */
     commitTs: Option[Long] = None,
     replaces: Seq[String] = Nil,
     origin: Option[String] = None,
     /** INSERT OVERWRITE: committed as this fragment's delete
       * predicate — masks matching cells of strictly older fragments,
       * never this fragment's own files (same-timestamp rule). */
-    overwrite: Option[PredicateSupport.Pred] = None) extends BatchWrite {
+    overwrite: Option[PredicateSupport.Pred] = None,
+    /** Commit nothing when no task wrote a row. */
+    skipIfEmpty: Boolean = false,
+    /** Task i holds exactly bucket i of the schema's buckets. */
+    bucketed: Boolean = false) extends BatchWrite {
 
   private val fragId = java.util.UUID.randomUUID.toString.take(12)
 
@@ -472,30 +496,48 @@ class GraftBatchWrite(
     EncryptionKeys.sessionKey(spark, schema)
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : DataWriterFactory =
-    new GraftDataWriterFactory(uri, fragId, schema, writeSchema,
-      HadoopConfBroadcast(spark),
-      keyHex)
+      : DataWriterFactory = factory
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val msgs = messages.map(_.asInstanceOf[GraftCommitMessage])
-      .filter(_.rows > 0)
-    val merged = GraftWriteStats.merge(schema, msgs)
-    import GraftWriteStats.redact
-    GraftArray.store(spark, uri).commitFragment(FragmentMeta(
-      fragId, commitTs.getOrElse(GraftArray.now()), msgs.map(_.file).toSeq,
-      msgs.map(_.rows).sum, redact(schema, merged),
-      msgs.map(m => m.file -> redact(schema, m.stats)).toMap,
-      msgs.map(m => m.file -> m.rows).toMap,
-      origin = origin, replaces = replaces,
-      deletePred = overwrite.map(PredJson.toJson),
-      // requiredOrdering sorted every task's rows before the writer
-      sortedBy = GraftArray.sortedByOf(schema)))
-  }
+  private def factory = new GraftDataWriterFactory(uri, fragId, schema,
+    writeSchema, HadoopConfBroadcast(spark), keyHex)
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    commitFragment(messages)
+
+  private def commitFragment(messages: Array[WriterCommitMessage])
+      : Option[Long] =
+    FragmentCommit(spark, uri, schema, fragId,
+      messages.map(_.asInstanceOf[GraftCommitMessage]).toSeq,
+      commitTs = commitTs, replaces = replaces, origin = origin,
+      overwrite = overwrite,
+      // every task's rows arrive sorted: by requiredOrdering on SQL
+      // writes, by GraftArray's clustering on its own
+      sortedBy = GraftArray.sortedByOf(schema),
+      bucketed = bucketed, skipIfEmpty = skipIfEmpty)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val fs = new Path(uri).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(uri, s"frag_$fragId"), true)
+  }
+
+  /** Writes `df`, already in the partitions and row order its files
+    * should have, as this fragment: one job with one writer task per
+    * partition, the factory and commit of a SQL append, and the
+    * fragment aborted if the job fails. Returns the commit timestamp;
+    * None when skipped as empty. */
+  def run(df: DataFrame): Option[Long] = {
+    val factory = this.factory // the task closure must not capture the session
+    val qe = df.queryExecution
+    val messages = try SQLExecution.withNewExecutionId(qe) {
+      spark.sparkContext.runJob(qe.toRdd,
+        (ctx: TaskContext, rows: Iterator[InternalRow]) => {
+          val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+          try { rows.foreach(w.write); w.commit() }
+          catch { case t: Throwable => w.abort(); throw t }
+          finally w.close()
+        })
+    } catch { case t: Throwable => abort(Array.empty); throw t }
+    commitFragment(messages)
   }
 }
 
@@ -511,10 +553,13 @@ class GraftDataWriterFactory(
 }
 
 /** Fragment writer: InternalRow → parquet via Spark's own
-  * ParquetWriteSupport (identical physical format to the convenience
-  * write path — standard lists, decimal int32/int64/fixed, µs
-  * timestamps), accumulating min/max/nullCount/sum per column for the
-  * fragment manifest in the same pass. */
+  * ParquetWriteSupport (standard lists, decimal int32/int64/fixed,
+  * µs timestamps). Every write reaches the array through it, so it
+  * alone enforces the write guards — null dimensions, storage-type
+  * domains, enum values, charset repertoires — on each row, and it
+  * accumulates each column's manifest stats in the same pass. The part
+  * file opens with the first row: a task without rows leaves no
+  * file. */
 class GraftDataWriter(
     uri: String, fragId: String, partitionId: Int,
     schema: ArraySchema, writeSchema: StructType,
@@ -539,9 +584,6 @@ class GraftDataWriter(
   private val relFile =
     f"frag_$fragId/$filePrefix%s-$partitionId%05d-t$taskId%d.parquet"
   private val path = new Path(uri, relFile)
-  // a copy: taskConf is the broadcast value (in local[N], the driver's
-  // live configuration) and the write support configures this one
-  private val conf = new org.apache.hadoop.conf.Configuration(taskConf)
 
   private class InternalRowWriterBuilder(
       file: org.apache.parquet.io.OutputFile)
@@ -553,7 +595,12 @@ class GraftDataWriter(
       GraftParquetWriteShim.newWriteSupport()
   }
 
-  private val writer = {
+  private var writer: org.apache.parquet.hadoop.ParquetWriter[InternalRow] = _
+
+  private def open(): org.apache.parquet.hadoop.ParquetWriter[InternalRow] = {
+    // a copy: taskConf is the broadcast value (in local[N], the driver's
+    // live configuration) and the write support configures this one
+    val conf = new org.apache.hadoop.conf.Configuration(taskConf)
     GraftParquetWriteShim.configure(writeSchema, conf)
     val b = new InternalRowWriterBuilder(HadoopOutputFile.fromPath(path, conf))
       .withConf(conf)
@@ -590,11 +637,12 @@ class GraftDataWriter(
       }
     }
   }
-  // enum-domain guards: declared enumeration attrs only accept their
-  // values [ref: ENUM ⇄ TileDB Enumeration, ha_mytile.cc:1330–1351]
-  private val enums: Array[Set[String]] = fields.map(f =>
-    schema.attrs.find(_.name == f.name)
-      .map(_.enumValues.toSet).getOrElse(Set.empty))
+  // enum-domain guards: declared enumeration (string) attrs only accept
+  // their values [ref: ENUM ⇄ TileDB Enumeration, ha_mytile.cc:1330–1351]
+  private val enums: Array[Set[UTF8String]] = fields.map(f =>
+    schema.attrs.find(a => a.name == f.name && f.dataType == StringType)
+      .map(_.enumValues.map(UTF8String.fromString).toSet)
+      .getOrElse(Set.empty))
   // charset-limited string repertoires (STRING_ASCII / STRING_UCS2)
   // reject unrepresentable characters [mytile.cc:218–224, 896–923]
   private val charsetGuards: Array[Option[String]] = fields.map { f =>
@@ -604,16 +652,14 @@ class GraftDataWriter(
   }
   private def checkCharset(i: Int, row: InternalRow): Unit =
     charsetGuards(i).foreach { tn =>
-      if (!row.isNullAt(i)) {
-        val u = row.getUTF8String(i)
-        val bad =
-          if (graft.core.StorageTypes.asciiOnly(tn))
-            u.numBytes != u.numChars // ASCII iff UTF-8 octets == chars
-          else // UCS-2 is BMP-only: no supplementary code points
-            u.toString.codePoints().anyMatch(_ > 0xFFFF)
-        if (bad) throw new IllegalArgumentException(
-          s"value outside $tn repertoire for ${fields(i).name}")
-      }
+      val u = row.getUTF8String(i)
+      val bad =
+        if (graft.core.StorageTypes.asciiOnly(tn))
+          u.numBytes != u.numChars // ASCII iff UTF-8 octets == chars
+        else // UCS-2 is BMP-only: no supplementary code points
+          u.toString.codePoints().anyMatch(_ > 0xFFFF)
+      if (bad) throw new IllegalArgumentException(
+        s"value outside $tn repertoire for ${fields(i).name}")
     }
   private def checkGuard(i: Int, row: InternalRow): Unit =
     guards(i).foreach { case (tn, lo, hi) =>
@@ -634,98 +680,172 @@ class GraftDataWriter(
       if (bad) throw new IllegalArgumentException(
         s"value out of $tn domain for ${fields(i).name}")
     }
+  private def checkEnum(i: Int, row: InternalRow): Unit =
+    if (enums(i).nonEmpty && !enums(i).contains(row.getUTF8String(i)))
+      throw new IllegalArgumentException(
+        s"value not in enum ${fields(i).name}: ${row.getUTF8String(i)}")
   private var rows = 0L
-  private val mins = new Array[Any](fields.length)
-  private val maxs = new Array[Any](fields.length)
   private val nulls = new Array[Long](fields.length)
-  private val sumsL = new Array[Long](fields.length)
-  // a wrapped Long sum would silently diverge from Spark's decimal sum
-  // (which has +10 digits of headroom) — on overflow the stat is
-  // dropped so the aggregate pushdown falls back to a real scan
-  private val sumLOverflow = new Array[Boolean](fields.length)
-  private val sumsD = new Array[Double](fields.length)
-  private val ord = TypedValue.ordering
+  private val accs: Array[ColumnAcc] = fields.map(f => ColumnAcc(f.dataType))
 
   override def write(row: InternalRow): Unit = {
     var i = 0
     while (i < fields.length) {
-      val f = fields(i)
       if (row.isNullAt(i)) {
-        if (dimSet(f.name)) throw new IllegalArgumentException(
-          s"null value in dimension ${f.name}") // [ha_mytile.cc:3166]
+        if (dimSet(fields(i).name)) throw new IllegalArgumentException(
+          s"null value in dimension ${fields(i).name}") // [ha_mytile.cc:3166]
         nulls(i) += 1
       } else {
         checkGuard(i, row)
         checkCharset(i, row)
-        // storage-domain value for the manifest stats (the parquet
-        // encoding itself is ParquetWriteSupport's job)
-        val storage: Any = f.dataType match {
-          case ByteType => row.getByte(i).toLong
-          case ShortType => row.getShort(i).toLong
-          case IntegerType | DateType => row.getInt(i).toLong
-          case LongType | TimestampType => row.getLong(i)
-          case FloatType => row.getFloat(i).toDouble
-          case DoubleType => row.getDouble(i)
-          case StringType =>
-            val s = row.getUTF8String(i).toString
-            if (enums(i).nonEmpty && !enums(i).contains(s))
-              throw new IllegalArgumentException(
-                s"value not in enum ${fields(i).name}: $s")
-            s
-          case BinaryType => row.getBinary(i)
-          case BooleanType => row.getBoolean(i)
-          case dt: DecimalType if dt.precision <= 18 =>
-            // stats domain for decimals = the unscaled long (same fixed
-            // scale ⇒ ordering and sums carry over)
-            row.getDecimal(i, dt.precision, dt.scale).toUnscaledLong
-          case _: DecimalType => null // wide decimals carry no stats
-          case _: ArrayType => null // arrays carry no scalar stats
-          case dt => throw new UnsupportedOperationException(s"type $dt")
-        }
-        storage match {
-          case l: Long =>
-            if (!sumLOverflow(i))
-              try sumsL(i) = Math.addExact(sumsL(i), l)
-              catch { case _: ArithmeticException => sumLOverflow(i) = true }
-          case d: Double => sumsD(i) += d
-          case _ => ()
-        }
-        if (storage != null && !storage.isInstanceOf[Array[Byte]]) {
-          if (mins(i) == null || ord.compare(storage, mins(i)) < 0)
-            mins(i) = storage
-          if (maxs(i) == null || ord.compare(storage, maxs(i)) > 0)
-            maxs(i) = storage
-        }
+        checkEnum(i, row)
+        accs(i).add(row, i)
       }
       i += 1
     }
+    if (writer == null) writer = open()
     writer.write(row)
     rows += 1
   }
 
   override def commit(): WriterCommitMessage = {
-    writer.close()
-    val stats = fields.zipWithIndex.map { case (f, i) =>
-      val isNum = f.dataType match {
-        case ByteType | ShortType | IntegerType | LongType => Some(true)
-        case dt: DecimalType if dt.precision <= 18 => Some(true)
-        case FloatType | DoubleType => Some(false)
-        case _ => None
-      }
-      f.name -> ColumnStats(
-        Option(mins(i)).map(TypedValue.show),
-        Option(maxs(i)).map(TypedValue.show),
-        nulls(i),
-        if (isNum.contains(true) && !sumLOverflow(i)) Some(sumsL(i)) else None,
-        if (isNum.contains(false)) Some(sumsD(i)) else None)
-    }.toMap
-    GraftCommitMessage(relFile, rows, stats)
+    if (writer != null) writer.close()
+    GraftCommitMessage(relFile, partitionId, rows,
+      fields.indices.map(i => fields(i).name -> accs(i).stats(nulls(i))).toMap)
   }
 
-  override def abort(): Unit = {
+  override def abort(): Unit = if (writer != null) {
     writer.close()
-    path.getFileSystem(conf).delete(path, false)
+    path.getFileSystem(taskConf).delete(path, false)
   }
 
   override def close(): Unit = ()
+}
+
+/** One column's manifest stats, accumulated over a writer's non-null
+  * values without boxing: min/max in the manifest's storage domain
+  * ([[TypedValue]]: integral, DATE, TIMESTAMP and DECIMAL(≤18) values
+  * as Long, FLOAT/DOUBLE as Double, strings in code-point order,
+  * binaries in unsigned byte order, booleans) and, for numbers, the
+  * exact sum, dropped when it leaves the Long range (a DECIMAL's is
+  * its unscaled sum). Wide decimals keep the sum only; lists, structs,
+  * maps and any other type keep the null count only. */
+private abstract class ColumnAcc {
+  def add(row: InternalRow, i: Int): Unit
+  def stats(nulls: Long): ColumnStats
+}
+
+private object ColumnAcc {
+  def apply(dt: DataType): ColumnAcc = dt match {
+    case ByteType => new LongAcc(true) {
+      def get(r: InternalRow, i: Int): Long = r.getByte(i) }
+    case ShortType => new LongAcc(true) {
+      def get(r: InternalRow, i: Int): Long = r.getShort(i) }
+    case IntegerType => new LongAcc(true) {
+      def get(r: InternalRow, i: Int): Long = r.getInt(i) }
+    case LongType => new LongAcc(true) {
+      def get(r: InternalRow, i: Int): Long = r.getLong(i) }
+    case DateType => new LongAcc(false) {
+      def get(r: InternalRow, i: Int): Long = r.getInt(i) }
+    case TimestampType => new LongAcc(false) {
+      def get(r: InternalRow, i: Int): Long = r.getLong(i) }
+    case d: DecimalType if d.precision <= 18 => new LongAcc(true) {
+      def get(r: InternalRow, i: Int): Long =
+        r.getDecimal(i, d.precision, d.scale).toUnscaledLong }
+    case FloatType => new DoubleAcc {
+      def get(r: InternalRow, i: Int): Double = r.getFloat(i).toDouble }
+    case DoubleType => new DoubleAcc {
+      def get(r: InternalRow, i: Int): Double = r.getDouble(i) }
+    case StringType => new StringAcc
+    case BinaryType => new BinaryAcc
+    case BooleanType => new BooleanAcc
+    case d: DecimalType => new WideDecimalAcc(d)
+    case _ => new ColumnAcc {
+      def add(row: InternalRow, i: Int): Unit = ()
+      def stats(nulls: Long) = ColumnStats(None, None, nulls, None, None)
+    }
+  }
+
+  private abstract class LongAcc(summed: Boolean) extends ColumnAcc {
+    def get(r: InternalRow, i: Int): Long
+    private var seen = false
+    private var lo = Long.MaxValue
+    private var hi = Long.MinValue
+    private var sum = 0L
+    // signed count of `sum` wrapping past the Long range: the exact
+    // sum is sum + carry·2^64, a Long iff carry is 0
+    private var carry = 0L
+    def add(row: InternalRow, i: Int): Unit = {
+      val v = get(row, i)
+      seen = true
+      if (v < lo) lo = v
+      if (v > hi) hi = v
+      val s = sum + v
+      if (((sum ^ s) & (v ^ s)) < 0) carry += (if (v < 0) -1 else 1)
+      sum = s
+    }
+    def stats(nulls: Long) = ColumnStats(
+      Option.when(seen)(lo.toString), Option.when(seen)(hi.toString), nulls,
+      Option.when(summed && carry == 0)(sum), None)
+  }
+
+  private abstract class DoubleAcc extends ColumnAcc {
+    def get(r: InternalRow, i: Int): Double
+    private var seen = false
+    private var lo, hi, sum = 0.0
+    def add(row: InternalRow, i: Int): Unit = {
+      val v = get(row, i)
+      if (!seen || java.lang.Double.compare(v, lo) < 0) lo = v
+      if (!seen || java.lang.Double.compare(v, hi) > 0) hi = v
+      seen = true
+      sum += v
+    }
+    def stats(nulls: Long) = ColumnStats(
+      Option.when(seen)(lo.toString), Option.when(seen)(hi.toString), nulls,
+      None, Some(sum))
+  }
+
+  private class StringAcc extends ColumnAcc {
+    // copies: a row's string may point into a reused buffer
+    private var lo, hi: UTF8String = _
+    def add(row: InternalRow, i: Int): Unit = {
+      val u = row.getUTF8String(i)
+      if (lo == null) { lo = u.copy(); hi = lo }
+      else if (u.binaryCompare(lo) < 0) lo = u.copy()
+      else if (u.binaryCompare(hi) > 0) hi = u.copy()
+    }
+    def stats(nulls: Long) = ColumnStats(
+      Option(lo).map(_.toString), Option(hi).map(_.toString), nulls, None, None)
+  }
+
+  private class BinaryAcc extends ColumnAcc {
+    private var lo, hi: Array[Byte] = _
+    def add(row: InternalRow, i: Int): Unit = {
+      val b = row.getBinary(i)
+      if (lo == null) { lo = b.clone(); hi = lo }
+      else if (java.util.Arrays.compareUnsigned(b, lo) < 0) lo = b.clone()
+      else if (java.util.Arrays.compareUnsigned(b, hi) > 0) hi = b.clone()
+    }
+    def stats(nulls: Long) = ColumnStats(Option(lo).map(TypedValue.show),
+      Option(hi).map(TypedValue.show), nulls, None, None)
+  }
+
+  private class BooleanAcc extends ColumnAcc {
+    private var sawFalse, sawTrue = false
+    def add(row: InternalRow, i: Int): Unit =
+      if (row.getBoolean(i)) sawTrue = true else sawFalse = true
+    def stats(nulls: Long) = ColumnStats(
+      if (sawFalse) Some("false") else Option.when(sawTrue)("true"),
+      if (sawTrue) Some("true") else Option.when(sawFalse)("false"),
+      nulls, None, None)
+  }
+
+  private class WideDecimalAcc(d: DecimalType) extends ColumnAcc {
+    private var sum = java.math.BigInteger.ZERO
+    def add(row: InternalRow, i: Int): Unit =
+      sum = sum.add(row.getDecimal(i, d.precision, d.scale)
+        .toJavaBigDecimal.unscaledValue)
+    def stats(nulls: Long) = ColumnStats(None, None, nulls,
+      Option.when(sum.bitLength < 64)(sum.longValue), None)
+  }
 }

@@ -110,9 +110,8 @@ object EventPipeline {
       st.loadMetadata().get(metaKey).exists(h => batchId <= h.toLong) ||
         st.listFragmentsRaw().exists(_.origin.contains(tag))
     // empty micro-batches commit nothing (no empty fragments); the
-    // emptiness check is folded into the write itself (footer row
-    // counts the write pass already reads) — the separate isEmpty
-    // Spark job this used to run per micro-batch is gone
+    // writer tasks' row counts decide it inside the write job, so no
+    // separate isEmpty job runs per micro-batch
     !replayed && graft.sources.GraftArray.writeNonEmpty(
       spark, uri, batch, origin = Some(tag)).isDefined
   }

@@ -9,13 +9,11 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** [[ParquetWriteSupport]] is package-private to Spark; this shim
-  * re-exposes exactly what graft's fragment writer needs (and the row
-  * copier its partition readers write column vectors with): an
-  * InternalRow→parquet write support producing the SAME physical
+  * re-exposes exactly what graft's one fragment writer needs (and the
+  * row copier its partition readers write column vectors with): an
+  * InternalRow→parquet write support producing the same physical
   * format Spark's own parquet sink writes (standard lists, decimal
-  * int32/int64/fixed by precision, µs timestamps), so both graft write
-  * paths emit identical files and the row-by-row Group assembly
-  * disappears from the DSv2 INSERT path. */
+  * int32/int64/fixed by precision, µs timestamps). */
 object GraftParquetWriteShim {
   def newWriteSupport(): WriteSupport[InternalRow] = new ParquetWriteSupport
 

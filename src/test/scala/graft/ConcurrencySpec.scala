@@ -363,8 +363,8 @@ class ConcurrencySpec extends SparkSpec {
 
   test("ALTER COLUMN racing an in-flight append: late commit reconciles") {
     // Deterministic straddle first — the state the race lands on: an
-    // append that bound the PRE-alter schema (writeFragment fixes its
-    // column set at start) COMMITS AFTER the alter's schema version.
+    // append that bound the PRE-alter schema (GraftArray.write fixes
+    // its column set at start) COMMITS AFTER the alter's schema version.
     // Reconciliation is per-fragment STATS-keyed, not timestamp-keyed,
     // so the straddling fragment must read exactly like a pre-alter
     // one: evolved column = fill. The straddle state is constructed
@@ -416,7 +416,7 @@ class ConcurrencySpec extends SparkSpec {
 
     // the live RACE: a writer loop vs one ALTER ADD. A writer that
     // bound the old shape either commits (reconciled by fill — the
-    // straddle above) or fails writeFragment's column check and
+    // straddle above) or fails GraftArray.write's column check and
     // retries with the refreshed shape; nothing in between, nothing
     // lost, under ANY interleaving.
     for (round <- 0 until 2) {

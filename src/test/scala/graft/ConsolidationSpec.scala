@@ -336,26 +336,25 @@ class ConsolidationSpec extends SparkSpec {
       .as[(Long, Double)].collect().toSeq == edBefore)
   }
 
-  test("history-rewriting internal write options are rejected on user writes") {
-    // graft.internal.replaces could mark live fragments superseded
-    // (vacuum would delete their data) — only consolidation's
-    // maintenance window may carry it
+  test("a user write carrying graft.internal.replaces cannot hide a live fragment") {
+    // history hooks (commit timestamp, superseded fragments) are
+    // arguments of consolidation's and rollback's own writes, never
+    // write options, so an append carrying these keys supersedes nothing
     val uri = tmp()
     GraftArray.create(spark, uri, sch)
     GraftArray.write(spark, uri, Seq((1L, 1.0)).toDF("k", "v"))
     val victim = GraftArray.fragments(spark, uri).head.id
-    val e = intercept[Exception] {
-      Seq((2L, 2.0)).toDF("k", "v")
-        .write.format("graftarray").option("path", uri)
-        .option("graft.internal.replaces", victim)
-        .mode("append").save()
-    }
-    def msgs(t: Throwable): Seq[String] =
-      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
-    assert(msgs(e).exists(_.contains("maintenance")), msgs(e).mkString(" | "))
-    // nothing was hidden or written
-    assert(GraftArray.fragments(spark, uri).map(_.id) == Seq(victim))
-    assert(read(uri).count() == 1)
+    Seq((2L, 2.0)).toDF("k", "v")
+      .write.format("graftarray").option("path", uri)
+      .option("graft.internal.replaces", victim)
+      .option("graft.internal.commit_ts", "1")
+      .mode("append").save()
+    val frags = GraftArray.fragments(spark, uri)
+    assert(frags.size == 2 && frags.map(_.id).contains(victim))
+    assert(frags.forall(f => f.replaces.isEmpty && f.timestamp > 1L))
+    assert(GraftArray.vacuum(spark, uri) == 0)
+    assert(read(uri).orderBy("k").as[(Long, Double)].collect().toSeq ==
+      Seq((1L, 1.0), (2L, 2.0)))
   }
 
   test("CALL cat.consolidate / cat.vacuum procedures") {

@@ -22,54 +22,15 @@ import scala.jdk.CollectionConverters._
   * versions written, provenance columns included. Every scan reads
   * columnar. */
 class DecodeDifferentialSpec extends SparkSpec {
+  import DecodeDifferentialSpec._
 
   private val Key = "00112233445566778899aabbccddeeff"
-
-  private val attrs: Seq[AttributeSpec] = Seq(
-    AttributeSpec("b", ByteType), AttributeSpec("sh", ShortType),
-    AttributeSpec("i", IntegerType), AttributeSpec("l", LongType),
-    AttributeSpec("f", FloatType), AttributeSpec("d", DoubleType),
-    AttributeSpec("bo", BooleanType), AttributeSpec("s", StringType),
-    AttributeSpec("bin", BinaryType), AttributeSpec("dt", DateType),
-    AttributeSpec("ts", TimestampType),
-    AttributeSpec("dec", DecimalType(9, 2)),
-    AttributeSpec("wide", DecimalType(20, 4)),
-    AttributeSpec("emb", ArrayType(FloatType)))
 
   /** The column added after two fragments, with its declared fill (the
     * manifest's string form) and the value a pre-evolution row reads. */
   private val evolved: Seq[(DataType, String, Any)] = Seq(
     (IntegerType, "7", 7), (LongType, "-3", -3L), (DoubleType, "2.5", 2.5),
     (StringType, "fill", "fill"), (BooleanType, "true", true))
-
-  private def value(dt: DataType, r: scala.util.Random): Any =
-    if (r.nextInt(5) == 0) null
-    else dt match {
-      case ByteType => (r.nextInt(256) - 128).toByte
-      case ShortType => (r.nextInt(65536) - 32768).toShort
-      case IntegerType => r.nextInt()
-      case LongType => r.nextLong()
-      case FloatType => r.nextFloat() * 100 - 50
-      case DoubleType => r.nextGaussian() * 1e6
-      case BooleanType => r.nextBoolean()
-      case StringType =>
-        Seq.fill(r.nextInt(6))(Seq("a", "é", "日", "😀", "z")(r.nextInt(5))).mkString
-      case BinaryType => Array.fill(r.nextInt(5))(r.nextInt(256).toByte)
-      case DateType => java.sql.Date.valueOf(
-        java.time.LocalDate.ofEpochDay(r.nextInt(40000).toLong - 10000))
-      case TimestampType => java.sql.Timestamp.from(java.time.Instant
-        .ofEpochSecond(r.nextInt(2000000000).toLong, r.nextInt(1000000) * 1000L))
-      case d: DecimalType => new java.math.BigDecimal(
-        java.math.BigInteger.valueOf(r.nextLong() % math.pow(10, d.precision min 18).toLong),
-        d.scale)
-      case ArrayType(FloatType, _) =>
-        Seq.fill(r.nextInt(4))(if (r.nextInt(6) == 0) null else Float.box(r.nextFloat()))
-    }
-
-  private def rows(keys: Range, cols: Seq[StructField], seed: Long): Seq[Row] = {
-    val r = new scala.util.Random(seed)
-    keys.map(k => Row.fromSeq(k.toLong +: cols.tail.map(c => value(c.dataType, r))))
-  }
 
   private def scanOf(df: DataFrame): BatchScanExec =
     df.queryExecution.executedPlan.collect { case b: BatchScanExec => b }.head
@@ -300,5 +261,49 @@ class DecodeDifferentialSpec extends SparkSpec {
     val res = SCTest.check(SCTest.Parameters.default
       .withMinSuccessfulTests(4).withInitialSeed(Seed(20261020L)), prop)
     assert(res.passed, res.status.toString)
+  }
+}
+
+/** The all-types generator: every attribute type the fragment writer
+  * emits, and random rows over them with about one null in five. */
+object DecodeDifferentialSpec {
+  val attrs: Seq[AttributeSpec] = Seq(
+    AttributeSpec("b", ByteType), AttributeSpec("sh", ShortType),
+    AttributeSpec("i", IntegerType), AttributeSpec("l", LongType),
+    AttributeSpec("f", FloatType), AttributeSpec("d", DoubleType),
+    AttributeSpec("bo", BooleanType), AttributeSpec("s", StringType),
+    AttributeSpec("bin", BinaryType), AttributeSpec("dt", DateType),
+    AttributeSpec("ts", TimestampType),
+    AttributeSpec("dec", DecimalType(9, 2)),
+    AttributeSpec("wide", DecimalType(20, 4)),
+    AttributeSpec("emb", ArrayType(FloatType)))
+
+  def value(dt: DataType, r: scala.util.Random): Any =
+    if (r.nextInt(5) == 0) null
+    else dt match {
+      case ByteType => (r.nextInt(256) - 128).toByte
+      case ShortType => (r.nextInt(65536) - 32768).toShort
+      case IntegerType => r.nextInt()
+      case LongType => r.nextLong()
+      case FloatType => r.nextFloat() * 100 - 50
+      case DoubleType => r.nextGaussian() * 1e6
+      case BooleanType => r.nextBoolean()
+      case StringType =>
+        Seq.fill(r.nextInt(6))(Seq("a", "é", "日", "😀", "z")(r.nextInt(5))).mkString
+      case BinaryType => Array.fill(r.nextInt(5))(r.nextInt(256).toByte)
+      case DateType => java.sql.Date.valueOf(
+        java.time.LocalDate.ofEpochDay(r.nextInt(40000).toLong - 10000))
+      case TimestampType => java.sql.Timestamp.from(java.time.Instant
+        .ofEpochSecond(r.nextInt(2000000000).toLong, r.nextInt(1000000) * 1000L))
+      case d: DecimalType => new java.math.BigDecimal(
+        java.math.BigInteger.valueOf(r.nextLong() % math.pow(10, d.precision min 18).toLong),
+        d.scale)
+      case ArrayType(FloatType, _) =>
+        Seq.fill(r.nextInt(4))(if (r.nextInt(6) == 0) null else Float.box(r.nextFloat()))
+    }
+
+  def rows(keys: Range, cols: Seq[StructField], seed: Long): Seq[Row] = {
+    val r = new scala.util.Random(seed)
+    keys.map(k => Row.fromSeq(k.toLong +: cols.tail.map(c => value(c.dataType, r))))
   }
 }

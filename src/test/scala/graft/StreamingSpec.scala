@@ -249,23 +249,29 @@ class StreamingSpec extends SparkSpec {
       if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
     assert(msgs(e).exists(_.contains("consumed offset")),
       msgs(e).mkString(" | "))
-    // SAFE: consolidating only beyond the consumed offset streams on
+    // SAFE: consolidating only beyond the consumed offset streams on.
+    // The stream is stopped while the array changes, as above: a running
+    // stream could consume t3 before the consolidation replaces it, and
+    // the consolidation would then rightly fail it.
     val uri2 = mk()
-    GraftArray.write(spark, uri2, Seq((1L, 1.0)).toDF("k", "v"))
-    val name2 = "graft_midc2_" +
-      java.util.UUID.randomUUID.toString.replace("-", "")
-    val q2 = spark.readStream.format("graftarray").option("path", uri2)
+    val ckpt2 = java.nio.file.Files.createTempDirectory("graft_midc_ck2")
+      .toString
+    val sinkDir2 = java.nio.file.Files.createTempDirectory("graft_midc_out2")
+      .toString
+    def stream2() = spark.readStream.format("graftarray").option("path", uri2)
       .load().writeStream.outputMode("append")
-      .format("memory").queryName(name2).start()
-    try {
-      q2.processAllAvailable()
-      val t3 = GraftArray.write(spark, uri2, Seq((3L, 3.0)).toDF("k", "v"))
-      GraftArray.write(spark, uri2, Seq((4L, 4.0)).toDF("k", "v"))
-      assert(GraftArray.consolidate(spark, uri2, since = Some(t3)).isDefined)
-      q2.processAllAvailable()
-      assert(spark.table(name2).orderBy("k").as[(Long, Double)]
-        .collect().toSeq == Seq((1L, 1.0), (3L, 3.0), (4L, 4.0)))
-    } finally q2.stop()
+      .option("checkpointLocation", ckpt2)
+      .format("parquet").option("path", sinkDir2).start()
+    GraftArray.write(spark, uri2, Seq((1L, 1.0)).toDF("k", "v"))
+    val q2 = stream2()
+    try { q2.processAllAvailable() } finally q2.stop() // consumed t1
+    val t3 = GraftArray.write(spark, uri2, Seq((3L, 3.0)).toDF("k", "v"))
+    GraftArray.write(spark, uri2, Seq((4L, 4.0)).toDF("k", "v"))
+    assert(GraftArray.consolidate(spark, uri2, since = Some(t3)).isDefined)
+    val q2Restart = stream2()
+    try { q2Restart.processAllAvailable() } finally q2Restart.stop()
+    assert(spark.read.parquet(sinkDir2).orderBy("k").as[(Long, Double)]
+      .collect().toSeq == Seq((1L, 1.0), (3L, 3.0), (4L, 4.0)))
   }
 
   test("streaming source admission control paces a deep backlog") {

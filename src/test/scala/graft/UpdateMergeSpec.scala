@@ -254,7 +254,7 @@ class UpdateMergeSpec extends SparkSpec {
       val msg = w.commit()
         .asInstanceOf[graft.sources.v2.GraftDeltaCommitMessage]
       w.close()
-      Seq(msg.data.get.file, msg.coords.get.file)
+      Seq(msg.data.file, msg.coords.file)
     }
     assert(files.distinct.size == 4, s"attempt file collision: $files")
     assert(files.count(_.contains("-t1.")) == 2 &&
