@@ -10,10 +10,13 @@ perfbench/ changes. The benchmark must already be built (any earlier
 under the recorder too.
 
 Prints the top self frames of the samples taken on executor threads
-("Executor task launch worker ..."), then the number of samples in
-which `org.apache.hadoop.conf.Configuration.loadResource*` runs under a
+("Executor task launch worker ..."), the number of executor samples
+under `org.apache.parquet.hadoop.ParquetFileReader.readFooter` (footer
+parsing, which the footer cache removes for files read before), then
+the number of samples in which
+`org.apache.hadoop.conf.Configuration.loadResource*` runs under a
 `graft.sources.v2` frame: Hadoop parsing its XML resources on behalf of
-a scan reader. Exits 1 when that number is above 0.
+a scan reader. Exits 1 when that last number is above 0.
 
 `--root` profiles another checkout (for example the parent commit's) with
 its own perfbench build.
@@ -28,6 +31,7 @@ import tempfile
 
 EXECUTOR_THREAD = "Executor task launch worker"
 CONF_PARSE = "org.apache.hadoop.conf.Configuration.loadResource"
+READ_FOOTER = "org.apache.parquet.hadoop.ParquetFileReader.readFooter"
 READER = "graft.sources.v2."
 
 
@@ -104,7 +108,7 @@ def main():
             shutil.copyfile(rec, args.keep)
 
         self_frames = collections.Counter()
-        executor = total = conf_parse = 0
+        executor = total = conf_parse = footer = 0
         for thread, frames in samples(rec):
             total += 1
             if frames and any(CONF_PARSE in f for f in frames) and \
@@ -112,6 +116,8 @@ def main():
                 conf_parse += 1
             if thread.startswith(EXECUTOR_THREAD):
                 executor += 1
+                if any(READ_FOOTER in f for f in frames):
+                    footer += 1
                 if frames:
                     self_frames[method(frames[0])] += 1
     finally:
@@ -121,6 +127,7 @@ def main():
     print("top %d self frames on executor threads:" % args.top)
     for m, n in self_frames.most_common(args.top):
         print("%7d  %5.1f%%  %s" % (n, 100.0 * n / max(executor, 1), m))
+    print("executor samples under %s: %d" % (READ_FOOTER, footer))
     print("Configuration.loadResource* samples under a %s reader frame: %d"
           % (READER.rstrip("."), conf_parse))
     return 1 if conf_parse > 0 else 0

@@ -21,6 +21,12 @@ object FragmentStore {
   private[graft] val manifestCache =
     new java.util.concurrent.ConcurrentHashMap[String, FragmentMeta]()
 
+  /** Parsed `_schema/<ts>.json` versions, keyed and invalidated like
+    * `manifestCache`: a version file is written once under a fresh
+    * commit timestamp and never rewritten. */
+  private val schemaCache =
+    new java.util.concurrent.ConcurrentHashMap[String, ArraySchema]()
+
   /** Fresh listings `listFragmentsRaw` takes after a listed manifest
     * vanished before its read. Each retry needs a removal to land
     * inside one list-and-read window, so a bounded count only stops a
@@ -61,10 +67,12 @@ class FragmentStore(uri: String, conf: Configuration) {
     finally in.close()
   }
 
+  /** The `.json` entries of `dir` by name; a missing directory lists
+    * empty (one listing, no separate existence check). */
   private def list(dir: Path): Seq[Path] =
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".json")).sortBy(_.getName)
+    (try fs.listStatus(dir).toSeq
+    catch { case _: java.io.FileNotFoundException => Nil })
+      .map(_.getPath).filter(_.getName.endsWith(".json")).sortBy(_.getName)
 
   // ---- schema versions (evolution keeps history; travel picks by ts) --
 
@@ -87,7 +95,8 @@ class FragmentStore(uri: String, conf: Configuration) {
       case None => versions
     }
     val chosen = if (eligible.nonEmpty) eligible.last else versions.head
-    ArraySchemaJson.fromJson(read(chosen))
+    FragmentStore.schemaCache.computeIfAbsent(chosen.toString,
+      _ => ArraySchemaJson.fromJson(read(chosen)))
   }
 
   private def tsOf(p: Path): Long =
@@ -163,13 +172,14 @@ class FragmentStore(uri: String, conf: Configuration) {
   }
 
   /** Delete a fragment: manifest first (the atomic visibility switch),
-    * then its data directory. The cache is keyed by the qualified path
-    * listings return, so the eviction qualifies too. */
+    * then its data directory. The caches are keyed by the qualified
+    * paths listings and readers use, so the evictions qualify too. */
   def removeFragment(f: FragmentMeta): Unit = {
     val p = new Path(fragDir, f"${f.timestamp}%020d_${f.id}.json")
     fs.delete(p, false)
     FragmentStore.manifestCache.remove(fs.makeQualified(p).toString)
     fs.delete(fragmentDataDir(f.id), true)
+    FooterCache.evictUnder(fs.makeQualified(fragmentDataDir(f.id)).toString)
   }
 
   // ---- key/value metadata [ref: mytile-metadata.cc:40–105] ----------
@@ -187,15 +197,16 @@ class FragmentStore(uri: String, conf: Configuration) {
 
   // ---- misc ---------------------------------------------------------
 
-  def tableUri: String = uri
   def fragmentDataDir(fragId: String): Path = new Path(root, s"frag_$fragId")
   def fileSystem: FileSystem = fs
 
-  /** Delete the array and evict its manifests from the JVM-wide cache
-    * (keys are the qualified paths listings return). */
+  /** Delete the array and evict its manifests, schema versions and
+    * footers from the JVM-wide caches (keys are qualified paths). */
   def dropTable(): Unit = {
     fs.delete(root, true)
     val prefix = fs.makeQualified(root).toString + "/"
     FragmentStore.manifestCache.keySet.removeIf(_.startsWith(prefix))
+    FragmentStore.schemaCache.keySet.removeIf(_.startsWith(prefix))
+    FooterCache.evictUnder(prefix)
   }
 }

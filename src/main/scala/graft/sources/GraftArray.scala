@@ -633,19 +633,18 @@ object FragmentPruning {
       }
     }
 
-  /** Parsed dim MBRs, one per fragment; `None` bound = unknown stats
-    * (conservatively overlaps everything on that side). Parsed ONCE —
-    * overlap analysis runs over these, never re-reading manifests. */
+  /** Parsed dim MBRs of a fragment or a file; `None` bound = unknown
+    * stats (conservatively overlaps everything on that side). Parsed
+    * ONCE — overlap analysis runs over these, never re-reading
+    * manifests. */
   type Box = IndexedSeq[(Option[Any], Option[Any])]
 
-  def parseBoxes(frags: Seq[FragmentMeta],
-      schema: ArraySchema): IndexedSeq[Box] =
-    frags.map { f =>
-      schema.dims.map { d =>
-        val st = f.stats.get(d.name)
-        (st.flatMap(_.min).map(TypedValue.parse(d.dataType, _)),
-          st.flatMap(_.max).map(TypedValue.parse(d.dataType, _)))
-      }.toIndexedSeq
+  /** The dim box of one stats map (a fragment's or a file's). */
+  def parseBox(stats: Map[String, ColumnStats], schema: ArraySchema): Box =
+    schema.dims.map { d =>
+      val st = stats.get(d.name)
+      (st.flatMap(_.min).map(TypedValue.parse(d.dataType, _)),
+        st.flatMap(_.max).map(TypedValue.parse(d.dataType, _)))
     }.toIndexedSeq
 
   /** Do boxes `a` and `b` overlap in every dim from index `from` on?
@@ -721,7 +720,7 @@ object FragmentPruning {
     * fragment *metadata* (manifest-sized, not data-sized). */
   def pairwiseDisjoint(frags: Seq[FragmentMeta], schema: ArraySchema): Boolean = {
     var disjoint = true
-    forEachOverlappingPair(parseBoxes(frags, schema),
+    forEachOverlappingPair(frags.map(f => parseBox(f.stats, schema)).toIndexedSeq,
       (_, _) => { disjoint = false; false })
     disjoint
   }

@@ -171,11 +171,10 @@ class GraftMicroBatchStream(
     val pruned =
       if (constraints.exists(_._2.definitelyEmpty)) Nil
       else graft.sources.FragmentPruning.select(frags, schema, constraints)
-    pruned.flatMap { f =>
-      f.files.map(rel =>
-        GraftInputPartition(Seq((s"$uri/$rel", f.timestamp)),
-          needDedup = false): InputPartition)
-    }.toArray
+    // no latest-wins across a stream: every file is merge-free, packed
+    // like a batch scan's
+    GraftScanImpl.pack(spark, uri, schema, streamStruct,
+      pruned.flatMap(f => f.files.map(f -> _))).toArray
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

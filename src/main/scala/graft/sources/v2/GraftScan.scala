@@ -18,18 +18,19 @@ import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
-import graft.core.{EncryptionKeys, TypedValue}
+import graft.core.{EncryptionKeys, FooterCache, TypedValue}
 import graft.sources.v2.PredicateSupport.Pred
 import scala.jdk.CollectionConverters._
 
 /** DSv2 batch scan over array fragments (reference scan path S1–S4).
   *
-  * Partitioning: fragments whose dim-MBRs overlap (and need latest-wins
-  * merge) are split into first-dimension range slabs driven by per-file
-  * MBRs — each slab merges only its own coordinate range, so merge
-  * state is bounded by slab width, not fragment size (SURVEY §7.4.4).
-  * Disjoint fragments split per-file for maximal parallelism. Every
-  * partition kind reads columnar (GraftPartitionReader,
+  * Partitioning is by file (GraftScanImpl.planDataPartitions): files
+  * whose dim MBRs overlap a file of another fragment form latest-wins
+  * components, each read by one merge partition, or split into
+  * first-dimension range slabs when its merge state would exceed one
+  * task's bound (SURVEY §7.4.4). Every other file is merge-free and
+  * packed with its neighbours by Spark's file-source packing rule.
+  * Every partition kind reads columnar (GraftPartitionReader,
   * GraftFillPartitionReader). Pushed predicates prune fragments and
   * files in the ScanBuilder; Spark's Filter evaluates the residual ones
   * over the batches (QueryCondition analog).
@@ -179,17 +180,29 @@ private[v2] object FooterRead {
   /** Rows per vectorized batch. */
   val BatchRows = 4096
 
+  /** Opens `file` and reads its footer. A plaintext file's footer and
+    * status come from [[FooterCache]] when an earlier read left them
+    * there: no stat, no footer parse. Keyed reads always read and
+    * decrypt the footer themselves and leave the cache alone. */
   def apply(file: String, conf: Configuration,
       keyHex: Option[String]): FooterRead = {
     val path = new Path(file)
-    val options = org.apache.parquet.HadoopReadOptions.builder(conf, path)
-    keyHex.foreach(k => options.withDecryption(
-      org.apache.parquet.crypto.FileDecryptionProperties.builder()
-        .withFooterKey(EncryptionKeys.parse(k)).build()))
-    val input = HadoopInputFile.fromPath(path, conf)
+    val fs = path.getFileSystem(conf)
+    val key = fs.makeQualified(path).toString
+    val cached = if (keyHex.isEmpty) FooterCache.get(key) else None
+    val status = cached.fold(fs.getFileStatus(path))(_.status)
+    val input = HadoopInputFile.fromStatus(status, conf)
     val stream = input.newStream()
-    try FooterRead(input, stream,
-      ParquetFileReader.readFooter(input, options.build(), stream))
+    try FooterRead(input, stream, cached.fold {
+      val options = org.apache.parquet.HadoopReadOptions.builder(conf, path)
+      keyHex.foreach(k => options.withDecryption(
+        org.apache.parquet.crypto.FileDecryptionProperties.builder()
+          .withFooterKey(EncryptionKeys.parse(k)).build()))
+      val footer = ParquetFileReader.readFooter(input, options.build(), stream)
+      if (keyHex.isEmpty)
+        FooterCache.put(key, FooterCache.Entry(status, footer))
+      footer
+    }(_.footer))
     catch { case e: Throwable => stream.close(); throw e }
   }
 }
@@ -254,8 +267,10 @@ class GraftReaderFactory(
   * fragments), then slab `[lo, hi)` and hash ownership. Kept rows are
   * copied into one reused set of writable vectors. A merge partition
   * reads its files ts-ascending and keeps a copy of the newest row per
-  * dim tuple [SURVEY §1.1] — state bounded by the slab's coordinate
-  * range — and emits the winners once every file is read.
+  * dim tuple [SURVEY §1.1] — state bounded by the planner's per-task
+  * merge bound or the slab's coordinate range — and emits the winners
+  * once every file is read. Every other partition reads its files in
+  * planned order.
   *
   * `conf` is the scan's Hadoop configuration and is only read: the
   * reader copies it once into a task conf (GraftParquetReadShim.taskConf),
@@ -306,7 +321,10 @@ class GraftPartitionReader(
       (t.ts, set)
     }
 
-  private val files = part.files.sortBy(_._2).iterator // (path, fragment ts)
+  // (path, fragment ts): a merge reads ts-ascending so the newest
+  // version wins; every other partition reads in planned order
+  private val files =
+    (if (part.needDedup) part.files.sortBy(_._2) else part.files).iterator
   private var reader: VectorizedParquetRecordReader = _
   private var inner: ColumnarBatch = _ // reader-owned, wanted-col order
   private var batch: ColumnarBatch = _ // the open file's, readSchema order

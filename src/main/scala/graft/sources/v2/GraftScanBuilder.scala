@@ -669,7 +669,7 @@ class GraftScanImpl(
     }
     if (restCells <= 0) return Nil // overflow-degenerate domain
     val extent0 = ranges.head._2 - ranges.head._1 + 1
-    val byMemory = math.max(1L, 262144L / restCells)
+    val byMemory = math.max(1L, GraftScanImpl.MergeCells / restCells)
     val byCount = math.max(1L, extent0 / 4096L + (if (extent0 % 4096 == 0) 0 else 1))
     val slabWidth = math.max(byMemory, byCount)
     val staticFrags = staticFrags0
@@ -698,34 +698,20 @@ class GraftScanImpl(
       }.toSeq
   }
 
+  /** Data partitions by file. Files that may hold a version of the
+    * same coordinate as a file of another fragment form latest-wins
+    * components (`overlapComponents`), planned by `mergePartitions`;
+    * every other file is merge-free, even when its fragment overlaps
+    * elsewhere, and those are TopN-pruned and packed
+    * (`GraftScanImpl.pack`), never across a bucket key. */
   private def planDataPartitions(): Array[InputPartition] = {
-    val frags = dataFrags
-    val anyOverlap = !schema.allowsDups && frags.size > 1 &&
-      !FragmentPruning.pairwiseDisjoint(frags, schema)
-    if (anyOverlap) {
-      // transitive overlap groups merge latest-wins; each group is
-      // split into dim0-range slabs so no single task holds the group
-      overlapGroups(frags).flatMap { g =>
-        if (g.size == 1)
-          selectFiles(g.head).map(rel =>
-            GraftInputPartition(Seq((s"$uri/$rel", g.head.timestamp)),
-              needDedup = false))
-        else slabPartitions(g)
-      }.filter(_.files.nonEmpty).toArray
-    } else {
-      // disjoint → one partition per surviving file, maximal
-      // parallelism; under a bucketed layout each partition also
-      // carries its bucket key so Spark can group them for
-      // storage-partitioned joins
-      val buckets = bucketedReady
-      topNPrune(frags.flatMap(f => selectFiles(f).map(f -> _)))
-        .map { case (f, rel) =>
-          GraftInputPartition(Seq((s"$uri/$rel", f.timestamp)),
-            needDedup = false,
-            bucket = buckets.flatMap(_ => f.fileBuckets.get(rel)))
-            : InputPartition
-        }.toArray
-    }
+    val (alone, merged) = overlapComponents(
+      dataFrags.flatMap(f => selectFiles(f).map(f -> _))).partition(_.size == 1)
+    val buckets = bucketedReady
+    (GraftScanImpl.pack(spark, uri, schema, requiredStruct,
+      topNPrune(alone.flatten),
+      bucketOf = { case (f, rel) => buckets.flatMap(_ => f.fileBuckets.get(rel)) }) ++
+      merged.flatMap(mergePartitions)).toArray
   }
 
   /** Bucketed (storage-partitioned-join) layout is reportable iff the
@@ -764,19 +750,21 @@ class GraftScanImpl(
     * ordering [ref: index-ordered reads, ha_mytile.cc:3501–3519] when
     * it provably survives to the output: every visible data fragment
     * must record the same non-empty `sortedBy` (cell-order-clustered
-    * writes do), and every planned partition must read at most ONE
-    * file — multi-file merge slabs interleave fragments, so they
-    * report nothing — and, under a KeyGroupedPartitioning report,
-    * bucket keys must be DISTINCT across partitions (Spark
-    * concatenates same-key partitions into one task, which would
-    * break the per-partition order between files). Readers emit
-    * parquet rows in file order, and tombstone masking and slab
-    * ownership only FILTER rows, so each partition's output keeps the
-    * recorded order; Catalyst then elides redundant local
-    * sorts (RemoveRedundantSorts) and the per-partition sorts of
-    * sort-merge joins over co-bucketed arrays — the SMB-join shape.
-    * Only the longest prefix of the order present in the read schema
-    * is reported (projection preserves prefix order). */
+    * writes do), and every planned partition must read its files in an
+    * order whose concatenation is sorted: one file, or merge-free files
+    * each strictly before the next on the leading sort column (file i's
+    * max < file i+1's min, from the manifest's per-file stats). A merge
+    * emits its winners in no dim order, so it reports nothing. Under a
+    * KeyGroupedPartitioning report, bucket keys must also be DISTINCT
+    * across partitions (Spark concatenates same-key partitions into one
+    * task, which would break the per-partition order between files).
+    * Readers emit parquet rows in file order, and tombstone masking and
+    * slab ownership only FILTER rows, so each partition's output keeps
+    * the recorded order; Catalyst then elides redundant local sorts
+    * (RemoveRedundantSorts) and the per-partition sorts of sort-merge
+    * joins over co-bucketed arrays — the SMB-join shape. Only the
+    * longest prefix of the order present in the read schema is
+    * reported (projection preserves prefix order). */
   override def outputOrdering()
       : Array[org.apache.spark.sql.connector.expressions.SortOrder] = {
     import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection}
@@ -785,8 +773,19 @@ class GraftScanImpl(
     val sb = frags.head.sortedBy
     if (sb.isEmpty || frags.exists(_.sortedBy != sb)) return Array.empty
     val parts = planAll()
-    val singleFile = parts.forall {
-      case p: GraftInputPartition => p.files.size <= 1
+    val lead = sb.head
+    val dt = schema.dataTypeOf(lead)
+    val ord = TypedValue.ordering
+    val span: Map[String, (Any, Any)] = (for {
+      f <- frags; rel <- f.files
+      cs <- f.fileStats.get(rel).flatMap(_.get(lead)); mn <- cs.min; mx <- cs.max
+    } yield s"$uri/$rel" -> (TypedValue.parse(dt, mn), TypedValue.parse(dt, mx))).toMap
+    val inOrder = parts.forall {
+      case p: GraftInputPartition => p.files.size <= 1 || !p.needDedup &&
+        p.files.map(f => span.get(f._1)).sliding(2).forall {
+          case Seq(Some((_, mx)), Some((mn, _))) => ord.compare(mx, mn) < 0
+          case _ => false
+        }
       case _ => false
     }
     val bucketKeysDistinct = bucketedReady.isEmpty || {
@@ -795,7 +794,7 @@ class GraftScanImpl(
       }
       keys.distinct.length == keys.length
     }
-    if (!singleFile || !bucketKeysDistinct) return Array.empty
+    if (!inOrder || !bucketKeysDistinct) return Array.empty
     val present = requiredStruct.fieldNames.toSet
     sb.takeWhile(present.contains).map(c =>
       Expressions.sort(Expressions.column(c),
@@ -866,87 +865,75 @@ class GraftScanImpl(
     case _ => pairs
   }
 
-  /** Split a transitive-overlap fragment group into half-open range
-    * slabs along the first dimension using the per-file MBRs already in
-    * the manifests — the scale-safe replacement for one-partition-per-
-    * group merging (SURVEY §7.4.4; reference fragment semantics §1.1).
-    * Slab cut points are the distinct per-file dim0 minima (cell-order-
-    * clustered writes give files tight, staggered MBRs, so this yields
-    * ≈ one slab per file); when files overlap so completely that no
-    * natural cuts exist, numeric domains fall back to equal-width cuts.
-    * A file is attached to every slab its MBR intersects; the reader's
-    * [lo, hi) ownership filter keeps output exactly-once. */
-  private def slabPartitions(g: Seq[FragmentMeta]): Seq[GraftInputPartition] = {
+  /** Partitions of one latest-wins component (files of two or more
+    * fragments). A component of at most `MergeCells` manifest rows is
+    * ONE merge partition: each file read once, by one task. A larger
+    * one is cut into half-open dim0 slabs (SURVEY §7.4.4) at the
+    * distinct per-file dim0 minima (≈ one slab per file under
+    * cell-order clustering), else the distinct maxima, else equal-width
+    * numeric cuts; a file joins every slab its MBR intersects and the
+    * reader's [lo, hi) ownership keeps output exactly-once. With no
+    * range structure to cut on — a file without its own dim0 MBR, or
+    * coincident non-numeric MBRs — hash ownership, at any size. */
+  private def mergePartitions(comp: Seq[(FragmentMeta, String)])
+      : Seq[GraftInputPartition] = {
     val d0 = schema.dims.head
     val dt = d0.dataType
     val ord = TypedValue.ordering
-    case class FileBox(path: String, ts: Long, mn: Any, mx: Any)
-    val boxed: Seq[Either[(String, Long), FileBox]] = g.flatMap { f =>
-      selectFiles(f).map { rel =>
-        val mbr = f.fileStats.get(rel).flatMap(_.get(d0.name)).flatMap(cs =>
-          for (mn <- cs.min; mx <- cs.max) yield
-            (TypedValue.parse(dt, mn), TypedValue.parse(dt, mx)))
-        mbr match {
-          case Some((mn, mx)) =>
-            Right(FileBox(s"$uri/$rel", f.timestamp, mn, mx))
-          case None => Left((s"$uri/$rel", f.timestamp))
-        }
+    val files = comp.map { case (f, rel) => (s"$uri/$rel", f.timestamp) }
+    val mbrs = comp.map { case (f, rel) =>
+      f.fileStats.get(rel).flatMap(_.get(d0.name)).flatMap(cs =>
+        for (mn <- cs.min; mx <- cs.max) yield
+          (TypedValue.parse(dt, mn), TypedValue.parse(dt, mx)))
+    }
+    if (mbrs.exists(_.isEmpty)) return hashPartitions(files)
+    val boxes = mbrs.flatten
+    var cuts: Seq[Any] = boxes.map(_._1).distinct.sorted(ord).drop(1)
+    if (cuts.isEmpty)
+      // coincident minima but staggered maxima (e.g. appends that all
+      // start at the domain origin): distinct maxima still cut —
+      // works for ANY comparable dim type, strings included
+      cuts = boxes.map(_._2).distinct.sorted(ord).dropRight(1)
+    if (cuts.isEmpty) {
+      // fully-coincident file MBRs (e.g. unordered writes): equal-width
+      // cuts over the numeric domain
+      val gmin = boxes.map(_._1).min(ord)
+      val gmax = boxes.map(_._2).max(ord)
+      val n = math.min(boxes.size, 16)
+      cuts = (gmin, gmax) match {
+        case (a: Long, b: Long) if b > a =>
+          (1 until n).map(i => (a + ((b - a) * i.toDouble / n).toLong): Any)
+            .distinct.filter(c => ord.compare(c, gmin) > 0)
+        case (a: Double, b: Double) if b > a =>
+          (1 until n).map(i => (a + (b - a) * i / n): Any).distinct
+        case _ => Nil
       }
     }
-    if (boxed.exists(_.isLeft))
-      // a file lacks dim0 MBR stats → no range structure to cut on;
-      // hash-ownership keeps the merge parallel and memory-bounded
-      hashPartitions(boxed.map(_.fold(identity, b => (b.path, b.ts))))
+    val rows = comp.map { case (f, rel) => f.fileRows.getOrElse(rel, f.rows) }.sum
+    if (cuts.isEmpty) hashPartitions(files)
+    else if (rows <= GraftScanImpl.MergeCells)
+      Seq(GraftInputPartition(files, needDedup = true))
     else {
-      val boxes = boxed.map(_.toOption.get)
-      var cuts: Seq[Any] = boxes.map(_.mn).distinct.sorted(ord).drop(1)
-      if (cuts.isEmpty && boxes.size > 1)
-        // coincident minima but staggered maxima (e.g. appends that all
-        // start at the domain origin): distinct maxima still cut —
-        // works for ANY comparable dim type, strings included
-        cuts = boxes.map(_.mx).distinct.sorted(ord).dropRight(1)
-      if (cuts.isEmpty && boxes.size > 1) {
-        // fully-coincident file MBRs (e.g. unordered writes): equal-width
-        // cuts over the numeric domain restore parallelism
-        val gmin = boxes.map(_.mn).min(ord)
-        val gmax = boxes.map(_.mx).max(ord)
-        val n = math.min(boxes.size, 16)
-        cuts = (gmin, gmax) match {
-          case (a: Long, b: Long) if b > a =>
-            (1 until n).map(i => (a + ((b - a) * i.toDouble / n).toLong): Any)
-              .distinct.filter(c => ord.compare(c, gmin) > 0)
-          case (a: Double, b: Double) if b > a =>
-            (1 until n).map(i => (a + (b - a) * i / n): Any).distinct
-          case _ => Nil
+      val bounds: Seq[(Option[Any], Option[Any])] =
+        (None +: cuts.map(Option(_))).zip(cuts.map(Option(_)) :+ None)
+      bounds.flatMap { case (lo, hi) =>
+        val inSlab = files.zip(boxes).collect {
+          case (file, (mn, mx)) if lo.forall(l => ord.compare(mx, l) >= 0) &&
+              hi.forall(h => ord.compare(mn, h) < 0) => file
         }
-      }
-      if (cuts.isEmpty && boxes.size > 1)
-        // non-numeric fully-coincident MBRs (two overlapping unordered
-        // string-dim fragments — the round-2 single-task hole):
-        // hash-ownership fallback
-        hashPartitions(boxes.map(b => (b.path, b.ts)))
-      else {
-        val bounds: Seq[(Option[Any], Option[Any])] =
-          (None +: cuts.map(Option(_))).zip(cuts.map(Option(_)) :+ None)
-        bounds.flatMap { case (lo, hi) =>
-          val inSlab = boxes.filter(b =>
-            lo.forall(l => ord.compare(b.mx, l) >= 0) &&
-              hi.forall(h => ord.compare(b.mn, h) < 0))
-          if (inSlab.isEmpty) None
-          else Some(GraftInputPartition(inSlab.map(b => (b.path, b.ts)),
-            needDedup = inSlab.map(_.ts).distinct.size > 1,
-            slabLo = lo, slabHi = hi))
-        }
+        if (inSlab.isEmpty) None
+        else Some(GraftInputPartition(inSlab,
+          needDedup = inSlab.map(_._2).distinct.size > 1,
+          slabLo = lo, slabHi = hi))
       }
     }
   }
 
-  /** Coordinate-hash ownership over a whole overlap group: partition i
-    * of n owns `pmod(stableDimHash(dim tuple), n) == i`. Each sibling
-    * reads all the group's files — n× read amplification — but merge
+  /** Coordinate-hash ownership over a whole component: partition i of
+    * n owns `pmod(stableDimHash(dim tuple), n) == i`. Each sibling reads
+    * all the component's files — n× read amplification — but merge
     * state is ~1/n per task, so memory stays bounded no matter how
-    * large the group is. Used only when no per-file range structure
-    * exists to cut real slabs on. */
+    * large the component is. */
   private def hashPartitions(files: Seq[(String, Long)])
       : Seq[GraftInputPartition] = {
     val n = math.min(math.max(files.size, 2), 16)
@@ -954,30 +941,65 @@ class GraftScanImpl(
       hashMod = n, hashIdx = i))
   }
 
-  private def overlapGroups(frags: Seq[FragmentMeta]): Seq[Seq[FragmentMeta]] = {
-    // union-find over MBR overlap; pairs enumerated by the dim0 sweep
-    // (parse-once, near-linear for time/key-ordered fragment layouts —
-    // the shape a streaming-ingested 100 TB table has)
-    val parent = Array.tabulate(frags.size)(identity)
-    def find(x: Int): Int =
-      if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
-    FragmentPruning.forEachOverlappingPair(
-      FragmentPruning.parseBoxes(frags, schema),
-      (i, j) => {
-        val (a, b) = (find(i), find(j)); if (a != b) parent(a) = b
-        true
-      })
-    frags.indices.groupBy(find).values.map(_.map(frags)).toSeq
-  }
+  /** Latest-wins components over files: union-find over per-file dim
+    * boxes (a file without stats takes its fragment's box), pairs from
+    * the `forEachOverlappingPair` dim0 sweep. Only files of DIFFERENT
+    * fragments are linked: a fragment holds each coordinate once, so
+    * two versions of a coordinate lie in files of two fragments whose
+    * boxes overlap. When no merge can occur at all (`mergeFree`), every
+    * file is its own component. */
+  private def overlapComponents(files: Seq[(FragmentMeta, String)])
+      : Seq[Seq[(FragmentMeta, String)]] =
+    if (mergeFree) files.map(Seq(_))
+    else {
+      val parent = Array.tabulate(files.size)(identity)
+      def find(x: Int): Int =
+        if (parent(x) == x) x else { parent(x) = find(parent(x)); parent(x) }
+      FragmentPruning.forEachOverlappingPair(
+        files.map { case (f, rel) => FragmentPruning.parseBox(
+          f.stats ++ f.fileStats.getOrElse(rel, Map.empty), schema)
+        }.toIndexedSeq,
+        (i, j) => {
+          if (files(i)._1.id != files(j)._1.id) {
+            val (a, b) = (find(i), find(j)); if (a != b) parent(a) = b
+          }
+          true
+        })
+      files.indices.groupBy(find).values.toSeq.sortBy(_.head).map(_.map(files))
+    }
 
   /** Streaming source over the fragment timeline: each micro-batch
     * emits the fragments committed in `(startOffset, endOffset]` — the
     * read-side dual of the one-fragment-per-batch streaming sink. See
     * [[GraftMicroBatchStream]] for semantics. */
   override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
+    streaming = true
     new GraftMicroBatchStream(spark, uri, schema, requiredStruct, preds,
       streamMaxFrags, streamMaxRows)
+  }
+
+  /** Set once this scan serves a stream: its micro-batches plan their
+    * own partitions, so the description plans none. */
+  private var streaming = false
+
+  /** EXPLAIN's view of the plan: files planned of files visible, and
+    * the partitions per kind. */
+  override def description(): String =
+    if (streaming) "GraftScan(stream)"
+    else {
+      val kinds = planAll().toSeq.map {
+        case _: GraftFillPartition => "fill"
+        case p: GraftInputPartition if p.hashMod > 0 => "hash"
+        case p: GraftInputPartition if p.slabLo.isDefined || p.slabHi.isDefined => "slab"
+        case p: GraftInputPartition => if (p.needDedup) "merge" else "simple"
+      }
+      val planned = planAll().collect { case p: GraftInputPartition => p.files.map(_._1) }
+        .flatten.distinct.length
+      s"GraftScan(files $planned of ${allFrags.map(_.files.size).sum}, partitions " +
+        Seq("simple", "merge", "slab", "hash", "fill")
+          .map(k => s"$k=${kinds.count(_ == k)}").mkString(" ") + ")"
+    }
 
   // reader-factory cache: every copy of the scan's exec node asks for
   // the factory, and its tombstones depend only on the runtime-filter
@@ -1084,6 +1106,52 @@ class GraftScanImpl(
         narrow(c)(_.and(RangeAlgebra.Interval.le(TypedValue.normalize(dt, v))))
       case And(l, r) => applyRuntime(l); applyRuntime(r)
       case _ => ()
+    }
+  }
+}
+
+object GraftScanImpl {
+  /** Merge state one task holds, in cells: a latest-wins component of
+    * at most this many rows is one merge partition, and dense fill
+    * slabs aim at this many cells. */
+  val MergeCells = 262144L
+
+  /** Merge-free files packed into partitions by Spark's file-source
+    * rule (`FilePartition.maxSplitBytes` and `getFilePartitions`, under
+    * the session's `spark.sql.files.maxPartitionBytes`,
+    * `openCostInBytes` and `minPartitionNum`). A file's size is its
+    * manifest rows × `readSchema.defaultSize` — the estimate
+    * `estimateStatistics` reports — so packing makes no file-system
+    * call. Files are packed in dim0 order and never across a bucket
+    * key (`bucketOf`). */
+  def pack(spark: SparkSession, uri: String, schema: ArraySchema,
+      readSchema: StructType, files: Seq[(FragmentMeta, String)],
+      bucketOf: ((FragmentMeta, String)) => Option[Int] = _ => None)
+      : Seq[GraftInputPartition] = {
+    import org.apache.spark.sql.execution.datasources.{FilePartition, PartitionedFile}
+    val rowBytes = math.max(readSchema.defaultSize.toLong, 1L)
+    def bytes(f: FragmentMeta, rel: String): Long =
+      f.fileRows.getOrElse(rel, f.rows / math.max(f.files.size, 1)) * rowBytes
+    val d0 = schema.dims.head
+    def lo(f: FragmentMeta, rel: String): Option[Any] =
+      f.fileStats.get(rel).flatMap(_.get(d0.name)).orElse(f.stats.get(d0.name))
+        .flatMap(_.min).map(TypedValue.parse(d0.dataType, _))
+    val ordered = files.sortBy { case (f, rel) => lo(f, rel) }(
+      Ordering.Option(TypedValue.ordering))
+    val openCost = spark.sessionState.conf.filesOpenCostInBytes
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      ordered.map { case (f, rel) => bytes(f, rel) + openCost }.sum)
+    ordered.groupBy(bucketOf).toSeq.sortBy(_._1).flatMap { case (bucket, group) =>
+      val it = group.iterator
+      FilePartition.getFilePartitions(spark, group.map { case (f, rel) =>
+        PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
+          org.apache.spark.paths.SparkPath.fromPathString(s"$uri/$rel"),
+          0L, bytes(f, rel))
+      }, maxSplit).map { p =>
+        GraftInputPartition(Seq.fill(p.files.length)(it.next()).map {
+          case (f, rel) => (s"$uri/$rel", f.timestamp)
+        }, needDedup = false, bucket = bucket)
+      }
     }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 /** v16: the vector index as a storage layout — IVF cluster ids as the
   * array's leading dimension make probe lists PUSHED dim predicates,
@@ -23,11 +22,9 @@ class AnnArraySpec extends SparkSpec {
       s"need multiple files to observe pruning: ${frag.files.size}")
     val arr = spark.read.format("graftarray").option("path", uri).load()
     val one = arr.filter(col("cluster") === 0)
-    val parts = one.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.inputPartitions
-    }.flatten
-    assert(parts.size < frag.files.size,
-      s"no pruning: ${parts.size} of ${frag.files.size} files scanned")
+    val files = scannedFiles(one)
+    assert(files.size < frag.files.size,
+      s"no pruning: ${files.size} of ${frag.files.size} files scanned")
 
     // round-trip integrity: the array holds exactly the corpus
     assert(arr.count() == e.count())
@@ -83,11 +80,9 @@ class AnnArraySpec extends SparkSpec {
     val totalFiles = frags.map(_.files.size).sum
     assert(totalFiles > 2, s"need multiple files per fragment: $totalFiles")
     val one = arr.filter(col("cluster") === 0)
-    val parts = one.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.inputPartitions
-    }.flatten
-    assert(parts.size < totalFiles,
-      s"no pruning across fragments: ${parts.size} of $totalFiles files")
+    val files = scannedFiles(one)
+    assert(files.size < totalFiles,
+      s"no pruning across fragments: ${files.size} of $totalFiles files")
   }
 
   test("v19 label predicate composes with probe pruning in one scan") {
@@ -107,12 +102,9 @@ class AnnArraySpec extends SparkSpec {
     // ...and the probe dimension still prunes files under it
     val totalFiles = sources.GraftArray.store(spark, uri)
       .listFragments().map(_.files.size).sum
-    val parts = arr.filter(col("cluster") === 0 && col("label") === 2)
-      .queryExecution.executedPlan.collect {
-        case b: BatchScanExec => b.inputPartitions
-      }.flatten
-    assert(parts.size < totalFiles,
-      s"label filter broke pruning: ${parts.size} of $totalFiles")
+    val files = scannedFiles(arr.filter(col("cluster") === 0 && col("label") === 2))
+    assert(files.size < totalFiles,
+      s"label filter broke pruning: ${files.size} of $totalFiles")
     // the probe path end-to-end returns only labeled rows
     val res = operators.Similarity.annArrayProbeScore(
       spark, uri, cents, e, 10, extra = col("label") === 2,

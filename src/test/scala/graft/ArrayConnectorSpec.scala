@@ -784,4 +784,17 @@ class ArrayConnectorSpec extends SparkSpec with WriteEntries {
       assert(got == want, s"pushdown mismatch for $p")
     }
   }
+
+  test("EXPLAIN shows the files planned and the partitions per kind (arr1)") {
+    val df = SparkEntry.queries("arr1_roundtrip_filter")(spark, sf)
+    df.collect()
+    val plan = df.queryExecution.executedPlan.toString
+    val m = """GraftScan\(files (\d+) of (\d+), partitions simple=(\d+) merge=0 slab=0 hash=0 fill=0\)"""
+      .r.findFirstMatchIn(plan)
+    assert(m.isDefined, plan)
+    val Seq(planned, visible, simple) = m.get.subgroups.map(_.toInt)
+    assert(planned >= 1 && planned <= visible && simple >= 1, m.get.matched)
+    // perfbench's PlanStats keys stats-only aggregates on this text
+    assert(!plan.contains("stats-only"))
+  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import graft.core._
 import graft.sources.GraftArray
 import graft.functions.expressions.Hilbert2D
@@ -29,10 +28,9 @@ class FilePruningSpec extends SparkSpec {
     val df = spark.read.format("graftarray").option("path", uri).load()
     val q = df.filter(col("k").between(10L, 20L))
     assert(q.count() == 11)
-    val parts = q.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.inputPartitions }.flatten
-    assert(parts.size < frag.files.size,
-      s"no file pruning: ${parts.size} of ${frag.files.size} files scanned")
+    val files = scannedFiles(q)
+    assert(files.size < frag.files.size,
+      s"no file pruning: ${files.size} of ${frag.files.size} files scanned")
   }
 
   test("per-file pruning is latest-wins safe (newer overlapping fragment)") {
@@ -116,10 +114,9 @@ class FilePruningSpec extends SparkSpec {
     assert(q.count() ==
       (0L until 65536L).count(i => i % 64 <= 7 && i / 64 % 64 <= 7 &&
         i / 4096 % 16 <= 7))
-    val parts = q.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.inputPartitions }.flatten
-    assert(parts.size < frag.files.size,
-      s"no 3-D pruning: ${parts.size} of ${frag.files.size} files scanned")
+    val files = scannedFiles(q)
+    assert(files.size < frag.files.size,
+      s"no 3-D pruning: ${files.size} of ${frag.files.size} files scanned")
   }
 
   test("Hilbert curve locality: adjacent cells map to nearby indexes") {

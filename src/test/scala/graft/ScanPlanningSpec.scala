@@ -119,8 +119,9 @@ class ScanPlanningSpec extends SparkSpec {
     assert(scan.filterAttributes().map(_.describe()).contains("v"))
     scan.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.LessThan("v", 100.0)))
-    assert(scan.planInputPartitions().length < all.size,
-      "runtime attr filter pruned nothing")
+    val narrowed = scan.planInputPartitions().collect {
+      case p: graft.sources.v2.GraftInputPartition => p }.flatMap(_.files)
+    assert(narrowed.size < all.size, "runtime attr filter pruned nothing")
   }
 
   test("attribute-stats pruning disables itself under latest-wins merge") {
@@ -234,20 +235,30 @@ class ScanPlanningSpec extends SparkSpec {
     assert(five.map(_.getLong(0)).distinct.length == 5)
   }
 
+  /** Two overlapping fragments of 4 range-clustered files each, the
+    * second `n / 8` keys up (half a file), so that every file of one
+    * overlaps a file of the other: ONE latest-wins component of 2n
+    * rows, past the merge state one task may hold. */
+  private val bigMerge = 140000L
+
   test("overlapping multi-file fragments split into range-slab partitions") {
     val uri = tmp()
     GraftArray.create(spark, uri, sch)
-    // two fully-overlapping fragments, 4 range-clustered files each —
-    // the case where one-partition-per-overlap-group would put 2000
-    // rows through a single merge task
-    GraftArray.write(spark, uri, spark.range(0, 1000).repartition(4)
+    // the case where one merge partition per overlap component would
+    // put 2 × 140k rows through a single merge task
+    val n = bigMerge
+    assert(2 * n > graft.sources.v2.GraftScanImpl.MergeCells)
+    GraftArray.write(spark, uri, spark.range(0, n).repartition(4)
       .select(col("id").as("k"), lit(1.0).as("v")))
-    GraftArray.write(spark, uri, spark.range(0, 1000).repartition(4)
+    GraftArray.write(spark, uri, spark.range(n / 8, n / 8 + n).repartition(4)
       .select(col("id").as("k"), lit(2.0).as("v")))
     val df = spark.read.format("graftarray").option("path", uri).load()
-    assert(df.count() == 1000)
-    // newest fragment wins at every coordinate
-    assert(df.agg(min("v"), max("v")).as[(Double, Double)].head() == ((2.0, 2.0)))
+    assert(df.count() == n / 8 + n)
+    // newest fragment wins at every coordinate it holds
+    assert(df.filter(col("k") >= n / 8).agg(min("v"), max("v"))
+      .as[(Double, Double)].head() == ((2.0, 2.0)))
+    assert(df.filter(col("k") < n / 8).agg(min("v"), max("v"))
+      .as[(Double, Double)].head() == ((1.0, 1.0)))
     val parts = df.queryExecution.executedPlan.collect {
       case b: BatchScanExec => b.inputPartitions }.flatten
     assert(parts.size > 1, s"overlap group planned ${parts.size} partition(s)")
@@ -315,17 +326,26 @@ class ScanPlanningSpec extends SparkSpec {
       Seq(DimensionSpec("price", DecimalType(10, 2))),
       Seq(AttributeSpec("v", DoubleType)))
     GraftArray.create(spark, uri, dsch)
-    def rows(v: Double) = spark.range(0, 800).repartition(4)
+    val n = bigMerge
+    def rows(lo: Long, v: Double) = spark.range(lo, lo + n).repartition(4)
       .select((col("id").cast("decimal(10,2)") / 4).cast("decimal(10,2)")
         .as("price"), lit(v).as("v"))
-    GraftArray.write(spark, uri, rows(1.0))
-    GraftArray.write(spark, uri, rows(2.0))
+    GraftArray.write(spark, uri, rows(0, 1.0))
+    GraftArray.write(spark, uri, rows(n / 8, 2.0))
     val df = spark.read.format("graftarray").option("path", uri).load()
-    assert(df.count() == 800)
-    assert(df.agg(min("v"), max("v")).as[(Double, Double)].head() == ((2.0, 2.0)))
+    assert(df.count() == n / 8 + n)
+    val newer = col("price") >= lit(n / 8 / 4).cast("decimal(10,2)")
+    assert(df.filter(newer).agg(min("v"), max("v"))
+      .as[(Double, Double)].head() == ((2.0, 2.0)))
+    assert(df.filter(!newer).agg(min("v"), max("v"))
+      .as[(Double, Double)].head() == ((1.0, 1.0)))
     val parts = df.queryExecution.executedPlan.collect {
       case b: BatchScanExec => b.inputPartitions }.flatten
     assert(parts.size > 1, s"decimal overlap group planned ${parts.size}")
+    assert(parts.exists {
+      case p: graft.sources.v2.GraftInputPartition => p.slabLo.isDefined
+      case _ => false
+    }, "no slab-bounded partitions planned")
   }
 
   test("string-dim prefix predicate prunes fragments via [p, succ(p))") {

@@ -53,10 +53,9 @@ class SpatialSpec extends SparkSpec {
          |WHERE $c.st_overlaps($c.st_point(x, y),
          |  X'${hex(Wkb.box(100.0, 0.0, 120.0, 1000.0))}')""".stripMargin)
     assert(q.count() == 21) // x in [100, 120]
-    val parts = q.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.inputPartitions }.flatten
-    assert(parts.size < frag.files.size,
-      s"no pruning: ${parts.size} of ${frag.files.size}")
+    val files = scannedFiles(q)
+    assert(files.size < frag.files.size,
+      s"no pruning: ${files.size} of ${frag.files.size} files scanned")
   }
 
   test("st_equals: degenerate constant hits one point; box constant plans empty") {
@@ -116,10 +115,9 @@ class SpatialSpec extends SparkSpec {
       i - w <= 520.0 && i + w >= 500.0
     }
     assert(q.count() == expect)
-    val parts = q.queryExecution.executedPlan.collect {
-      case b: BatchScanExec => b.inputPartitions }.flatten
-    assert(parts.size < frag.files.size,
-      s"no pruning: ${parts.size} of ${frag.files.size}")
+    val files = scannedFiles(q)
+    assert(files.size < frag.files.size,
+      s"no pruning: ${files.size} of ${frag.files.size} files scanned")
     // st_equals through the geometry-column shape prunes the same way
     // but returns only exact-MBR matches (the residual decides)
     val eq = spark.sql(
