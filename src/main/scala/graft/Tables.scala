@@ -7,10 +7,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * through here so filters/projections reach the parquet scan untouched.
   */
 object Tables {
-  val All: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
     normalizeTs(spark.read.parquet(s"$sfDir/$name.parquet"))
 
@@ -67,9 +63,4 @@ object Tables {
       case _ => df
     }
   }
-
-  /** Register all tables as temp views so `spark.sql` sees the same names
-    * as the DuckDB oracle. Cheap (lazy scans) and idempotent. */
-  def registerAll(spark: SparkSession, sfDir: String): Unit =
-    All.foreach(n => load(spark, sfDir, n).createOrReplaceTempView(n))
 }

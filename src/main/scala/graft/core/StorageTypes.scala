@@ -109,21 +109,4 @@ object StorageTypes {
     throw new IllegalArgumentException(s"unknown storage type $name"))
 
   def sparkTypeOf(name: String): DataType = get(name).sparkType
-
-  /** The declared-or-inferred storage name for a plain Spark type
-    * (used when a column carries no explicit storage type). */
-  def inferName(dt: DataType): String = dt match {
-    case ByteType => "INT8"
-    case ShortType => "INT16"
-    case IntegerType => "INT32"
-    case LongType => "INT64"
-    case FloatType => "FLOAT32"
-    case DoubleType => "FLOAT64"
-    case BooleanType => "BOOL"
-    case StringType => "STRING_UTF8"
-    case BinaryType => "BLOB"
-    case DateType => "DATETIME_DAY"
-    case TimestampType => "DATETIME_US"
-    case _ => dt.simpleString.toUpperCase
-  }
 }

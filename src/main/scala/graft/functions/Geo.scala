@@ -22,11 +22,4 @@ object Geo {
       padX: Double = 0.0, padY: Double = 0.0): Column =
     x.between(lit(xmin - padX), lit(xmax + padX)) &&
       y.between(lit(ymin - padY), lit(ymax + padY))
-
-  /** Box-overlap test for per-row boxes against a constant box —
-    * the general MBR intersection the reference computes from WKB. */
-  def mbrOverlaps(xlo: Column, xhi: Column, ylo: Column, yhi: Column,
-      xmin: Double, xmax: Double, ymin: Double, ymax: Double): Column =
-    xlo <= lit(xmax) && xhi >= lit(xmin) &&
-      ylo <= lit(ymax) && yhi >= lit(ymin)
 }

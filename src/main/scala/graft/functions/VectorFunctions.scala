@@ -29,18 +29,6 @@ object VectorFunctions {
     when(nn === 0.0, lit(0.0)).otherwise(d / nn)
   }
 
-  /** Random-hyperplane LSH bucket id: `nBits` sign bits of dot products
-    * against deterministic pseudo-random planes. Planes are derived from
-    * md5 of (planeIdx, dimIdx) — no RNG, stable across runs/executors. */
-  def hyperplaneBucket(vec: Column, dim: Int, nBits: Int): Column = {
-    val bits = (0 until nBits).map { p =>
-      val plane = (0 until dim).map(d => planeCoef(p, d).toFloat)
-      val proj = dot(vec, array(plane.map(lit): _*))
-      when(proj > 0.0, lit(1L << p)).otherwise(lit(0L))
-    }
-    bits.reduce(_ + _)
-  }
-
   /** Deterministic plane coefficient in [-1, 1) from md5(p:d). */
   private[graft] def planeCoef(p: Int, d: Int): Double = {
     val md = java.security.MessageDigest.getInstance("MD5")

@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.core.Artifacts
 import graft.functions.expressions.TopK
 
 /** IVF coarse quantization for ANN:
@@ -10,12 +12,13 @@ import graft.functions.expressions.TopK
   *    (seedless, stable — `Date.now`-free by design)
   *  - Lloyd iterations: assignment is a single codegen'd argmax-dot
   *    against the driver-side centroid table ([[TopK.argMaxDot]]) —
-  *    zero row inflation, zero exchange (the round-1
-  *    crossJoin(centroids)+window plan materialized n×k rows and
-  *    shuffled them); per-cluster means reduce map-side (hash partial
-  *    agg) so the exchange moves k×dim aggregates, then the k×dim
-  *    float centroid table is collected — kilobytes, and the collect
-  *    cuts each iteration's lineage so nothing recomputes recursively
+  *    zero row inflation, zero exchange; per-cluster means reduce
+  *    map-side, and the k×dim collect cuts each iteration's lineage
+  *  - one [[Model]] per corpus: the k = 16, 3-round fit and its
+  *    tightness persist in [[Artifacts]] keyed by the corpus file's
+  *    signature, shared by v4, v15, v16, v18, v19 and v24; consumers
+  *    route with [[assignOnce]], the projection `fit` returns, so a
+  *    stored model routes bit-identically to an in-process one
   *  - search: probe the `nprobe` centroids nearest to the query and
   *    scan only their inverted lists
   *
@@ -23,6 +26,38 @@ import graft.functions.expressions.TopK
   * lists ARE the partitioning); centroids are always driver-side tiny.
   */
 object Ivf {
+  val K = 16
+  val Iters = 3
+
+  /** Fitted centroids plus the corpus tightness
+    * ([[Similarity.corpusTightnessMicro]]) the default dials use. */
+  final case class Model(centroids: Array[Array[Float]],
+      tightnessMicro: Long)
+
+  /** In-process model: one [[fit]] and its tightness pass. */
+  def fitModel(corpus: DataFrame): Model = {
+    val (assigned, centroids) = fit(corpus, K, Iters)
+    Model(centroids, Similarity.corpusTightnessMicro(assigned, centroids))
+  }
+
+  /** Dataset `d`'s persisted model of its embeddings: [[fitModel]] once
+    * per corpus file signature, then read back (exact float round-trip)
+    * with no Spark job — and no DataFrame, whose schema read runs one. */
+  def model(s: SparkSession, d: String): Model = {
+    val dir = Artifacts.resolveOrBuild(s, "ivf_model", d,
+      s"${corpusSig(d)}|k=$K|iters=$Iters|v1") { tmp =>
+      val m = fitModel(graft.Tables.load(s, d, "embeddings"))
+      Artifacts.writeFloatMatrix(tmp, "centroids", m.centroids)
+      Files.writeString(Paths.get(tmp, "tightness_micro"),
+        m.tightnessMicro.toString)
+    }
+    Model(Artifacts.readFloatMatrix(dir, "centroids"),
+      Files.readString(Paths.get(dir, "tightness_micro")).toLong)
+  }
+
+  /** Dataset `d`'s embeddings-file signature: the artifact key part. */
+  private[operators] def corpusSig(d: String): String =
+    graft.Tables.fileSig(s"$d/embeddings.parquet")
 
   /** Corpus + `cluster` column, plus the final centroid table
     * (driver-side k×dim floats — kilobytes). */
@@ -65,7 +100,7 @@ object Ivf {
   /** One assignment pass: cluster = argmax over centroids of the dot
     * product, computed per-row inside WholeStageCodegen (ties → lowest
     * centroid id, matching `ORDER BY sim DESC, cid ASC`). */
-  private def assignOnce(corpus: DataFrame,
+  private[graft] def assignOnce(corpus: DataFrame,
       centroids: Array[Array[Float]]): DataFrame =
     corpus.withColumn("cluster", TopK.argMaxDot(col("embedding"), centroids))
 

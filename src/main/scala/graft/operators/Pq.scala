@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.expressions.{PqKernels, TopK}
 
@@ -35,8 +35,19 @@ object Pq {
   val Iters = 3
   val TrainCap = 131072
 
+  /** Dataset `d`'s codebooks, persisted beside its [[Ivf.model]] (same
+    * corpus signature key) so v9 and v15 train once per corpus, not
+    * once per call. */
+  def codebooks(s: SparkSession, d: String): Array[Array[Float]] =
+    graft.core.Artifacts.readFloatMatrix(
+      graft.core.Artifacts.resolveOrBuild(s, "pq_codebooks", d,
+        s"${Ivf.corpusSig(d)}|m=$M|k=$K|iters=$Iters|cap=$TrainCap|v1") {
+        tmp => graft.core.Artifacts.writeFloatMatrix(tmp, "codebooks",
+          fitCodebooks(graft.Tables.load(s, d, "embeddings")))
+      }, "codebooks")
+
   /** Codebooks as M·K rows of SubDim floats, subspace-major. */
-  private[operators] def fitCodebooks(corpus: DataFrame): Array[Array[Float]] = {
+  private[graft] def fitCodebooks(corpus: DataFrame): Array[Array[Float]] = {
     val sample = corpus
       .orderBy(md5(col("vec_id").cast("string")), col("vec_id"))
       .limit(TrainCap)
@@ -119,15 +130,15 @@ object Pq {
     (qIds, luts)
   }
 
-  /** PQ-ADC top-k for the 5 fixed query vectors: encode the corpus to
+  /** PQ-ADC top-k for the 5 fixed query vectors under `books`
+    * ([[codebooks]] or [[fitCodebooks]]): encode the corpus to
     * M-byte codes, score every row against broadcast query LUTs in one
     * codegen pass, heap-select an `oversample`·k candidate superset
     * per query, rerank exactly. ADC ranks by the reconstructed dot
     * over the TRUE stored norm — ‖q‖ is constant per query so the
     * ranking matches approximate cosine. */
-  private[graft] def adcTopK(e: DataFrame, k: Int,
-      oversample: Int = 16): DataFrame = {
-    val books = fitCodebooks(e)
+  private[graft] def adcTopK(e: DataFrame, books: Array[Array[Float]],
+      k: Int, oversample: Int = 16): DataFrame = {
     val (qIds, luts) = queryLuts(e, books)
     val enc = e.select(col("vec_id"),
       PqKernels.pqEncode(col("embedding").cast("array<float>"), books, K,

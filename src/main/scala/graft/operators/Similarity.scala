@@ -381,22 +381,21 @@ object Similarity {
     rerankExact(cand, e, k)
   }
 
-  /** IVF top-k for the 5 fixed query vectors. The probe width is NOT
-    * hardcoded: it derives from the fit's own tightness statistic
-    * ([[derivedNprobe]]; 2 of 16 on this isotropic corpus, 1 on tight
-    * blobs — spec-pinned in AnnClusteredSpec) so the auto-dial is the
-    * engine's single source of defaults; an explicit value wins. */
-  private[graft] def ivfTopK(e: DataFrame,
+  /** IVF top-k for the 5 fixed query vectors under `model` (the
+    * corpus's [[Ivf.model]], or [[Ivf.fitModel]] of an in-memory
+    * frame). The probe width is NOT hardcoded: it derives from the
+    * model's tightness ([[derivedNprobe]]; 2 of 16 on this isotropic
+    * corpus, 1 on tight blobs — spec-pinned in AnnClusteredSpec) so the
+    * auto-dial is the engine's single source of defaults; an explicit
+    * value wins. */
+  private[graft] def ivfTopK(e: DataFrame, model: Ivf.Model,
       nprobe: Option[Int] = None): DataFrame = {
-    // no cache(): a driver-facing query must not pin executor storage
-    // for the session; the assignment recompute is one codegen pass
-    val (assigned, centroids) = Ivf.fit(e, k = 16, iters = 3)
-    val np = nprobe.getOrElse(derivedNprobe(
-      corpusTightnessMicro(assigned, centroids), centroids.length,
-      filtered = false))
+    val assigned = Ivf.assignOnce(e, model.centroids)
+    val np = nprobe.getOrElse(derivedNprobe(model.tightnessMicro,
+      model.centroids.length, filtered = false))
     val q = assigned.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
-    val qProbes = Ivf.probes(q, assigned, centroids, nprobe = np)
+    val qProbes = Ivf.probes(q, assigned, model.centroids, nprobe = np)
     val scored = qProbes
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("qv"), col("embedding")))
@@ -411,16 +410,17 @@ object Similarity {
     * rerank of the bounded candidate superset). The two approximations
     * compose: routing can miss a neighbor's cluster AND ADC can
     * misrank inside a probed cluster — the published recall bound is
-    * correspondingly below v4's and v9's individual bounds. */
-  private[graft] def ivfPqTopK(e: DataFrame, k: Int,
-      oversample: Int = 16, nprobe: Option[Int] = None): DataFrame = {
-    val (assigned, centroids) = Ivf.fit(e, k = 16, iters = 3)
-    // routing dial derived from the fit's own tightness statistic
-    // (the v4/v16 default path); an explicit value wins
-    val np = nprobe.getOrElse(derivedNprobe(
-      corpusTightnessMicro(assigned, centroids), centroids.length,
-      filtered = false))
-    val books = Pq.fitCodebooks(e)
+    * correspondingly below v4's and v9's individual bounds. `model` and
+    * `books` come from [[Ivf.model]] and [[Pq.codebooks]] (or their
+    * in-process fits). */
+  private[graft] def ivfPqTopK(e: DataFrame, model: Ivf.Model,
+      books: Array[Array[Float]], k: Int, oversample: Int = 16,
+      nprobe: Option[Int] = None): DataFrame = {
+    val assigned = Ivf.assignOnce(e, model.centroids)
+    // routing dial derived from the model's tightness (the v4/v16
+    // default path); an explicit value wins
+    val np = nprobe.getOrElse(derivedNprobe(model.tightnessMicro,
+      model.centroids.length, filtered = false))
     val (qIds, luts) = Pq.queryLuts(e, books)
     import graft.functions.expressions.PqKernels
     val enc = assigned.select(col("vec_id"), col("cluster"),
@@ -431,7 +431,7 @@ object Similarity {
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val qIdx = map_from_arrays(
       typedLit(qIds.toList), typedLit(qIds.indices.toList))
-    val scored = Ivf.probes(q, enc, centroids, nprobe = np)
+    val scored = Ivf.probes(q, enc, model.centroids, nprobe = np)
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("adc", element_at(
         PqKernels.pqAdc(col("codes"), luts, Pq.K),
@@ -468,7 +468,9 @@ object Similarity {
     * cross-process [[graft.core.Artifacts]] store keyed by the source
     * file's size+mtime — a regenerated corpus re-indexes, a FRESH
     * process finds the index (and its centroid table, persisted with
-    * exact Float round-trip) warm on disk; bench iterations and
+    * exact Float round-trip) warm on disk. The full-corpus builds take
+    * centroids and tightness from the corpus's [[Ivf.model]], so a
+    * corpus is fitted once, not once per index; bench iterations and
     * repeated queries re-READ it, never rebuild a corpus copy per
     * call. All index mutations (v17's increment append, v18's
     * tombstone) run in the build/post step BEFORE publication, so the
@@ -476,15 +478,15 @@ object Similarity {
     * state across runs. */
   private def annIndexBuild(s: SparkSession, d: String, prefix: String,
       extraAttrs: Seq[graft.core.AttributeSpec] = Nil)
-      (build: => (DataFrame, Array[Array[Float]]))
+      (rows: DataFrame, model: => Ivf.Model)
       (post: (String, Array[Array[Float]]) => Unit = (_, _) => ())
       : (String, Array[Array[Float]]) = {
     // the signature carries a layout version: changing WHAT the build
     // stores (e.g. the micro-unit tightness key) must re-key the
     // artifact rather than silently serving a stale layout
     val dir = graft.core.Artifacts.resolveOrBuild(s, prefix, d,
-      graft.Tables.fileSig(s"$d/embeddings.parquet") + "|v2") { tmp =>
-      val (assigned, centroids) = build
+      Ivf.corpusSig(d) + "|v2") { tmp =>
+      val m = model
       val uri = s"$tmp/arr"
       graft.sources.GraftArray.create(s, uri, graft.core.ArraySchema(
         graft.core.ArrayKind.Sparse,
@@ -496,7 +498,7 @@ object Similarity {
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType,
             containsNull = false)) +: extraAttrs))
-      annStore(s, uri, assigned, extraAttrs)
+      annStore(s, uri, Ivf.assignOnce(rows, m.centroids), extraAttrs)
       // the build's one-pass tightness statistic lands in the index
       // manifest so query time derives its default dials from the
       // MEASURED corpus regime (never hand-tuned; explicit options
@@ -504,10 +506,9 @@ object Similarity {
       // floor-micro INTEGER the v29 report also publishes, so report
       // and served defaults derive from one number
       graft.sources.GraftArray.putMetadata(s, uri,
-        Map("graft.ann.tightness_micro" ->
-          corpusTightnessMicro(assigned, centroids).toString))
-      post(uri, centroids)
-      graft.core.Artifacts.writeFloatMatrix(tmp, "centroids", centroids)
+        Map("graft.ann.tightness_micro" -> m.tightnessMicro.toString))
+      post(uri, m.centroids)
+      graft.core.Artifacts.writeFloatMatrix(tmp, "centroids", m.centroids)
     }
     (s"$dir/arr", graft.core.Artifacts.readFloatMatrix(dir, "centroids"))
   }
@@ -525,7 +526,7 @@ object Similarity {
 
   private def annArrayBuild(s: SparkSession, d: String, e: DataFrame)
       : (String, Array[Array[Float]]) =
-    annIndexBuild(s, d, "graft_annarr")(Ivf.fit(e, k = 16, iters = 3))()
+    annIndexBuild(s, d, "graft_annarr")(e, Ivf.model(s, d))()
 
   private[graft] def annArrayTopK(s: SparkSession, d: String,
       e: DataFrame, k: Int): (DataFrame, String) = {
@@ -583,18 +584,17 @@ object Similarity {
     * pruning keeps working per fragment. Memoized like annArrayCache:
     * index maintenance is a build step, not a per-query cost. */
   private[graft] def annArrayIncrBuild(s: SparkSession, d: String,
-      e: DataFrame): (String, Array[Array[Float]]) =
-    annIndexBuild(s, d, "graft_annincr")(
-      Ivf.fit(e.filter(col("vec_id") % 2 === 0), k = 16, iters = 3)) {
+      e: DataFrame): (String, Array[Array[Float]]) = {
+    val base = e.filter(col("vec_id") % 2 === 0)
+    annIndexBuild(s, d, "graft_annincr")(base, Ivf.fitModel(base)) {
       // the INCREMENT: frozen-centroid assignment (argmax codegen,
       // per-row, shuffle-free) + fragment append — the storage
       // engine's native incremental commit IS the index maintenance
       (uri, centroids) =>
         annStore(s, uri,
-          e.filter(col("vec_id") % 2 === 1).withColumn("cluster",
-            graft.functions.expressions.TopK.argMaxDot(
-              col("embedding"), centroids)), Nil)
+          Ivf.assignOnce(e.filter(col("vec_id") % 2 === 1), centroids), Nil)
     }
+  }
 
   /** v18's index with a ROW-LEVEL DELETE applied: one range tombstone
     * on the `vec_id` dimension masks [100, 300) from every read at or
@@ -606,7 +606,7 @@ object Similarity {
     * consolidate+vacuum, deliberately decoupled. */
   private[graft] def annArrayDeleteBuild(s: SparkSession, d: String,
       e: DataFrame): (String, Array[Array[Float]]) =
-    annIndexBuild(s, d, "graft_anndel")(Ivf.fit(e, k = 16, iters = 3)) {
+    annIndexBuild(s, d, "graft_anndel")(e, Ivf.model(s, d)) {
       (uri, _) =>
         import graft.sources.v2.PredicateSupport.{AndP, Cmp}
         graft.sources.GraftArray.commitTombstone(s, uri,
@@ -624,8 +624,7 @@ object Similarity {
       e: DataFrame): (String, Array[Array[Float]]) =
     annIndexBuild(s, d, "graft_annfilt",
       extraAttrs = Seq(graft.core.AttributeSpec("label",
-        org.apache.spark.sql.types.IntegerType)))(
-      Ivf.fit(e, k = 16, iters = 3))()
+        org.apache.spark.sql.types.IntegerType)))(e, Ivf.model(s, d))()
 
   /** SQ8 scalar-quantized top-k: the corpus is scanned as int8 vectors
     * (4× smaller than float32 — at 100 TB of embeddings that is the
@@ -687,9 +686,10 @@ object Similarity {
       .orderBy("query_id").collect().map(_.getDouble(1))
 
   /** v24 core: hits@10 (out of 5 queries × 10 = 50) against the exact
-    * brute-force baseline, per probe depth, under ONE shared k-means
-    * fit and in ONE pass. The probe list is computed once at the
-    * deepest depth: `ArgTopDot.top` sorts centroids by (dot desc,
+    * brute-force baseline, per probe depth, under `model` (the corpus's
+    * [[Ivf.model]], or [[Ivf.fitModel]] of an in-memory frame; no Lloyd
+    * round runs here) and in ONE pass. The probe list is computed once
+    * at the deepest depth: `ArgTopDot.top` sorts centroids by (dot desc,
     * index asc), a total order, so its first `np` entries are exactly
     * the depth-`np` probe list, and each (query, cluster) probe row
     * carries its rank `prank`. The depth-`np` candidates are then the
@@ -705,16 +705,15 @@ object Similarity {
     * list, so the candidate set equals brute force's and hits MUST be
     * exactly 50. Driver-side state: 5 × 5 × 10 candidate ids and the
     * 50 exact ids. */
-  private[graft] def probeSweepHits(s: SparkSession, e: DataFrame)
+  private[graft] def probeSweepHits(e: DataFrame, model: Ivf.Model)
       : Seq[(Int, Long)] = {
     import graft.functions.expressions.TopK
     val depths = Seq(1, 2, 4, 8, 16)
-    val (assigned, centroids) = Ivf.fit(e, k = 16, iters = 3)
     val probeSet = e.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        posexplode(TopK.argTopDot(col("embedding"), centroids, depths.max))
-          .as(Seq("prank", "probe_cluster")))
-    val scored = assigned
+        posexplode(TopK.argTopDot(col("embedding"), model.centroids,
+          depths.max)).as(Seq("prank", "probe_cluster")))
+    val scored = Ivf.assignOnce(e, model.centroids)
       .join(broadcast(probeSet), col("probe_cluster") === col("cluster"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("cos", cosine(col("qv"), col("embedding")))
@@ -1142,8 +1141,8 @@ object Similarity {
     // index operator reads before OVERRIDING the auto-derived nprobe
     // (derivedNprobe from the manifest's stored tightness is the
     // default; this sweep is the instrument that justifies an explicit
-    // override — x21/x25's sweep family applied to ANN). One
-    // shared k-means fit, five probe depths, hits@10 vs exact brute
+    // override — x21/x25's sweep family applied to ANN). The corpus's
+    // one persisted k-means model, five probe depths, hits@10 vs exact brute
     // force. Published are three FALSIFIABLE invariants per depth:
     // recall_ok (measured floors with margin: hits 35/38/42/47/50 at
     // sf0.01, 49/49/49/50/50 at sf0.1 — bounds 25/28/32/36), ge_prev
@@ -1153,7 +1152,7 @@ object Similarity {
     // 50 — a theorem, not a tuning observation).
     "v24_probe_sweep" -> ((s, d) => {
       import s.implicits._
-      val hits = probeSweepHits(s, emb(s, d))
+      val hits = probeSweepHits(emb(s, d), Ivf.model(s, d))
       val bounds = Map(1 -> 25L, 2 -> 28L, 4 -> 32L, 8 -> 36L, 16 -> 50L)
       val prevs = None +: hits.init.map(h => Some(h._2))
       hits.zip(prevs).map { case ((np, h), prev) =>
@@ -1190,8 +1189,8 @@ object Similarity {
     // driver-facing output is the self-asserting recall check: each
     // query's recall@10 vs exact must clear 0.5 (observed ≥ 0.7 at
     // sf0.001–0.1; `ivfTopK` is the raw result surface).
-    "v4_ann_ivf" -> ((s, d) =>
-      recallCheck(ivfTopK(emb(s, d)), bruteTopK(emb(s, d)), bound = 0.5)),
+    "v4_ann_ivf" -> ((s, d) => recallCheck(
+      ivfTopK(emb(s, d), Ivf.model(s, d)), bruteTopK(emb(s, d)), bound = 0.5)),
 
     // Multi-table LSH ANN: union-of-bucket candidates, exact rerank.
     // Approximate by design — driver-facing output is the recall
@@ -1219,8 +1218,8 @@ object Similarity {
     // true neighbors sit at cosine 0.24–0.42; bound 0.4 leaves margin.
     // Clustered real embeddings fare far better at the same config).
     "v9_ann_pq" -> ((s, d) =>
-      recallCheck(Pq.adcTopK(emb(s, d), 10), bruteTopK(emb(s, d)),
-        bound = 0.4)),
+      recallCheck(Pq.adcTopK(emb(s, d), Pq.codebooks(s, d), 10),
+        bruteTopK(emb(s, d)), bound = 0.4)),
 
     // ANN through the ARRAY connector: IVF cluster = leading storage
     // dimension, probe list = pushed dim predicate, scan pruned to
@@ -1356,8 +1355,8 @@ object Similarity {
     // synthetic corpus (observed per-query recall@10 documented in
     // OperatorsSpec; clustered real embeddings fare far better).
     "v15_ann_ivfpq" -> ((s, d) =>
-      recallCheck(ivfPqTopK(emb(s, d), 10), bruteTopK(emb(s, d)),
-        bound = 0.3)),
+      recallCheck(ivfPqTopK(emb(s, d), Ivf.model(s, d), Pq.codebooks(s, d),
+        10), bruteTopK(emb(s, d)), bound = 0.3)),
 
     // Radius (range) search — FAISS range_search analog: ALL corpus
     // vectors within cosine ≥ τ of each query, not a fixed k. The

@@ -85,6 +85,53 @@ class AnnClusteredSpec extends SparkSpec {
       .localCheckpoint()
   }
 
+  private def fixtures: Seq[(String, DataFrame)] =
+    Seq("blobs" -> blobs, "isotropic" -> iso, "ties" -> ties)
+
+  /** `e` written as a fresh dataset directory's `embeddings.parquet`:
+    * the directory and the corpus read back from it. */
+  private def dataset(e: DataFrame): (String, DataFrame) = {
+    val d = java.nio.file.Files.createTempDirectory("ivf_model_spec").toString
+    e.write.parquet(s"$d/embeddings.parquet")
+    (d, spark.read.parquet(s"$d/embeddings.parquet"))
+  }
+
+  private def bits(m: Array[Array[Float]]): Seq[Seq[Int]] =
+    m.map(_.map(java.lang.Float.floatToRawIntBits).toSeq).toSeq
+
+  /** Spark jobs `body` runs, counted under its own job group (AQE
+    * splits one action into several jobs, and other suites' jobs must
+    * not leak in). */
+  private def jobsOf[T](body: => T): (T, Int) = {
+    val ran = new java.util.concurrent.atomic.AtomicInteger
+    val sentinel = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(j.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull
+        if (g == "counted") ran.incrementAndGet()
+        if (g == "sentinel") sentinel.incrementAndGet()
+        ()
+      }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup("counted", "jobs under count")
+      val out = body
+      sc.setJobGroup("sentinel", "flush listener bus")
+      spark.range(1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime + 30L * 1000000000
+      while (sentinel.get() < 1 && System.nanoTime < deadline)
+        Thread.sleep(10)
+      // FIFO bus: every counted event arrived before the sentinel's
+      assert(sentinel.get() >= 1)
+      (out, ran.get())
+    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
   /** The per-depth sweep that `probeSweepHits` replaced, kept as its
     * reference: one probe, top-10, join and count chain per depth. */
   private def perDepthHits(e: DataFrame): Seq[(Int, Long)] = {
@@ -109,7 +156,8 @@ class AnnClusteredSpec extends SparkSpec {
   }
 
   test("clustered corpus: nprobe=1 routing is already exact") {
-    val hits = operators.Similarity.probeSweepHits(spark, blobs)
+    val hits = operators.Similarity.probeSweepHits(blobs,
+      operators.Ivf.fitModel(blobs))
     assert(hits.head == (1 -> 50L), s"nprobe=1 hits: ${hits.head}")
   }
 
@@ -119,46 +167,88 @@ class AnnClusteredSpec extends SparkSpec {
     assert(c(0).sameElements(c(1)) && c(2).sameElements(c(3)))
     for ((name, e) <- Seq("blobs" -> blobs, "isotropic" -> iso,
         "ties" -> ties)) {
-      val got = operators.Similarity.probeSweepHits(spark, e)
+      val got = operators.Similarity.probeSweepHits(e,
+        operators.Ivf.fitModel(e))
       val want = perDepthHits(e)
       assert(got == want, s"$name: one pass $got, per depth $want")
     }
   }
 
-  test("probe sweep stays one pass: at most 13 Spark jobs") {
-    // local[8] (SparkSpec): the per-depth sweep ran 38 jobs on the blob
-    // fixture, the one-pass sweep 13. Only jobs tagged with this
-    // test's job group count (AQE splits one action into several
-    // jobs, and other suites' jobs must not leak in).
-    blobs.count() // the fixture's own checkpoint job runs outside
-    val probe = new java.util.concurrent.atomic.AtomicInteger
-    val sentinel = new java.util.concurrent.atomic.AtomicInteger
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val g = Option(j.properties)
-          .map(_.getProperty("spark.jobGroup.id")).orNull
-        if (g == "sweep-probe") probe.incrementAndGet()
-        if (g == "sweep-sentinel") sentinel.incrementAndGet()
-        ()
-      }
+  test("probe sweep stays one pass: at most 6 Spark jobs") {
+    // local[8] (SparkSpec), blob fixture: the per-depth sweep ran 38
+    // jobs, the one-pass sweep with its own fit 13, the sweep under a
+    // given model 6 (the broadcast probe table and two top-10 collects)
+    val model = operators.Ivf.fitModel(blobs)
+    val (hits, jobs) = jobsOf(operators.Similarity.probeSweepHits(blobs, model))
+    assert(hits.map(_._1) == Seq(1, 2, 4, 8, 16))
+    assert(jobs <= 6, s"probeSweepHits ran $jobs jobs")
+  }
+
+  test("stored IVF model and PQ codebooks equal the in-process fits") {
+    import operators.{Ivf, Pq}
+    for ((name, fx) <- fixtures) {
+      val (d, e) = dataset(fx)
+      val stored = Ivf.model(spark, d)
+      val (assigned, cents) = Ivf.fit(e, Ivf.K, Ivf.Iters)
+      assert(bits(stored.centroids) == bits(cents), s"$name centroids")
+      def clusters(a: DataFrame) = a.select("vec_id", "cluster")
+        .orderBy("vec_id").collect().toSeq
+      assert(clusters(Ivf.assignOnce(e, stored.centroids)) ==
+        clusters(assigned), s"$name assignments")
+      assert(stored.tightnessMicro ==
+        operators.Similarity.corpusTightnessMicro(assigned, cents),
+        s"$name tightness")
+      assert(bits(Pq.codebooks(spark, d)) == bits(Pq.fitCodebooks(e)),
+        s"$name codebooks")
     }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      sc.setJobGroup("sweep-probe", "one probeSweepHits call")
-      val hits = operators.Similarity.probeSweepHits(spark, blobs)
-      sc.setJobGroup("sweep-sentinel", "flush listener bus")
-      spark.range(1).count()
-      sc.clearJobGroup()
-      val deadline = System.nanoTime + 30L * 1000000000
-      while (sentinel.get() < 1 && System.nanoTime < deadline)
-        Thread.sleep(10)
-      // FIFO bus: every probe-group event arrived before the sentinel's
-      assert(sentinel.get() >= 1)
-      assert(hits.map(_._1) == Seq(1, 2, 4, 8, 16))
-      assert(probe.get() <= 13, s"probeSweepHits ran ${probe.get()} jobs")
-    } finally { sc.clearJobGroup(); sc.removeSparkListener(l) }
+  }
+
+  test("resolving a built IVF model from disk runs no Spark job") {
+    for ((name, fx) <- fixtures) {
+      val (d, _) = dataset(fx)
+      val built = operators.Ivf.model(spark, d)
+      // the on-disk manifest, not the in-JVM memo, serves the model
+      graft.core.Artifacts.clearMemoForTests()
+      val (warm, jobs) = jobsOf(operators.Ivf.model(spark, d))
+      assert(jobs == 0, s"$name: warm resolve ran $jobs jobs")
+      assert(bits(warm.centroids) == bits(built.centroids) &&
+        warm.tightnessMicro == built.tightnessMicro, name)
+    }
+  }
+
+  test("rewriting the corpus file refits the IVF model") {
+    val fx = fixtures
+    for (((name, before), i) <- fx.zipWithIndex) {
+      val (d, _) = dataset(before)
+      val m0 = operators.Ivf.model(spark, d)
+      // the next fixture overwrites the file: new part files, new signature
+      fx((i + 1) % fx.size)._2.write.mode("overwrite")
+        .parquet(s"$d/embeddings.parquet")
+      val e1 = spark.read.parquet(s"$d/embeddings.parquet")
+      graft.core.Artifacts.drainBuildRecords()
+      val m1 = operators.Ivf.model(spark, d)
+      assert(graft.core.Artifacts.drainBuildRecords()
+        .exists(r => r.kind == "ivf_model" && r.dataset == d && r.built),
+        s"$name: no refit after the rewrite")
+      assert(bits(m1.centroids) == bits(operators.Ivf.fitModel(e1).centroids))
+      assert(bits(m1.centroids) != bits(m0.centroids), name)
+    }
+  }
+
+  test("v4, v15 and v24 agree under the stored and the in-process model") {
+    import operators.{Ivf, Pq, Similarity}
+    for ((name, fx) <- fixtures) {
+      val (d, e) = dataset(fx)
+      val (stored, local) = (Ivf.model(spark, d), Ivf.fitModel(e))
+      val (sBooks, lBooks) = (Pq.codebooks(spark, d), Pq.fitCodebooks(e))
+      def rows(df: DataFrame) = df.collect().toSeq
+      assert(Similarity.probeSweepHits(e, stored) ==
+        Similarity.probeSweepHits(e, local), s"$name v24")
+      assert(rows(Similarity.ivfTopK(e, stored)) ==
+        rows(Similarity.ivfTopK(e, local)), s"$name v4")
+      assert(rows(Similarity.ivfPqTopK(e, stored, sBooks, 10)) ==
+        rows(Similarity.ivfPqTopK(e, local, lBooks, 10)), s"$name v15")
+    }
   }
 
   test("clustered corpus: cascade saturates at 100 candidates") {

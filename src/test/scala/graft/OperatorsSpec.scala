@@ -380,7 +380,9 @@ class OperatorsSpec extends SparkSpec {
     val brute = operators.Similarity.queries("v2_ann_topk")(spark, sf)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivfpq = operators.Similarity.ivfPqTopK(e, 10)
+    val ivfpq = operators.Similarity.ivfPqTopK(e,
+      operators.Ivf.model(spark, sf), operators.Pq.codebooks(spark, sf),
+      10)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ivfpq.nonEmpty, "IVF-PQ returned nothing")
@@ -408,7 +410,7 @@ class OperatorsSpec extends SparkSpec {
     val brute = operators.Similarity.queries("v2_ann_topk")(spark, sf)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val ivf = operators.Similarity.ivfTopK(e)
+    val ivf = operators.Similarity.ivfTopK(e, operators.Ivf.model(spark, sf))
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ivf.nonEmpty)
@@ -548,7 +550,7 @@ class OperatorsSpec extends SparkSpec {
     val brute = operators.Similarity.queries("v2_ann_topk")(spark, sf)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val pq = operators.Pq.adcTopK(e, 10)
+    val pq = operators.Pq.adcTopK(e, operators.Pq.codebooks(spark, sf), 10)
       .select("query_id", "vec_id").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pq.nonEmpty)
